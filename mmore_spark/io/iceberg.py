@@ -82,9 +82,9 @@ def create_table_ddl(table: str, schema: T.StructType,
                      partition_by: list[str] | None = None,
                      catalog: str = DEFAULT_CATALOG) -> str:
     """``CREATE TABLE ... USING iceberg`` with hidden-partition transforms
-    (``bucket(32, doc_id)``, ``days(ts)``, or plain columns) — the triple/
-    entity table layout the parquet fallback mirrors with its explicit
-    ``bucket`` column."""
+    (``bucket(32, subj)``, ``days(ts)``, or plain columns).  Hidden
+    transforms partition the production triple/entity tables without a
+    data column; the parquet fallback writes them unpartitioned."""
     cols = ", ".join(f"{f.name} {_ddl_type(f.dataType)}" for f in schema.fields)
     ddl = f"CREATE TABLE IF NOT EXISTS {catalog}.{table} ({cols}) USING iceberg"
     if partition_by:

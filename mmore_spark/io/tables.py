@@ -1,19 +1,22 @@
-"""Table writer/reader with per-partition lineage + metrics (north_rule).
+"""Stage table writer and reader; lineage lives in the completion marker.
 
 Production format is Iceberg (partitioned triple/entity tables, snapshot-
 based incremental reads); this sandbox has no Iceberg runtime jar, so the
-writer transparently falls back to partitioned parquet with an atomic
-``_SUCCESS``-style completion marker.  The jar-free half of the Iceberg
-path — catalog session conf, CREATE TABLE DDL with hidden-partition
-transforms, MERGE INTO upsert generation, snapshot-range incremental
-reads — is real and unit-tested in ``io/iceberg.py``; with the runtime
-present those statements drive the production tables.  The interface is format-agnostic:
-every write lands
+writer transparently falls back to parquet with an atomic completion
+marker.  The jar-free half of the Iceberg path — catalog session conf,
+CREATE TABLE DDL with hidden-partition transforms, MERGE INTO upsert
+generation, snapshot-range incremental reads — is real and unit-tested in
+``io/iceberg.py``; with the runtime present those statements drive the
+production tables.  The interface is format-agnostic: every write is ONE
+Spark job (the data write) and lands
   * the data, partitioned by the declared columns,
-  * a ``_lineage`` side table: one row per output partition
-    (stage, partition_id, rows, wall_ms, status, finished_at)
-and resume = "skip stages whose completion marker + lineage rows exist"
-(plans/pipeline.py).  With Iceberg the same writes become
+  * ``_mmore_schema.json``, the frame's schema (an empty frame may write
+    no part file, and schema inference on it fails),
+  * the ``_MMORE_COMPLETE`` marker: stage, rows, bytes, wall_ms and one
+    record (file, rows, bytes) per committed part file.  Rows come from
+    the parquet footers, read on the driver, so counting adds no job.
+Resume = "skip stages whose marker exists and whose listed files are all
+intact" (plans/pipeline.py).  With Iceberg the same writes become
 ``writeTo(...).overwritePartitions()`` and lineage keys on snapshot ids.
 
 Reference analog: per-processor JSONL append + merged results
@@ -31,11 +34,35 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.localrel import local_df
+
 ICEBERG_AVAILABLE = False  # flipped when an Iceberg catalog is configured
 
 
 def _marker(path: str) -> str:
     return os.path.join(path, "_MMORE_COMPLETE")
+
+
+def read_marker(path: str) -> dict | None:
+    """The completion marker's contents, or None when there is none."""
+    try:
+        with open(_marker(path)) as f:
+            return json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
+
+
+def _intact(path: str) -> bool:
+    """A marker exists and every part file it lists is present at its
+    recorded size."""
+    meta = read_marker(path)
+    if meta is None or "files" not in meta:
+        return False
+    for rec in meta["files"]:
+        full = os.path.join(path, rec["file"])
+        if not os.path.isfile(full) or os.path.getsize(full) != rec["bytes"]:
+            return False
+    return True
 
 
 def _recover_upsert(path: str) -> None:
@@ -61,7 +88,7 @@ def _recover_upsert(path: str) -> None:
         return
     if not os.path.isdir(old):
         return
-    if os.path.isdir(tmp) and os.path.exists(_marker(tmp)):
+    if os.path.isdir(tmp) and _intact(tmp):
         os.rename(tmp, path)
         shutil.rmtree(old, ignore_errors=True)
     else:
@@ -75,54 +102,57 @@ def _recover_upsert(path: str) -> None:
 
 def is_complete(path: str) -> bool:
     _recover_upsert(path)
-    return os.path.exists(_marker(path))
+    return _intact(path)
 
 
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """Per-partition row counts computed distributed (no collect of data):
-    (partition_id, rows)."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("rows")
-    )
+def _part_files(path: str) -> list[dict]:
+    """(file relative to ``path``, rows, bytes) of every data file of the
+    table, rows from its parquet footer.  Names starting with ``_`` or
+    ``.`` are skipped, as Spark's reader skips them."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for n in sorted(names):
+            if n.startswith(("_", ".")):
+                continue
+            full = os.path.join(root, n)
+            out.append({"file": os.path.relpath(full, path),
+                        "rows": pq.read_metadata(full).num_rows,
+                        "bytes": os.path.getsize(full)})
+    return out
 
 
 def write_table(df: DataFrame, path: str, stage: str,
                 partition_by: list[str] | None = None,
                 mode: str = "overwrite") -> dict:
-    """Write a stage output + lineage; returns the lineage summary dict."""
+    """Write a stage output in one Spark job, then its schema and its
+    completion marker; returns the marker's contents."""
     t0 = time.time()
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    wall_ms = int((time.time() - t0) * 1000)
-
-    spark = df.sparkSession
     # Spark caches file listings per path; an overwrite of a previously-read
     # location must invalidate them or later scans hit deleted files.
-    spark.catalog.refreshByPath(path)
-    # Explicit schema: an empty result writes no part files, and schema
-    # inference on an empty directory fails.
-    written = spark.read.schema(df.schema).parquet(path)
+    df.sparkSession.catalog.refreshByPath(path)
     with open(os.path.join(path, "_mmore_schema.json"), "w") as f:
         f.write(df.schema.json())
-    metrics = partition_metrics(written).withColumns(
-        {
-            "stage": F.lit(stage),
-            "wall_ms": F.lit(wall_ms),
-            "status": F.lit("complete"),
-            "finished_at": F.current_timestamp(),
-        }
-    )
-    metrics.write.mode("overwrite").parquet(os.path.join(path, "_lineage"))
+    files = _part_files(path)
     summary = {
         "stage": stage,
-        "rows": written.count(),
-        "wall_ms": wall_ms,
+        "rows": sum(f["rows"] for f in files),
+        "bytes": sum(f["bytes"] for f in files),
         "path": path,
+        "files": files,
     }
-    with open(_marker(path), "w") as f:
+    summary["wall_ms"] = int((time.time() - t0) * 1000)
+    # rename into place: a crash never leaves a half-written marker
+    tmp = _marker(path) + ".tmp"
+    with open(tmp, "w") as f:
         json.dump(summary, f)
+    os.replace(tmp, _marker(path))
     return summary
 
 
@@ -139,7 +169,14 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "_lineage"))
+    """The marker's per-file records as a small frame:
+    (stage, file, rows, bytes)."""
+    meta = read_marker(path)
+    if meta is None:
+        raise FileNotFoundError(f"no completion marker under {path}")
+    return local_df(spark, [(meta["stage"], f["file"], f["rows"], f["bytes"])
+                            for f in meta["files"]],
+                    "stage string, file string, rows long, bytes long")
 
 
 def replace_table(spark: SparkSession, path: str, df: DataFrame,
@@ -150,8 +187,6 @@ def replace_table(spark: SparkSession, path: str, df: DataFrame,
     dir first, then swap directories.  Shares upsert_table's two-rename
     pattern and its crash recovery (``_recover_upsert`` heals the
     non-atomic window)."""
-    import shutil
-
     _recover_upsert(path)
     if not os.path.isdir(path) or not os.listdir(path):
         return write_table(df, path, stage=stage)

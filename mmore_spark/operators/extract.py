@@ -377,27 +377,21 @@ def extract_mentions_triples_chunked(documents: DataFrame,
     return mentions, triples
 
 
+def explode(combined: DataFrame, column: str) -> DataFrame:
+    """One row per element of the extraction output's ``entities``
+    (→ mentions) or ``triples`` array column, keyed by doc_id.  Narrow:
+    Catalyst pipelines it with whatever produced ``combined``."""
+    return combined.select("doc_id", F.inline(column))
+
+
 def extract_mentions_triples(df: DataFrame, text_col: str = "text",
                              extractor: Extractor | None = None
                              ) -> tuple[DataFrame, DataFrame]:
     """Full stage: returns (mentions_df, triples_df).
 
-    The combined frame is computed once; explode is a narrow op so Catalyst
-    pipelines it with the Arrow stage — reuse via cache is the caller's
-    call (plans/pipeline.py persists it between the two explodes).
+    Both explode the same lazy combined frame, so each action on either
+    re-runs the extraction; reuse via cache or a write is the caller's
+    call (plans/pipeline.py writes the combined frame once).
     """
     combined = extract_combined(df, text_col, extractor)
-    mentions = combined.select("doc_id", F.explode("entities").alias("e")).select(
-        "doc_id",
-        F.col("e.entity_name").alias("entity_name"),
-        F.col("e.entity_type").alias("entity_type"),
-        F.col("e.descriptions").alias("descriptions"),
-    )
-    triples = combined.select("doc_id", F.explode("triples").alias("t")).select(
-        "doc_id",
-        F.col("t.subj").alias("subj"),
-        F.col("t.obj").alias("obj"),
-        F.col("t.pred").alias("pred"),
-        F.col("t.weight").alias("weight"),
-    )
-    return mentions, triples
+    return explode(combined, "entities"), explode(combined, "triples")

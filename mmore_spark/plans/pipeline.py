@@ -8,15 +8,18 @@ Logical plan (BASELINE.json north_star):
       → canonicalize           (LSH blocking + connected components)
       → rewrite + salted merge (global triples / entities tables)
 
-``build_graph`` is the pure-DataFrame core (lazy, no I/O) — what a library
-user calls.  ``KGPipeline.run`` adds materialization: each stage writes a
-partitioned table with per-partition lineage + a completion marker, and a
-re-run SKIPS completed stages (exact resume after failure, north_rule).
+``graph`` defines the 8 stages once, each through a materialize hook.
+``build_graph`` passes the identity (lazy, no I/O) — what a library user
+calls.  ``KGPipeline.run`` passes ``_run_stage``: each stage writes a
+table in one Spark job with a completion marker carrying its per-file
+lineage, later stages read that table back, and a re-run SKIPS completed
+stages (exact resume after failure, north_rule).
 
-Partitioning at scale: documents/mentions/triples bucket naturally by
-doc_id (generation/extraction are narrow); the global tables are written
-partitioned by a hash bucket of the leading entity so downstream point
-lookups prune partitions.
+Layout: every stage table is written unpartitioned, one file per write
+task.  No reader prunes on a partition column, and a hash-bucket column
+would multiply the files by the bucket count.  Production partitioning
+belongs in the Iceberg DDL's hidden transforms (``bucket(32, subj)``,
+``io/iceberg.create_table_ddl``), which need no data column.
 """
 
 from __future__ import annotations
@@ -24,55 +27,63 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.spans import render_text
-from ..hashing import h60
 from ..io import tables
 from ..operators import agg, extract, linking
+
+
+def _lazy(stage: str, make_df, info: dict | None = None) -> DataFrame:
+    return make_df()
+
+
+def graph(documents: DataFrame, extractor=None,
+          materialize=_lazy) -> dict[str, DataFrame]:
+    """The job's 8 stages in order, stage name → frame.  ``materialize``
+    receives each stage's name, a thunk building its frame from the
+    frames ``materialize`` returned for earlier stages, and (for
+    ``canonical_map``) the dict linking fills with its metrics."""
+    extracted = materialize("extracted", lambda: extract.extract_combined(
+        documents.select("doc_id", render_text("spans").alias("text")), "text", extractor))
+    mentions = materialize("mentions", lambda: extract.explode(extracted, "entities"))
+    triples = materialize("triples", lambda: extract.explode(extracted, "triples"))
+    # CC observability flows into this stage's lineage: strategy chosen
+    # (driver vs twophase) and, on the twophase path, the round count
+    cc_metrics: dict = {}
+    canonical_map = materialize(
+        "canonical_map", lambda: linking.canonicalize(mentions, metrics=cc_metrics),
+        info=cc_metrics)
+    entities = materialize("entities", lambda: linking.entities_table(canonical_map))
+    canonical_triples = materialize(
+        "canonical_triples", lambda: linking.rewrite_triples(triples, canonical_map))
+    triples_global = materialize(
+        "triples_global", lambda: agg.merge_triples_global(canonical_triples))
+    entities_global = materialize(
+        "entities_global", lambda: agg.merge_entities_global(mentions))
+    return {
+        "extracted": extracted,
+        "mentions": mentions,
+        "triples": triples,
+        "canonical_map": canonical_map,
+        "entities": entities,
+        "canonical_triples": canonical_triples,
+        "triples_global": triples_global,
+        "entities_global": entities_global,
+    }
 
 
 def build_graph(documents: DataFrame, extractor=None
                 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """documents → (mentions, canonical_triples, entities, canonical_map).
 
-    Pure transformation — callers decide caching/writes.  The
-    extraction result is persisted by KGPipeline between the two explodes;
-    here we keep it lazy for composability.
+    Lazy and persists nothing: callers decide caching/writes.  Without a
+    cache the extraction runs once per action that needs it (linking's
+    name collect, then each consumer of the triples); ``KGPipeline``
+    writes the extraction output once instead and reads it back.
     """
-    rendered = documents.select("doc_id", render_text("spans").alias("text"))
-    # Persist the COMBINED extraction output (one row per doc) rather than
-    # the two exploded frames: persisting mentions and triples separately
-    # ran the Arrow extraction stage twice — once when the linking stage's
-    # first action materialized mentions, and again when the triple
-    # consumer materialized triples (r6, guide §2.4: the explodes are
-    # narrow and recompute cheaply from the cached combined frame).
-    # DISK_ONLY, not the default MEMORY_AND_DISK: building the on-heap
-    # columnar cache for 4M nested rows at local[8] blew the 8 GB heap
-    # (measured: persist()+count OOMed where persist(DISK_ONLY)+count ran
-    # in the same 167 s as the uncached pass — the blocks stream to local
-    # disk, re-reads ride the OS page cache at ~2 s, guide §5).
-    from pyspark import StorageLevel
-
-    combined = extract.extract_combined(rendered, "text", extractor) \
-        .persist(StorageLevel.DISK_ONLY)
-    mentions = combined.select("doc_id", F.explode("entities").alias("e")).select(
-        "doc_id",
-        F.col("e.entity_name").alias("entity_name"),
-        F.col("e.entity_type").alias("entity_type"),
-        F.col("e.descriptions").alias("descriptions"),
-    )
-    triples = combined.select("doc_id", F.explode("triples").alias("t")).select(
-        "doc_id",
-        F.col("t.subj").alias("subj"),
-        F.col("t.obj").alias("obj"),
-        F.col("t.pred").alias("pred"),
-        F.col("t.weight").alias("weight"),
-    )
-    canonical_map = linking.canonicalize(mentions).persist()
-    canonical_triples = linking.rewrite_triples(triples, canonical_map)
-    entities = linking.entities_table(canonical_map)
-    return mentions, canonical_triples, entities, canonical_map
+    g = graph(documents, extractor)
+    return g["mentions"], g["canonical_triples"], g["entities"], g["canonical_map"]
 
 
 @dataclass
@@ -85,104 +96,49 @@ class StageResult:
     info: dict = field(default_factory=dict)  # stage-specific metrics
 
 
+def _checkpoints(spark: SparkSession) -> dict:
+    """RDD id → RDD of every checkpoint the context holds in storage (a
+    local checkpoint is a persisted RDD; a cached frame is not checkpointed)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {k: rdds[k] for k in rdds if rdds[k].isCheckpointed()}
+
+
 @dataclass
 class KGPipeline:
     """Materializing, resumable pipeline over a warehouse directory."""
 
     spark: SparkSession
     warehouse: str
-    n_buckets: int = 32
     extractor: object = None
     results: list[StageResult] = field(default_factory=list)
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.warehouse, stage)
 
-    def _run_stage(self, stage: str, make_df, partition_by=None,
-                   info: dict | None = None) -> DataFrame:
+    def _run_stage(self, stage: str, make_df, info: dict | None = None) -> DataFrame:
         path = self._path(stage)
         if tables.is_complete(path):
-            import json
-
-            with open(os.path.join(path, "_MMORE_COMPLETE")) as f:
-                meta = json.load(f)
-            self.results.append(StageResult(stage, path, meta["rows"], 0, skipped=True))
-            return tables.read_table(self.spark, path)
-        df = make_df()
-        summary = tables.write_table(df, path, stage, partition_by)
-        self.results.append(StageResult(stage, path, summary["rows"],
-                                        summary["wall_ms"], info=info or {}))
+            rows = tables.read_marker(path)["rows"]
+            self.results.append(StageResult(stage, path, rows, 0, skipped=True))
+        else:
+            summary = tables.write_table(make_df(), path, stage)
+            self.results.append(StageResult(stage, path, summary["rows"],
+                                            summary["wall_ms"], info=info or {}))
         return tables.read_table(self.spark, path)
 
     def run(self, documents: DataFrame) -> dict[str, DataFrame]:
         """Execute all stages (skipping completed ones) and return the
-        materialized tables."""
-        spark = self.spark
-
-        extracted = self._run_stage(
-            "extracted",
-            lambda: extract.extract_combined(
-                documents.select("doc_id", render_text("spans").alias("text")),
-                "text",
-                self.extractor,
-            ).withColumn("bucket", F.pmod(h60(F.col("doc_id")), F.lit(self.n_buckets))),
-            partition_by=["bucket"],
-        )
-
-        mentions = self._run_stage(
-            "mentions",
-            lambda: extracted.select("doc_id", F.explode("entities").alias("e")).select(
-                "doc_id",
-                F.col("e.entity_name").alias("entity_name"),
-                F.col("e.entity_type").alias("entity_type"),
-                F.col("e.descriptions").alias("descriptions"),
-            ),
-        )
-        triples = self._run_stage(
-            "triples",
-            lambda: extracted.select("doc_id", F.explode("triples").alias("t")).select(
-                "doc_id",
-                F.col("t.subj").alias("subj"),
-                F.col("t.obj").alias("obj"),
-                F.col("t.pred").alias("pred"),
-                F.col("t.weight").alias("weight"),
-            ),
-        )
-        # CC observability flows into this stage's lineage: strategy chosen
-        # (driver vs twophase) and, on the twophase path, the round count
-        cc_metrics: dict = {}
-        canonical_map = self._run_stage(
-            "canonical_map",
-            lambda: linking.canonicalize(mentions, metrics=cc_metrics),
-            info=cc_metrics,
-        )
-        entities = self._run_stage(
-            "entities", lambda: linking.entities_table(canonical_map)
-        )
-        canonical_triples = self._run_stage(
-            "canonical_triples",
-            lambda: linking.rewrite_triples(triples, canonical_map).withColumn(
-                "bucket", F.pmod(h60(F.col("subj")), F.lit(self.n_buckets))
-            ),
-            partition_by=["bucket"],
-        )
-        triples_global = self._run_stage(
-            "triples_global",
-            lambda: agg.merge_triples_global(canonical_triples.drop("bucket")),
-        )
-        entities_global = self._run_stage(
-            "entities_global", lambda: agg.merge_entities_global(mentions)
-        )
-        return {
-            "extracted": extracted,
-            "mentions": mentions,
-            "triples": triples,
-            "canonical_map": canonical_map,
-            "entities": entities,
-            "canonical_triples": canonical_triples,
-            "triples_global": triples_global,
-            "entities_global": entities_global,
-        }
+        materialized tables.  Every stage reads its inputs back from the
+        written tables, so the local checkpoints linking leaves on its
+        distributed path are released when the run ends: no cached frame
+        outlives it."""
+        before = _checkpoints(self.spark)
+        try:
+            return graph(documents, self.extractor, self._run_stage)
+        finally:
+            for rid, rdd in _checkpoints(self.spark).items():
+                if rid not in before:
+                    rdd.unpersist(False)
 
     def lineage(self) -> list[StageResult]:
         return list(self.results)

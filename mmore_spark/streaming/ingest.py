@@ -374,15 +374,7 @@ def stream_extract_triples(spark: SparkSession, staging_dir: str,
         # (VERDICT r02 #2 — the batch was extracted twice per drain).
         batch_df = batch_df.dropDuplicates(["doc_id"]).persist()
         try:
-            triples = batch_df.select(
-                "doc_id", F.explode("triples").alias("t")
-            ).select(
-                "doc_id",
-                F.col("t.subj").alias("subj"),
-                F.col("t.obj").alias("obj"),
-                F.col("t.pred").alias("pred"),
-                F.col("t.weight").alias("weight"),
-            )
+            triples = extract.explode(batch_df, "triples")
             counters["rows_in"] += triples.count()
             spark_b = batch_df.sparkSession
             # buckets this batch's ids hash into: at most SEEN_BUCKETS

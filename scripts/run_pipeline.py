@@ -3,8 +3,8 @@ scripts/run_pipeline.py --input <documents table> --warehouse <dir>
 
 Runs the full resumable KG pipeline (render → extract → link →
 canonicalize → materialize) on a (doc_id, spans) table.  Re-running with
-the same warehouse resumes from the last completed stage (per-partition
-lineage + completion markers, mmore_spark.plans.pipeline).
+the same warehouse resumes from the last completed stage (completion
+markers carrying per-file lineage, mmore_spark.plans.pipeline).
 
 On a real cluster, omit --master and let spark-submit's cluster manager
 drive; all engine tuning lives in mmore_spark.session.
@@ -22,7 +22,6 @@ def main() -> None:
     ap.add_argument("--warehouse", required=True, help="output warehouse directory")
     ap.add_argument("--generate", type=int, default=0,
                     help="instead of --input, generate N synthetic docs (seed 42)")
-    ap.add_argument("--buckets", type=int, default=32)
     args = ap.parse_args()
     if not args.input and not args.generate:
         ap.error("one of --input or --generate is required")
@@ -38,7 +37,7 @@ def main() -> None:
     else:
         docs = spark.read.parquet(args.input)
 
-    pipe = KGPipeline(spark, args.warehouse, n_buckets=args.buckets)
+    pipe = KGPipeline(spark, args.warehouse)
     out = pipe.run(docs)
     summary = {
         "stages": [

@@ -35,8 +35,15 @@ def _canonical_pr(spark, docs, triples_rows):
     return oracle.precision_recall(pred, golden)
 
 
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_build_graph_pr_gate(spark, small_docs, small_docs_df):
+    small_docs_df.count()  # the fixture's own cache is not the graph's
+    before = _persistent_rdds(spark)
     _, canonical_triples, entities, cmap = build_graph(small_docs_df)
+    assert _persistent_rdds(spark) == before  # lazy: persists nothing
     rows = [r.asDict() for r in canonical_triples.collect()]
     p, r = _canonical_pr(spark, small_docs, rows)
     assert p >= 0.95 and r >= 0.95, (p, r)
@@ -55,12 +62,16 @@ def test_pipeline_materializes_and_resumes(spark, small_docs_df, tmp_path):
     first = {r.name: r.rows for r in pipe.lineage()}
     assert not any(r.skipped for r in pipe.lineage())
 
-    # lineage side-table exists with per-partition rows
+    # every stage's marker lists its part files, and their footer rows
+    # sum to the rows an independent scan of the table counts
     from mmore_spark.io import tables
 
-    lin = tables.read_lineage(spark, os.path.join(wh, "extracted"))
-    assert lin.filter(F.col("status") == "complete").count() > 0
-    assert lin.agg(F.sum("rows")).first()[0] == first["extracted"]
+    for r in pipe.lineage():
+        assert tables.is_complete(r.path), r.name
+        lin = tables.read_lineage(spark, r.path)
+        assert lin.count() > 0, r.name
+        assert lin.agg(F.sum("rows")).first()[0] == r.rows \
+            == tables.read_table(spark, r.path).count(), r.name
 
     # simulate failure after 'triples': delete later stage outputs
     import shutil
@@ -79,6 +90,54 @@ def test_pipeline_materializes_and_resumes(spark, small_docs_df, tmp_path):
     assert second == first
     b = sorted(map(tuple, out2["triples_global"].select("subj", "obj", "weight").collect()))
     assert a == b
+
+
+def test_missing_part_file_reruns_its_stage(spark, small_docs_df, tmp_path):
+    """A stage whose marker lists a part file that is gone is incomplete:
+    resume re-runs it, with the same rows, and trusts the intact ones."""
+    from mmore_spark.io import tables
+
+    wh = str(tmp_path / "wh")
+    pipe = KGPipeline(spark, wh)
+    pipe.run(small_docs_df)
+    first = {r.name: r.rows for r in pipe.lineage()}
+    triples = os.path.join(wh, "triples")
+    os.remove(os.path.join(triples, tables.read_marker(triples)["files"][0]["file"]))
+
+    pipe2 = KGPipeline(spark, wh)
+    pipe2.run(small_docs_df)
+    skipped = {r.name: r.skipped for r in pipe2.lineage()}
+    assert not skipped["triples"]
+    assert skipped["extracted"] and skipped["mentions"] and skipped["triples_global"]
+    assert {r.name: r.rows for r in pipe2.lineage()} == first
+    assert tables.read_table(spark, triples).count() == first["triples"]
+
+
+def test_run_leaves_no_persisted_frames(spark, small_docs, tmp_path, monkeypatch):
+    """Linking's distributed path checkpoints its name counts and candidate
+    pairs; the run releases them, so the context holds as many persistent
+    RDDs after ``run`` as before."""
+    import functools
+
+    from mmore_spark.corpus.generator import generate_documents
+    from mmore_spark.operators import linking
+
+    monkeypatch.setattr(linking, "canonicalize",
+                        functools.partial(linking.canonicalize, driver_max_names=0))
+    pair_calls = []
+    pairs = linking.candidate_pairs
+    monkeypatch.setattr(linking, "candidate_pairs",
+                        lambda *a, **kw: pair_calls.append(1) or pairs(*a, **kw))
+    docs = generate_documents(spark, 120, seed=42, partitions=4)
+    before = _persistent_rdds(spark)
+    pipe = KGPipeline(spark, str(tmp_path / "wh"))
+    out = pipe.run(docs)
+    assert pair_calls  # linking took its distributed path
+    assert _persistent_rdds(spark) == before
+    # the returned tables read the written files, not the released checkpoints
+    rows = [r.asDict() for r in out["canonical_triples"].collect()]
+    p, r = _canonical_pr(spark, small_docs, rows)
+    assert p >= 0.95 and r >= 0.95, (p, r)
 
 
 def test_pipeline_deterministic_across_parallelism(spark, small_docs_df):
