@@ -79,9 +79,13 @@ def test_stateful_sessionization_across_drains(spark, tmp_path):
 
 
 def test_stream_single_extraction_eval_per_batch(spark, tmp_path, monkeypatch):
-    """The sink takes several actions (counts + two writes); the persisted
-    batch must make the extraction stage evaluate ONCE per micro-batch
-    (VERDICT r02: the old sink replayed extraction per action)."""
+    """The sink takes two actions (the output and seen appends); the
+    persisted batch must make the extraction stage evaluate ONCE per
+    micro-batch (VERDICT r02: the old sink replayed extraction per
+    action), also once a seen set exists: a cached frame that reads it
+    would be invalidated by the output append and re-extracted."""
+    from pyspark.sql import functions as F
+
     import mmore_spark.streaming.ingest as ingest
 
     acc = spark.sparkContext.accumulator(0)
@@ -100,11 +104,52 @@ def test_stream_single_extraction_eval_per_batch(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ingest.extract, "extract_combined", counted)
     staging = str(tmp_path / "staging3")
     os.makedirs(staging)
+    out, ckpt = str(tmp_path / "out3"), str(tmp_path / "ckpt3")
     generate_documents(spark, 40, seed=11).write.mode("append").parquet(staging)
-    stream_extract_triples(spark, staging, str(tmp_path / "out3"),
-                           str(tmp_path / "ckpt3"))
+    stream_extract_triples(spark, staging, out, ckpt)
     # one extraction pass: exactly one post-extraction row per staged doc
     assert acc.value == 40
+
+    # again against a non-empty seen set, whose files sit under the output
+    # the sink appends to: 20 new docs plus 10 re-staged ones
+    docs = generate_documents(spark, 60, seed=11)
+    docs.filter((F.col("doc_id") >= "doc-00000040")
+                | (F.col("doc_id") < "doc-00000010")) \
+        .write.mode("append").parquet(staging)
+    c = stream_extract_triples(spark, staging, out, ckpt)
+    assert c["rows_in"] > c["rows_written"] > 0
+    assert acc.value == 40 + 30
+
+
+# Spark jobs of one steady-state drain (one batch, a non-empty seen set, no
+# compaction): the output append and the seen append with their seen-set
+# broadcasts, plus the in-batch dedup shuffle that runs extraction.
+# Measured 6 on local[4] and local[8]; one more action, or a scan added to
+# either append, fails the budget.
+STEADY_DRAIN_JOBS = 6
+
+
+def test_stream_drain_reports_jobs_within_budget(spark, tmp_path):
+    """A drain reports the Spark jobs its sink ran (job group per batch);
+    a steady-state drain against a non-empty seen set stays within
+    STEADY_DRAIN_JOBS, so a refactor that re-adds a count, a collect or an
+    inference read fails here."""
+    from pyspark.sql import functions as F
+
+    staging = str(tmp_path / "staging9")
+    out, ckpt = str(tmp_path / "out9"), str(tmp_path / "ckpt9")
+    os.makedirs(staging)
+    generate_documents(spark, 40, seed=13).write.mode("append").parquet(staging)
+    c1 = stream_extract_triples(spark, staging, out, ckpt)
+    assert c1["batches"] == 1 and 0 < c1["jobs"] <= STEADY_DRAIN_JOBS
+    generate_documents(spark, 60, seed=13) \
+        .filter((F.col("doc_id") >= "doc-00000040")
+                | (F.col("doc_id") < "doc-00000010")) \
+        .coalesce(1).write.mode("append").parquet(staging)
+    c2 = stream_extract_triples(spark, staging, out, ckpt)
+    assert c2["batches"] == 1 and c2["rows_in"] > c2["rows_written"] > 0
+    assert c2["seen_bytes_read"] > 0
+    assert 0 < c2["jobs"] <= STEADY_DRAIN_JOBS, c2
 
 
 def test_stream_replay_after_partial_commit_is_exactly_once(spark, tmp_path,
@@ -137,10 +182,16 @@ def test_stream_replay_after_partial_commit_is_exactly_once(spark, tmp_path,
     crashed_rows = spark.read.parquet(out).count()
     assert crashed_rows > 0  # the triples append DID land before the crash
 
+    def parts():
+        return {f for f in os.listdir(out) if f.endswith(".parquet")}
+
+    crashed_parts = parts()
+
     # restart without the fault: the same batch replays from the checkpoint
     monkeypatch.setattr(ingest, "_append_seen", real_append)
     c = stream_extract_triples(spark, staging, out, ckpt)
     assert c["batches"] >= 1 and c["rows_written"] == 0  # fallback filtered all
+    assert parts() == crashed_parts  # the 0-row append left no empty file
     spark.catalog.refreshByPath(out)
     final = spark.read.parquet(out)
     assert final.count() == crashed_rows  # no duplicates
@@ -193,6 +244,8 @@ def test_stream_checkpoint_reset_does_not_drop_new_data(spark, tmp_path):
 def test_stream_seen_ids_file_count_bounded(spark, tmp_path):
     """_seen_ids must not grow one file per drain forever: after many
     drains the compactor folds it back under the threshold (VERDICT r02)."""
+    import pyarrow.parquet as pq
+
     from mmore_spark.streaming.ingest import SEEN_COMPACT_MAX_FILES
 
     staging = str(tmp_path / "staging5")
@@ -206,105 +259,66 @@ def test_stream_seen_ids_file_count_bounded(spark, tmp_path):
             "append").parquet(staging)
         stream_extract_triples(spark, staging, out, ckpt)
     seen_dir = os.path.join(out, "_seen_ids")
-    recent = os.path.join(seen_dir, "recent")
-    files = [f for f in os.listdir(recent) if f.endswith(".parquet")] \
-        if os.path.isdir(recent) else []
+    files = [os.path.join(seen_dir, f) for f in os.listdir(seen_dir)
+             if f.endswith(".parquet")]
     assert len(files) <= SEEN_COMPACT_MAX_FILES + 1
-    # compacted ids moved into the bucket-partitioned history tier
-    hist = os.path.join(seen_dir, "history")
-    assert any(n.startswith("bucket=") for n in os.listdir(hist))
+    # compacted ids moved into one fold file holding many drains' ids
+    assert max(pq.read_metadata(f).num_rows for f in files) > 3
     # compaction lost nothing: every doc_id still deduped on re-stage
     generate_documents(spark, total, seed=9).coalesce(1).write.mode(
         "append").parquet(staging)
     c = stream_extract_triples(spark, staging, out, ckpt)
     assert c["rows_written"] == 0
-    # the drain's anti-join read is pruned: it must not touch every
-    # history bucket unless the batch's ids hash into all of them
-    assert c["seen_bytes_read"] <= c["seen_bytes_total"]
+    # the drain's one batch read the whole seen set
+    assert c["seen_bytes_read"] == c["seen_bytes_total"] > 0
 
 
 def test_seen_compaction_is_size_tiered(spark, tmp_path):
-    """VERDICT r03 #7 + r04 #4: level-1 compaction folds the recent tier
-    into the bucket-partitioned history; level-2 folds small files WITHIN
-    a bucket but never rewrites SEALED files (≥ tier_bytes) — so
-    per-compaction I/O is bounded by the small tiers, not history size.
-    The sealed file's name/size/mtime survive every round, and no id is
-    ever lost."""
-    from pyspark.sql import functions as F
+    """VERDICT r03 #7: compaction folds the small seen files once there are
+    more than max_files of them, but never rewrites SEALED files
+    (≥ tier_bytes) — so per-compaction I/O is bounded by the small files,
+    not history size.  The sealed file's name/size/mtime survive every
+    round, and no id is ever lost."""
+    import uuid
 
-    from mmore_spark.hashing import h60
-    from mmore_spark.streaming.ingest import (
-        SEEN_BUCKETS, _compact_seen, _read_seen)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mmore_spark.streaming.ingest import _compact_seen, _read_seen
 
     seen = str(tmp_path / "out8" / "_seen_ids")
-    recent = os.path.join(seen, "recent")
+    os.makedirs(seen)
 
-    def append(ids):
-        (spark.createDataFrame([(i,) for i in ids], "doc_id string")
-         .withColumn("bucket", F.pmod(h60(F.col("doc_id")),
-                                      F.lit(SEEN_BUCKETS)).cast("int"))
-         .coalesce(1).write.mode("append").parquet(recent))
+    def append(ids):  # one doc_id-only file, as the sink appends
+        pq.write_table(pa.table({"doc_id": pa.array(ids, pa.string())}),
+                       os.path.join(seen, f"part-{uuid.uuid4()}.parquet"))
 
-    # seed history with one big SEALED file in a known bucket
+    def files():
+        return {f: (os.path.getsize(os.path.join(seen, f)),
+                    os.path.getmtime(os.path.join(seen, f)))
+                for f in os.listdir(seen) if f.endswith(".parquet")}
+
+    # seed the set with one big SEALED file
     old_ids = [f"old-{i:06d}" for i in range(20000)]
-    df = spark.createDataFrame([(i,) for i in old_ids], "doc_id string") \
-        .withColumn("bucket", F.pmod(h60(F.col("doc_id")),
-                                     F.lit(SEEN_BUCKETS)).cast("int"))
-    some_bucket = df.select("bucket").first()["bucket"]
-    bdir = os.path.join(seen, "history", f"bucket={some_bucket}")
-    os.makedirs(bdir)
-    in_bucket = df.filter(F.col("bucket") == some_bucket).select("doc_id")
-    in_bucket.coalesce(1).write.mode("append").parquet(bdir)
-    for f in os.listdir(bdir):  # Spark wrote _SUCCESS etc. alongside
-        if not f.endswith(".parquet"):
-            os.remove(os.path.join(bdir, f))
-    sealed_before = {
-        f: (os.path.getsize(os.path.join(bdir, f)),
-            os.path.getmtime(os.path.join(bdir, f)))
-        for f in os.listdir(bdir) if f.endswith(".parquet")}
+    append(old_ids)
+    sealed_before = files()
     assert len(sealed_before) == 1
     tier_bytes = min(sz for sz, _m in sealed_before.values())  # seals it
 
-    expect = {r["doc_id"] for r in in_bucket.collect()}
+    expect = set(old_ids)
     for rnd in range(3):
         new = [f"r{rnd}-{j}" for j in range(18)]
         for nid in new:
-            append([nid])  # one tiny file per drain, like _append_seen
+            append([nid])  # one tiny file per drain, like the sink
         expect.update(new)
         _compact_seen(spark, seen, max_files=16, tier_bytes=tier_bytes)
-        rfiles = [f for f in os.listdir(recent) if f.endswith(".parquet")] \
-            if os.path.isdir(recent) else []
-        assert len(rfiles) <= 16, rfiles
-        for f, (sz, mt) in sealed_before.items():
-            assert os.path.getsize(os.path.join(bdir, f)) == sz
-            assert os.path.getmtime(os.path.join(bdir, f)) == mt
-        spark.catalog.refreshByPath(seen)
+        now = files()
+        # the 18 new files (plus the previous fold) folded into one
+        assert len(now) == 2, now
+        for f, stat in sealed_before.items():
+            assert now[f] == stat
         got = {r["doc_id"] for r in _read_seen(spark, seen).collect()}
         assert got == expect
-
-
-def test_recover_seen_rolls_forward_to_completed_compaction(spark, tmp_path):
-    """Crash between _compact_seen's two renames: the finished compacted
-    snapshot (with Spark's _SUCCESS) must be rolled forward, not thrown
-    away; without any recovery the dedup anti-join would pass everything."""
-    from mmore_spark.streaming.ingest import _recover_seen
-
-    seen = str(tmp_path / "out7" / "_seen_ids")
-    ids = spark.createDataFrame([("d1",), ("d2",), ("d1",)], ["doc_id"])
-    ids.write.parquet(seen)
-    # simulate: compaction wrote tmp (complete), renamed seen away, crashed
-    spark.read.parquet(seen).distinct().coalesce(1).write.parquet(
-        seen + ".__compact_tmp")
-    import shutil
-
-    shutil.move(seen, seen + ".__compact_old")
-    assert not os.path.isdir(seen)
-    _recover_seen(seen)
-    assert os.path.isdir(seen)
-    assert not os.path.isdir(seen + ".__compact_tmp")
-    assert not os.path.isdir(seen + ".__compact_old")
-    spark.catalog.refreshByPath(seen)
-    assert spark.read.parquet(seen).distinct().count() == 2  # rolled forward
 
 
 def test_stream_dedup_within_batch(spark, tmp_path):
@@ -322,69 +336,6 @@ def test_stream_dedup_within_batch(spark, tmp_path):
     final = spark.read.parquet(out)
     assert c["rows_written"] == final.count()
     assert final.select("doc_id", "subj", "obj").distinct().count() == final.count()
-
-
-def test_seen_history_anti_join_is_bucket_pruned(spark, tmp_path):
-    """VERDICT r04 #4: with a bucketed history 100x the per-drain batch,
-    the anti-join's read must be sub-linear in history size — only the
-    buckets the batch's ids hash into are read."""
-    from pyspark.sql import functions as F
-
-    from mmore_spark.hashing import h60
-    from mmore_spark.streaming.ingest import (
-        SEEN_BUCKETS, _read_seen, _seen_bucket, _seen_read_bytes)
-
-    seen = str(tmp_path / "outp" / "_seen_ids")
-    hist_ids = spark.createDataFrame(
-        [(f"h{i:05d}",) for i in range(20000)], "doc_id string")
-    (hist_ids.withColumn("bucket", _seen_bucket(SEEN_BUCKETS))
-     .repartition("bucket").write.partitionBy("bucket")
-     .parquet(os.path.join(seen, "history")))
-
-    batch = spark.createDataFrame([("h00001",), ("new-1",)], "doc_id string")
-    bvals = [r["b"] for r in
-             batch.select(_seen_bucket(SEEN_BUCKETS).alias("b"))
-             .distinct().collect()]
-    assert len(bvals) <= 2
-
-    rd, tot = _seen_read_bytes(seen, buckets=bvals)
-    # 2 of 64 buckets: the pruned read is a small fraction of history
-    assert rd < tot * (len(bvals) + 1) / SEEN_BUCKETS * 2
-    assert rd < tot / 4
-
-    pruned = _read_seen(spark, seen, buckets=bvals)
-    got = {r["doc_id"] for r in pruned.collect()}
-    # the pruned set covers exactly the ids in the touched buckets —
-    # in particular everything the anti-join needs for this batch
-    want = {r["doc_id"] for r in
-            hist_ids.withColumn("b", _seen_bucket(SEEN_BUCKETS))
-            .filter(F.col("b").isin(bvals)).collect()}
-    assert got == want and "h00001" in got
-    # and the Spark plan prunes at the partition level, not post-scan
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-
-def test_seen_bucket_count_pinned_in_layout_marker(spark, tmp_path):
-    """The bucket count is baked into history directory names, so an
-    existing layout must keep ITS count even if the configured default
-    changes — otherwise the anti-join would compute bucket values against
-    the wrong partitioning and silently stop deduplicating."""
-    import json as _json
-
-    import mmore_spark.streaming.ingest as ingest
-
-    seen = str(tmp_path / "o" / "_seen_ids")
-    n1 = ingest._seen_nbuckets(seen)
-    assert n1 == ingest.SEEN_BUCKETS
-    with open(os.path.join(seen, "_buckets.json")) as f:
-        assert _json.load(f)["n"] == n1
-    orig = ingest.SEEN_BUCKETS
-    try:
-        ingest.SEEN_BUCKETS = orig * 2  # operator changes the env default
-        assert ingest._seen_nbuckets(seen) == n1  # layout keeps its count
-    finally:
-        ingest.SEEN_BUCKETS = orig
 
 
 def test_cli_ingest_verb(spark, tmp_path, capsys):
@@ -408,84 +359,25 @@ def test_cli_ingest_verb(spark, tmp_path, capsys):
 
 
 def test_crashed_fold_remnant_does_not_poison_history_reads(spark, tmp_path):
-    """A fold that crashed after writing its tmp must not break later
-    partition-discovery reads: the tmp is an underscore-prefixed sibling
-    (invisible to Spark's file index), never a bucket=*-shaped dir
-    inside history/."""
+    """A fold that crashed after writing its tmp must not change what the
+    seen set reads: the tmp is an underscore-prefixed entry inside the
+    flat set (invisible to Spark's file index), and the next fold
+    replaces it without losing an id."""
     from mmore_spark.streaming.ingest import (
-        SEEN_COMPACT_MAX_FILES, _read_seen, _seen_bucket)
-    from pyspark.sql import functions as F
+        _append_seen, _compact_seen, _read_seen)
 
     seen = str(tmp_path / "o" / "_seen_ids")
-    hist = os.path.join(seen, "history")
-    ids = spark.createDataFrame([(f"d{i}",) for i in range(50)],
-                                "doc_id string")
-    (ids.withColumn("bucket", _seen_bucket(64))
-     .repartition("bucket").write.partitionBy("bucket").parquet(hist))
-    # simulate a crashed bucket-level fold: tmp written, sources not yet
-    # retired, process died
-    some_bucket = next(n for n in os.listdir(hist) if n.startswith("bucket="))
-    # the "=" must be sanitized out of the remnant name — Spark parses
-    # ANY "x=y" directory as a partition column, underscore or not
-    remnant = os.path.join(hist, "_fold_tmp_" + some_bucket.replace("=", "-"))
-    os.makedirs(remnant)
+    want = {f"d{i}" for i in range(50)}
+    _append_seen(spark.createDataFrame([(d,) for d in sorted(want)],
+                                       "doc_id string"), seen)
+    # simulate a crashed fold: tmp written, sources not yet retired,
+    # process died
+    remnant = os.path.join(seen, "_fold_tmp")
     spark.createDataFrame([("dX",)], "doc_id string").coalesce(1) \
-        .write.parquet(os.path.join(remnant, "inner"))
-    got = _read_seen(spark, seen, buckets=list(range(64)))
-    vals = {r["doc_id"] for r in got.collect()}
-    assert vals == {f"d{i}" for i in range(50)}  # remnant invisible
-
-
-def test_mixed_legacy_and_recent_fold_keeps_every_id(spark, tmp_path):
-    """ADVICE r05 high: folding legacy FLAT seen files (doc_id only) mixed
-    with recent (doc_id, bucket) files must not send legacy rows to a null
-    bucket (__HIVE_DEFAULT_PARTITION__), where the pruned anti-join would
-    never see them — the old-checkpoint upgrade path must stay
-    exactly-once.  The fold now recomputes bucket from doc_id
-    unconditionally."""
-    from mmore_spark.streaming.ingest import (
-        SEEN_BUCKETS, _fold_files, _read_seen, _seen_bucket)
-    from pyspark.sql import functions as F
-
-    seen = str(tmp_path / "o" / "_seen_ids")
-    os.makedirs(seen)
-    # legacy layout: flat doc_id-only parquet files directly under seen/
-    legacy_ids = [f"legacy-{i}" for i in range(30)]
-    spark.createDataFrame([(d,) for d in legacy_ids], "doc_id string") \
-        .coalesce(1).write.parquet(os.path.join(seen, "_legacy_tmp"))
-    import shutil
-    n = 0
-    for f in os.listdir(os.path.join(seen, "_legacy_tmp")):
-        if f.endswith(".parquet"):
-            shutil.move(os.path.join(seen, "_legacy_tmp", f),
-                        os.path.join(seen, f"legacy-{n}.parquet"))
-            n += 1
-    shutil.rmtree(os.path.join(seen, "_legacy_tmp"))
-    # recent layout: (doc_id, bucket) files under seen/recent/
-    recent_ids = [f"recent-{i}" for i in range(30)]
-    (spark.createDataFrame([(d,) for d in recent_ids], "doc_id string")
-     .withColumn("bucket", _seen_bucket(SEEN_BUCKETS))
-     .coalesce(1).write.mode("append")
-     .parquet(os.path.join(seen, "recent")))
-    recent_files = [os.path.join(seen, "recent", f)
-                    for f in os.listdir(os.path.join(seen, "recent"))
-                    if f.endswith(".parquet")]
-    legacy_files = [os.path.join(seen, f) for f in os.listdir(seen)
-                    if f.endswith(".parquet")]
-    hist = os.path.join(seen, "history")
-    assert _fold_files(spark, recent_files + legacy_files, hist,
-                       partitioned=True, nbuckets=SEEN_BUCKETS)
-    # no null-bucket partition may exist
-    assert not any("HIVE_DEFAULT_PARTITION" in d for d in os.listdir(hist))
-    # a fully-pruned read over all real buckets still sees every id
-    got = _read_seen(spark, seen, buckets=list(range(SEEN_BUCKETS)))
-    vals = {r["doc_id"] for r in got.collect()}
-    assert vals == set(legacy_ids) | set(recent_ids)
-    # and the pruned read restricted to the buckets the ids hash into
-    # (the production anti-join shape) also sees them all
-    all_ids = spark.createDataFrame(
-        [(d,) for d in legacy_ids + recent_ids], "doc_id string")
-    touched = [r["b"] for r in all_ids.select(
-        _seen_bucket(SEEN_BUCKETS).alias("b")).distinct().collect()]
-    got2 = _read_seen(spark, seen, buckets=touched)
-    assert {r["doc_id"] for r in got2.collect()} >= set(legacy_ids)
+        .write.parquet(remnant)
+    vals = {r["doc_id"] for r in _read_seen(spark, seen).collect()}
+    assert vals == want  # remnant invisible
+    _compact_seen(spark, seen, max_files=0)
+    assert not os.path.exists(remnant)
+    vals = {r["doc_id"] for r in _read_seen(spark, seen).collect()}
+    assert vals == want
