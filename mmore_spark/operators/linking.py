@@ -6,71 +6,63 @@ exact-match linking.  This module adds the real thing, designed for
 10^12-doc scale:
 
   1. **Blocking** — MinHash-LSH over the name's token set: P independent
-     min-hashes per name (md5-family, hashing.py), one blocking key per
-     (perm, min-hash) pair, candidate pairs = names sharing any key.
-     Pure DataFrame ops: explode → self-join → distinct.  Names sharing a
-     token collide with probability 1-(1-J)^P; P=12 gives >99% recall at
-     token-Jaccard ≥ 1/3 (covers abbreviation/suffix alias families).
-  2. **Verification** — a native-expression entity-resolution predicate:
-     digit tokens must match exactly as multisets (rejects "March 4, 2024"
-     vs "March 4, 2022"), and every word token of the shorter name must
-     prefix-match a token of the longer ("A. KELLER" ≲ "ALICE KELLER",
-     "ACME CORP" ≲ "ACME CORPORATION", "ZUG" ≲ "ZUG CITY").
-     No Python — array higher-order functions only.
-  3. **Connected components** — iterative min-label propagation over the
-     verified match edges (GraphFrames-style), driver-side loop with
-     ``localCheckpoint`` per iteration to cut lineage; alias clusters are
-     shallow so convergence is fast, and the loop is bounded.
+     min-hashes per name (``_signature``, md5-family h60), one blocking
+     key per (perm, min-hash) pair, candidate pairs = names sharing any
+     key.  Names sharing a token collide with probability 1-(1-J)^P;
+     P=12 gives >99% recall at token-Jaccard ≥ 1/3 (covers
+     abbreviation/suffix alias families).
+  2. **Verification** — ``names_match_py``, a pure-Python entity-resolution
+     predicate run on candidate pairs only (a pandas UDF on the Spark
+     path): digit tokens must match exactly as multisets (rejects
+     "March 4, 2024" vs "March 4, 2022"), and every word token of the
+     shorter name must prefix-match a token of the longer ("A. KELLER" ≲
+     "ALICE KELLER", "ACME CORP" ≲ "ACME CORPORATION", "ZUG" ≲ "ZUG CITY").
+  3. **Connected components** — over the verified match edges, labelled
+     with the minimum name-h60 of each component: union-find on the
+     driver (``_component_labels``) while the edge set fits, else
+     large-star/small-star rounds (``connected_components``).
   4. **Canonical election** — per component, the most-mentioned surface
-     form wins (ties: lexicographic min) via one window rank.
+     form wins (ties: lexicographic min).
   5. **Rewrite** — triples' subj/obj mapped through the canonical map
      (broadcast when dimension-sized; AQE otherwise), and the global
      triple merge goes through two-phase SALTED aggregation
      (operators/agg.py) because entity mentions are Zipf-skewed.
 
-Scale notes: step 1's join key space is (perm × hash) — uniform by
-construction; step 3 shuffles only the edge set (≪ mention count: distinct
-names only); nothing here touches per-row Python.
+Two executors share these definitions: below ``DRIVER_LINK_MAX_NAMES``
+distinct names ``_canonicalize_driver`` runs steps 1-4 in driver Python;
+above it Spark does (an Arrow signature stage, the capped bucket
+self-join of ``dedup.candidate_edges``, the verification UDF, CC and a
+window election).  Step 1's join key space is (perm × hash) — uniform by
+construction; step 3 shuffles only the edge set (distinct names only).
 """
 
 from __future__ import annotations
 
+import itertools
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.hof import fresh
-from ..hashing import h60
+from ..hashing import h60, h60_py
+from .dedup import candidate_edges
 
 N_PERMUTATIONS = 12
 MAX_CC_ITERATIONS = 25
 
 
-# NOTE on lambda parameter names: PySpark names the SQL lambda variable
-# after the PYTHON parameter.  Same-named lambdas that end up nested in one
-# expression tree (Catalyst collapses withColumn chains!) silently resolve
-# to the wrong binding — observed as nondeterministic MinHash signatures.
-# Hence every HOF lambda in this module has a UNIQUE parameter name, and
-# the signature itself is a raw SQL expr with explicit variable names.
-
-
-def name_tokens(col) -> "F.Column":
-    """UPPER alnum word tokens of a name (native expressions)."""
-    cleaned = F.regexp_replace(F.upper(col), r"[^A-Z0-9 ]", "")
-    return F.filter(F.split(cleaned, r" +"), fresh(lambda ntk: F.length(ntk) > 0))
-
-
-def _digit_tokens(tokens) -> "F.Column":
-    return F.array_sort(F.filter(tokens, fresh(lambda dtk: dtk.rlike(r"^[0-9]+$"))))
-
-
-def _word_tokens(tokens) -> "F.Column":
-    return F.filter(tokens, fresh(lambda wtk: ~wtk.rlike(r"^[0-9]+$")))
-
-
 def name_tokens_py(name: str) -> list[str]:
-    """Python twin of name_tokens."""
-    import re
-
+    """UPPER alnum word tokens of a name."""
     return [t for t in re.sub(r"[^A-Z0-9 ]", "", name.upper()).split(" ") if t]
+
+
+def _signature(name: str) -> list[int]:
+    """MinHash signature of a name's token set: per permutation p, the min
+    h60 of its tokens salted with ``#perm{p}``.  (p, value) is the name's
+    LSH bucket key for permutation p; a name without tokens has none."""
+    toks = name_tokens_py(name)
+    if not toks:
+        return []
+    return [min(h60_py(t, f"#perm{p}") for t in toks) for p in range(N_PERMUTATIONS)]
 
 
 def names_match_py(a: str, b: str) -> bool:
@@ -89,9 +81,9 @@ def names_match_py(a: str, b: str) -> bool:
     Python (vectorized via pandas_udf), NOT native array expressions:
     deeply-nested higher-order-function lambdas evaluated inside a
     collapsed join projection misfired intermittently in pyspark 4.1.2
-    (~1/20 runs merged two distinct dates) — see the module NOTE.  The
-    predicate runs only on LSH candidate pairs (dimension-scale), so the
-    Arrow hop costs nothing at corpus scale.
+    (~1/20 runs merged two distinct dates).  The predicate runs only on
+    LSH candidate pairs (dimension-scale), so the Arrow hop costs nothing
+    at corpus scale.
     """
     ta, tb = name_tokens_py(a), name_tokens_py(b)
     da = sorted(t for t in ta if t.isdigit())
@@ -132,95 +124,41 @@ def names_match_udf():
 MAX_NAME_BUCKET = 4096
 
 
-def candidate_pairs(names: DataFrame, n_perm: int = N_PERMUTATIONS,
-                    max_bucket: int = MAX_NAME_BUCKET) -> DataFrame:
-    """names(name) → distinct (name_a < name_b) candidate pairs via LSH.
+def candidate_pairs(names: DataFrame, max_bucket: int = MAX_NAME_BUCKET) -> DataFrame:
+    """names(name) → distinct (name_a < name_b) candidate pairs via LSH:
+    names sharing a (perm, minv) bucket of their ``_signature``.
 
-    Self-join key = (permutation index, min-hash value): uniform hash
-    domain, so no skewed join keys regardless of token distribution —
-    but a duplicate NAME FAMILY shares whole buckets, hence the
-    ``max_bucket`` star fallback above.
-
-    The signature is computed in one Arrow-batched stage with hashlib —
-    byte-identical to hashing.h60_py, immune to the Catalyst HOF pitfalls
-    documented in this module's NOTE, and ~10× faster than interpreted
-    nested transforms.  Names are dimension-sized, so the stage is cheap.
+    The signature is one Arrow-batched stage; its (name, perm, minv) rows
+    go to ``dedup.candidate_edges`` as (doc_id, band, bh), which runs the
+    bucket self-join with the ``max_bucket`` star fallback above and
+    returns a local checkpoint.  Names are dimension-sized, so the stage
+    is cheap.
     """
-    import re as _re
-
-    from pyspark.sql import types as T
-
     def sig_batches(batches):
-        import hashlib
-
         import pandas as pd
-
-        def h60(s: str) -> int:
-            return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
         for pdf in batches:
             out_n, out_p, out_m = [], [], []
             for name in pdf["name"]:
-                toks = [t for t in _re.sub(r"[^A-Z0-9 ]", "", name.upper()).split(" ") if t]
-                if not toks:
-                    continue
-                for p in range(n_perm):
+                for p, minv in enumerate(_signature(name)):
                     out_n.append(name)
                     out_p.append(p)
-                    out_m.append(min(h60(f"{t}#perm{p}") for t in toks))
+                    out_m.append(minv)
             yield pd.DataFrame({"name": out_n, "perm": out_p, "minv": out_m})
 
-    schema = T.StructType([
-        T.StructField("name", T.StringType()),
-        T.StructField("perm", T.IntegerType()),
-        T.StructField("minv", T.LongType()),
-    ])
-    sig = (
-        names.select("name").distinct()
-        .mapInPandas(sig_batches, schema=schema)
-        # materialize before the self-join: otherwise both sides recompute
-        # the signature, and plan-level pushdowns can serialize the work
-        .persist()
-    )
-    sig.count()
-    sizes = sig.groupBy("perm", "minv").agg(F.count("*").alias("_k"))
-    big_keys = sizes.filter(F.col("_k") > max_bucket).select("perm", "minv")
-    normal = sig.join(F.broadcast(big_keys), ["perm", "minv"], "left_anti")
-    left = normal.alias("a")
-    right = normal.alias("b")
-    pairs = (
-        left.join(
-            right,
-            (F.col("a.perm") == F.col("b.perm"))
-            & (F.col("a.minv") == F.col("b.minv"))
-            & (F.col("a.name") < F.col("b.name")),
-        )
-        .select(F.col("a.name").alias("name_a"), F.col("b.name").alias("name_b"))
-    )
-    fam = sig.join(F.broadcast(big_keys), ["perm", "minv"], "left_semi")
-    mins = fam.groupBy("perm", "minv").agg(F.min("name").alias("_m"))
-    stars = (
-        fam.join(F.broadcast(mins), ["perm", "minv"])
-        .filter(F.col("name") != F.col("_m"))
-        .select(F.col("_m").alias("name_a"), F.col("name").alias("name_b"))
-    )
-    out = (
-        pairs.unionByName(stars)
-        .distinct()
-        # materialize the (small) pair set so the signature cache can be freed
-        .localCheckpoint()
-    )
-    sig.unpersist()
-    return out
+    sig = names.select("name").distinct().mapInPandas(
+        sig_batches, "name string, perm int, minv long")
+    edges = candidate_edges(
+        sig.select(F.col("name").alias("doc_id"), F.col("perm").alias("band"),
+                   F.col("minv").alias("bh")),
+        max_bucket)
+    return edges.select(F.col("doc_a").alias("name_a"), F.col("doc_b").alias("name_b"))
 
 
-def match_edges(names: DataFrame, n_perm: int = N_PERMUTATIONS) -> DataFrame:
+def match_edges(names: DataFrame) -> DataFrame:
     """Verified duplicate-name edges (name_a, name_b)."""
-    pairs = candidate_pairs(names, n_perm)
-    match = names_match_udf()
-    return pairs.filter(match(F.col("name_a"), F.col("name_b"))).select(
-        "name_a", "name_b"
-    )
+    return candidate_pairs(names).filter(
+        names_match_udf()(F.col("name_a"), F.col("name_b")))
 
 
 DRIVER_CC_MAX_EDGES = 2_000_000
@@ -289,11 +227,10 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     raise ValueError(f"unknown connected-components strategy: {strategy!r}")
 
 
-def _connected_components_driver(nodes: DataFrame, edge_rows: list) -> DataFrame:
-    from ..hashing import h60_py
-
-    spark = nodes.sparkSession
-    parent: dict[str, str] = {}
+def _component_labels(edges, names=()) -> dict[str, int]:
+    """Union-find over name pairs: every name in ``names`` or ``edges`` →
+    the minimum h60 of its component (the label of every CC strategy)."""
+    parent = {n: n for n in names}
 
     def find(x: str) -> str:
         while parent[x] != x:
@@ -301,23 +238,26 @@ def _connected_components_driver(nodes: DataFrame, edge_rows: list) -> DataFrame
             x = parent[x]
         return x
 
-    for r in edge_rows:
-        for n in (r["name_a"], r["name_b"]):
-            parent.setdefault(n, n)
-        ra, rb = find(r["name_a"]), find(r["name_b"])
-        if ra != rb:
-            parent[ra] = rb
+    for x, y in edges:
+        parent.setdefault(x, x)
+        parent.setdefault(y, y)
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[rx] = ry
     comp_min: dict[str, int] = {}
-    for n in list(parent):
-        root = find(n)
-        h = h60_py(n)
+    for n in parent:
+        root, h = find(n), h60_py(n)
         comp_min[root] = min(comp_min.get(root, h), h)
-    labels = [(n, comp_min[find(n)]) for n in parent]
+    return {n: comp_min[find(n)] for n in parent}
+
+
+def _connected_components_driver(nodes: DataFrame, edge_rows: list) -> DataFrame:
     from ..functions.localrel import local_df
-    linked = local_df(spark, labels, "name string, component long")
-    all_names = nodes.select("name").distinct()
+
+    labels = _component_labels(edge_rows)
+    linked = local_df(nodes.sparkSession, list(labels.items()), "name string, component long")
     return (
-        all_names.join(F.broadcast(linked), "name", "left")
+        nodes.select("name").distinct().join(F.broadcast(linked), "name", "left")
         .withColumn("component", F.coalesce(F.col("component"), h60(F.col("name"))))
     )
 
@@ -438,74 +378,47 @@ DRIVER_LINK_MAX_NAMES = 20_000
 DRIVER_LINK_MAX_PAIRS = 5_000_000
 
 
-def _canonicalize_driver(spark, rows, n_perm: int = N_PERMUTATIONS,
-                         max_bucket: int = MAX_NAME_BUCKET,
+def _canonicalize_driver(spark, rows, max_bucket: int = MAX_NAME_BUCKET,
                          max_pairs: int = DRIVER_LINK_MAX_PAIRS
                          ) -> "DataFrame | None":
-    """Driver twin of the Spark linking path over collected
-    (name, n_mentions, entity_type) rows — semantics mirrored exactly:
-    candidate_pairs' (perm, min-hash) bucketing with the star cap,
-    names_match_py verification, union-find CC with min-h60 component
-    labels, and the most-mentioned-then-lex-min election.  Returns None
-    (caller → Spark path) if the candidate-pair set exceeds
-    ``max_pairs``."""
-    from ..hashing import h60_py
+    """The Spark linking path's definitions run on the driver over
+    collected (name, n_mentions, entity_type) rows: ``_signature`` buckets
+    with the star cap, ``names_match_py`` once per distinct candidate
+    pair, ``_component_labels``, and per component label the
+    most-mentioned-then-lex-min election.  Returns None (caller → Spark
+    path) if the candidate-pair set exceeds ``max_pairs``."""
+    from ..functions.localrel import local_df
 
     stats = {r["name"]: (r["n_mentions"], r["entity_type"]) for r in rows}
-    names = list(stats)
     buckets: dict[tuple[int, int], list[str]] = {}
-    for name in names:
-        toks = name_tokens_py(name)
-        if not toks:
-            continue
-        for p in range(n_perm):
-            mv = min(h60_py(f"{t}#perm{p}") for t in toks)
-            buckets.setdefault((p, mv), []).append(name)
+    for name in stats:
+        for key in enumerate(_signature(name)):
+            buckets.setdefault(key, []).append(name)
     pairs: set[tuple[str, str]] = set()
     for members in buckets.values():
         if len(members) <= max_bucket:
-            for i in range(len(members)):
-                for j in range(i + 1, len(members)):
-                    a, b = members[i], members[j]
-                    pairs.add((a, b) if a < b else (b, a))
+            pairs.update((a, b) if a < b else (b, a)
+                         for a, b in itertools.combinations(members, 2))
         else:
             m = min(members)
-            for x in members:
-                if x != m:
-                    pairs.add((m, x))
+            pairs.update((m, x) for x in members if x != m)
         if len(pairs) > max_pairs:
             return None
-    parent = {n: n for n in names}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        if names_match_py(a, b):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-    comp_members: dict[str, list[str]] = {}
-    for n in names:
-        comp_members.setdefault(find(n), []).append(n)
+    labels = _component_labels(((a, b) for a, b in pairs if names_match_py(a, b)), stats)
+    components: dict[int, list[str]] = {}
+    for n, comp in labels.items():
+        components.setdefault(comp, []).append(n)
     out = []
-    for members in comp_members.values():
-        comp = min(h60_py(n) for n in members)
+    for comp, members in components.items():
         canonical = min(members, key=lambda n: (-stats[n][0], n))
         cid = h60_py(canonical)
-        for n in members:
-            out.append((n, comp, canonical, cid, stats[n][1], stats[n][0]))
+        out.extend((n, comp, canonical, cid, stats[n][1], stats[n][0]) for n in members)
     schema = ("name string, component long, canonical_name string, "
               "canonical_id long, entity_type string, n_mentions long")
-    from ..functions.localrel import local_df
     return local_df(spark, out, schema)
 
 
-def canonicalize(mentions: DataFrame, n_perm: int = N_PERMUTATIONS,
-                 metrics: dict | None = None,
+def canonicalize(mentions: DataFrame, metrics: dict | None = None,
                  driver_max_names: int = DRIVER_LINK_MAX_NAMES) -> DataFrame:
     """mentions(doc_id, entity_name, entity_type, …) → canonical entity map:
 
@@ -516,11 +429,13 @@ def canonicalize(mentions: DataFrame, n_perm: int = N_PERMUTATIONS,
     (ties → lexicographically smallest); canonical_id = 60-bit hash of the
     canonical name.  The returned map has one row per distinct surface
     name — dimension-sized, broadcastable downstream.  ``metrics``
-    (optional dict) receives the CC strategy chosen and, on the twophase
-    path, its round count — surfaced into pipeline lineage.
+    (optional dict) receives the linking path taken (``path``: driver or
+    spark) and, on the Spark path, the CC strategy chosen and its twophase
+    round count — surfaced into pipeline lineage.
     """
     from pyspark.sql import Window
 
+    metrics = {} if metrics is None else metrics
     counts_lazy = mentions.groupBy(F.col("entity_name").alias("name")).agg(
         F.count("*").alias("n_mentions"),
         # deterministic election: longest type wins, ties broken
@@ -545,10 +460,9 @@ def canonicalize(mentions: DataFrame, n_perm: int = N_PERMUTATIONS,
     try:
         probe = counts_lazy.limit(driver_max_names + 1).collect()
         if len(probe) <= driver_max_names:
-            out = _canonicalize_driver(mentions.sparkSession, probe, n_perm)
+            out = _canonicalize_driver(mentions.sparkSession, probe)
             if out is not None:
-                if metrics is not None:
-                    metrics["strategy"] = "driver"
+                metrics["path"] = "driver"
                 return out
         # dimension-sized (distinct names); cut lineage so the LSH
         # self-join and the CC loop don't re-aggregate the full mention
@@ -556,7 +470,8 @@ def canonicalize(mentions: DataFrame, n_perm: int = N_PERMUTATIONS,
         counts = counts_lazy.localCheckpoint()
     finally:
         counts_lazy.unpersist()
-    edges = match_edges(counts.select("name"), n_perm)
+    metrics["path"] = "spark"
+    edges = match_edges(counts.select("name"))
     comps = connected_components(counts.select("name"), edges, metrics=metrics)
     labeled = counts.join(comps, "name")
     w = (

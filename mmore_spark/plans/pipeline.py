@@ -48,8 +48,9 @@ def graph(documents: DataFrame, extractor=None,
         documents.select("doc_id", render_text("spans").alias("text")), "text", extractor))
     mentions = materialize("mentions", lambda: extract.explode(extracted, "entities"))
     triples = materialize("triples", lambda: extract.explode(extracted, "triples"))
-    # CC observability flows into this stage's lineage: strategy chosen
-    # (driver vs twophase) and, on the twophase path, the round count
+    # linking observability flows into this stage's lineage: the path
+    # taken (driver vs spark) and, on the Spark path, the CC strategy
+    # and its twophase round count
     cc_metrics: dict = {}
     canonical_map = materialize(
         "canonical_map", lambda: linking.canonicalize(mentions, metrics=cc_metrics),

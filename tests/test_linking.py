@@ -98,7 +98,8 @@ def test_candidate_pairs_bucket_cap_star_grouping(spark):
     word orders) shares every (perm, minv) bucket; over the cap the join
     emits k-1 star rows instead of k(k-1)/2 pairs, and because
     names_match verifies every same-token-set pair, the connected
-    components are IDENTICAL to the uncapped plan."""
+    components are IDENTICAL to the uncapped plan — and to the driver
+    path's under the same cap."""
     import itertools
 
     fam = [" ".join(p) for p in itertools.permutations(
@@ -125,6 +126,11 @@ def test_candidate_pairs_bucket_cap_star_grouping(spark):
         assert len({comps[n] for n in fam}) == 1
         assert comps[others[0]] != comps[fam[0]]
         assert comps[others[0]] != comps[others[1]]
+    # the driver path's star branch (every family bucket holds 6 > 4
+    # names) labels the same components as the capped Spark path
+    rows = [{"name": n, "n_mentions": 1, "entity_type": ""} for n in fam + others]
+    driver = linking._canonicalize_driver(spark, rows, max_bucket=4)
+    assert {r["name"]: r["component"] for r in driver.collect()} == comps
 
 
 def test_connected_components_chain(spark):

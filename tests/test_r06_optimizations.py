@@ -79,8 +79,14 @@ def test_canonicalize_driver_equals_spark_path(spark, small_docs_df):
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
     mentions, _ = extract.extract_mentions_triples(rendered, "text")
     mentions = mentions.cache()
-    driver = linking.canonicalize(mentions).toPandas()
-    spark_side = linking.canonicalize(mentions, driver_max_names=0).toPandas()
+    driver_metrics, spark_metrics = {}, {}
+    driver = linking.canonicalize(mentions, metrics=driver_metrics).toPandas()
+    spark_side = linking.canonicalize(mentions, metrics=spark_metrics,
+                                      driver_max_names=0).toPandas()
+    # lineage tells the two paths apart; CC's strategy is the Spark path's
+    assert driver_metrics == {"path": "driver"}
+    assert spark_metrics["path"] == "spark"
+    assert spark_metrics["strategy"] == "driver"
     key = ["name"]
     a = driver.sort_values(key).reset_index(drop=True)
     b = spark_side.sort_values(key).reset_index(drop=True)
