@@ -57,7 +57,7 @@ MEDIA_KINDS = ["image", "video", "audio"]  # datatrove_wrapper.py:72-73 fixed se
 ATTACHMENT_TAG = "<attachment>"  # ProcessorConfig.attachment_tag, processors/base.py:28-37
 
 # Zipf(s=1.2) weights over the 20 alias clusters of each type (hot keys →
-# exercises the salted aggregation path; FIXTURES.md §1 generator spec).
+# exercise the global merges under skew; FIXTURES.md §1 generator spec).
 _ZIPF_S = 1.2
 _N_CLUSTERS = 20
 _ZIPF_W = [1.0 / (r ** _ZIPF_S) for r in range(1, _N_CLUSTERS + 1)]

@@ -200,9 +200,9 @@ def _kg_triples_global_duck() -> str:
 
 
 def _kg_triples_global_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark plan: two-phase SALTED aggregation (operators/agg.py pattern)
-    — entity keys are skewed, a straight groupBy funnels hot pairs into
-    single reducers at scale."""
+    """Spark plan: two-phase SALTED aggregation — the salt, a pure
+    function of doc_id, makes summed per-bucket count_distinct(doc_id) the
+    exact n_docs without a per-pair doc-id array."""
     t = _kg_triples_spark(spark, sf_dir)
     from .hashing import h60
 

@@ -13,7 +13,7 @@ functions) — they run JVM-side inside whole-stage codegen, no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..corpus.generator import ATTACHMENT_TAG
@@ -104,7 +104,3 @@ def spans_from_text(text: Column, modalities: Column) -> Column:
             fix.cast("int").alias("offset"),
         )),
     )
-
-
-def with_rendered_text(df: DataFrame, out: str = "text") -> DataFrame:
-    return df.withColumn(out, render_text("spans"))

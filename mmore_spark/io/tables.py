@@ -12,9 +12,9 @@ Spark job (the data write) and lands
   * the data, partitioned by the declared columns,
   * ``_mmore_schema.json``, the frame's schema (an empty frame may write
     no part file, and schema inference on it fails),
-  * the ``_MMORE_COMPLETE`` marker: stage, rows, bytes, wall_ms and one
-    record (file, rows, bytes) per committed part file.  Rows come from
-    the parquet footers, read on the driver, so counting adds no job.
+  * the ``_MMORE_COMPLETE`` marker: stage, rows, bytes, wall_ms, one record
+    (file, rows, bytes) per committed part file (rows from the parquet
+    footers, read on the driver) and the aggregates the write observed.
 Resume = "skip stages whose marker exists and whose listed files are all
 intact" (plans/pipeline.py).  With Iceberg the same writes become
 ``writeTo(...).overwritePartitions()`` and lineage keys on snapshot ids.
@@ -32,7 +32,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..functions.localrel import local_df
 
@@ -126,11 +126,14 @@ def _part_files(path: str) -> list[dict]:
 
 def write_table(df: DataFrame, path: str, stage: str,
                 partition_by: list[str] | None = None,
-                mode: str = "overwrite") -> dict:
+                mode: str = "overwrite", observe: list[Column] | None = None) -> dict:
     """Write a stage output in one Spark job, then its schema and its
-    completion marker; returns the marker's contents."""
+    completion marker; returns the marker's contents.  The values of the
+    aliased ``observe`` aggregates, taken by the write itself, land in it
+    under ``observed``."""
     t0 = time.time()
-    writer = df.write.mode(mode)
+    obs = Observation()
+    writer = (df.observe(obs, *observe) if observe else df).write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -146,6 +149,7 @@ def write_table(df: DataFrame, path: str, stage: str,
         "bytes": sum(f["bytes"] for f in files),
         "path": path,
         "files": files,
+        "observed": obs.get if observe else {},
     }
     summary["wall_ms"] = int((time.time() - t0) * 1000)
     # rename into place: a crash never leaves a half-written marker

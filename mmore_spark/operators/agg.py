@@ -1,61 +1,44 @@
-"""Two-phase salted aggregation for Zipf-skewed keys (SURVEY.md §4 (a)).
+"""Global merges of the per-doc triples and mentions, one ``groupBy`` each.
 
 Entity mentions follow a Zipf distribution (FIXTURES.md generator spec), so
-a plain ``groupBy(subj, obj)`` over the global triple set funnels the hot
-entities' rows into single reducers.  The fix is classic salting: a
-deterministic salt column fans each hot key across ``n_salts`` partial
-groups (map-side-combine-friendly), then a second, tiny aggregation merges
-partials.  Exact for decomposable aggregates (sum / count / set-union).
-
-The salt is ``h60(doc_id) % n_salts`` — deterministic (reproducible plans,
-required for the byte-identical two-parallelism-level runs), and uniform.
+a few hot keys carry a large share of the rows.  One ``groupBy`` still
+suffices: every aggregate here is decomposable (sum, count, max, set
+union), so Spark's partial aggregation combines each key inside every map
+task before the shuffle.  A reducer receives at most one partial row per
+map task for a key, however hot it is, and ``collect_set`` dedups inside
+the partial buffer.  A salted two-phase plan only adds a second shuffle on
+top of that (``scripts/skew_stress.py`` measures both).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..hashing import h60
 
-
-def merge_triples_global(triples: DataFrame, n_salts: int = 16) -> DataFrame:
+def merge_triples_global(triples: DataFrame) -> DataFrame:
     """Global undirected-edge merge with reference semantics (weight sums,
     predicate-description set-union — output_parser.py:112-121 lifted from
-    per-doc to corpus scope) plus a supporting-doc count.
+    per-doc to corpus scope) plus the number of per-doc triples.
 
     Output: (subj, obj, pred array<string> sorted, weight, n_docs)
     """
-    salted = triples.withColumn("_salt", F.pmod(h60(F.col("doc_id")), F.lit(n_salts)))
-    partial = salted.groupBy("subj", "obj", "_salt").agg(
-        F.sum("weight").alias("_w"),
-        F.array_distinct(F.flatten(F.collect_list("pred"))).alias("_p"),
-        F.count("*").alias("_n"),
-    )
     return (
-        partial.groupBy("subj", "obj")
+        triples.groupBy("subj", "obj")
         .agg(
-            F.sum("_w").alias("weight"),
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("_p")))).alias("pred"),
-            F.sum("_n").alias("n_docs"),
+            F.sum("weight").alias("weight"),
+            F.array_sort(F.array_distinct(F.flatten(F.collect_set("pred")))).alias("pred"),
+            F.count("*").alias("n_docs"),
         )
         .select("subj", "obj", "pred", "weight", "n_docs")
     )
 
 
-def merge_entities_global(mentions: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Global mention rollup per entity name (same two-phase shape)."""
-    salted = mentions.withColumn("_salt", F.pmod(h60(F.col("doc_id")), F.lit(n_salts)))
-    partial = salted.groupBy("entity_name", "_salt").agg(
-        F.count("*").alias("_n"),
-        F.max("entity_type").alias("_t"),
-        F.array_distinct(F.flatten(F.collect_list("descriptions"))).alias("_d"),
-    )
-    return (
-        partial.groupBy("entity_name")
-        .agg(
-            F.sum("_n").alias("n_mentions"),
-            F.max("_t").alias("entity_type"),
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("_d"))))
-            .alias("descriptions"),
-        )
+def merge_entities_global(mentions: DataFrame) -> DataFrame:
+    """Global mention rollup per entity name: mention count, type and the
+    sorted union of descriptions."""
+    return mentions.groupBy("entity_name").agg(
+        F.count("*").alias("n_mentions"),
+        F.max("entity_type").alias("entity_type"),
+        F.array_sort(F.array_distinct(F.flatten(F.collect_set("descriptions"))))
+        .alias("descriptions"),
     )

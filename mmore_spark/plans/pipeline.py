@@ -6,14 +6,14 @@ Logical plan (BASELINE.json north_star):
       → render_text            (native array expressions, spans preserved)
       → extract                (ONE Arrow-batched stage → mentions, triples)
       → canonicalize           (LSH blocking + connected components)
-      → rewrite + salted merge (global triples / entities tables)
+      → rewrite + global merge (one groupBy each → triples / entities tables)
 
-``graph`` defines the 8 stages once, each through a materialize hook.
-``build_graph`` passes the identity (lazy, no I/O) — what a library user
-calls.  ``KGPipeline.run`` passes ``_run_stage``: each stage writes a
-table in one Spark job with a completion marker carrying its per-file
-lineage, later stages read that table back, and a re-run SKIPS completed
-stages (exact resume after failure, north_rule).
+``graph`` defines the 8 stages once.  ``build_graph`` runs them lazily
+(no I/O) — what a library user calls.  ``KGPipeline.run`` writes the
+five that earn a table (the ``extracted`` checkpoint and the four
+product tables), each in one Spark job with a completion marker carrying
+its per-file lineage; later stages read the table back, and a re-run
+SKIPS completed stages (exact resume after failure, north_rule).
 
 Layout: every stage table is written unpartitioned, one file per write
 task.  No reader prunes on a partition column, and a hash-bucket column
@@ -27,27 +27,36 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.spans import render_text
 from ..io import tables
 from ..operators import agg, extract, linking
 
 
-def _lazy(stage: str, make_df, info: dict | None = None) -> DataFrame:
+def _lazy(stage: str, make_df, info: dict | None = None, observe=None) -> DataFrame:
     return make_df()
 
 
 def graph(documents: DataFrame, extractor=None,
           materialize=_lazy) -> dict[str, DataFrame]:
     """The job's 8 stages in order, stage name → frame.  ``materialize``
-    receives each stage's name, a thunk building its frame from the
-    frames ``materialize`` returned for earlier stages, and (for
-    ``canonical_map``) the dict linking fills with its metrics."""
-    extracted = materialize("extracted", lambda: extract.extract_combined(
-        documents.select("doc_id", render_text("spans").alias("text")), "text", extractor))
-    mentions = materialize("mentions", lambda: extract.explode(extracted, "entities"))
-    triples = materialize("triples", lambda: extract.explode(extracted, "triples"))
+    receives the name of each stage that earns a table, a thunk building
+    its frame from the frames ``materialize`` returned for earlier
+    stages, for ``canonical_map`` the dict linking fills with its
+    metrics, and for ``extracted`` the row counts of the views over it,
+    as aggregates its write can observe.  The views ``mentions`` and
+    ``triples`` explode ``extracted``; ``canonical_triples`` rewrites
+    ``triples`` and keeps its rows (two left joins against a map with one
+    row per name)."""
+    extracted = materialize(
+        "extracted", lambda: extract.extract_combined(
+            documents.select("doc_id", render_text("spans").alias("text")), "text", extractor),
+        observe=[F.coalesce(F.sum(F.size(column)), F.lit(0)).alias(view) for view, column in
+                 (("mentions", "entities"), ("triples", "triples"),
+                  ("canonical_triples", "triples"))])
+    mentions = extract.explode(extracted, "entities")
+    triples = extract.explode(extracted, "triples")
     # linking observability flows into this stage's lineage: the path
     # taken (driver vs spark) and, on the Spark path, the CC strategy
     # and its twophase round count
@@ -56,8 +65,7 @@ def graph(documents: DataFrame, extractor=None,
         "canonical_map", lambda: linking.canonicalize(mentions, metrics=cc_metrics),
         info=cc_metrics)
     entities = materialize("entities", lambda: linking.entities_table(canonical_map))
-    canonical_triples = materialize(
-        "canonical_triples", lambda: linking.rewrite_triples(triples, canonical_map))
+    canonical_triples = linking.rewrite_triples(triples, canonical_map)
     triples_global = materialize(
         "triples_global", lambda: agg.merge_triples_global(canonical_triples))
     entities_global = materialize(
@@ -81,7 +89,7 @@ def build_graph(documents: DataFrame, extractor=None
     Lazy and persists nothing: callers decide caching/writes.  Without a
     cache the extraction runs once per action that needs it (linking's
     name collect, then each consumer of the triples); ``KGPipeline``
-    writes the extraction output once instead and reads it back.
+    writes it once instead, with the product tables, and reads them back.
     """
     g = graph(documents, extractor)
     return g["mentions"], g["canonical_triples"], g["entities"], g["canonical_map"]
@@ -116,23 +124,30 @@ class KGPipeline:
     def _path(self, stage: str) -> str:
         return os.path.join(self.warehouse, stage)
 
-    def _run_stage(self, stage: str, make_df, info: dict | None = None) -> DataFrame:
+    def _run_stage(self, stage: str, make_df, info: dict | None = None,
+                   observe=None) -> DataFrame:
         path = self._path(stage)
-        if tables.is_complete(path):
-            rows = tables.read_marker(path)["rows"]
-            self.results.append(StageResult(stage, path, rows, 0, skipped=True))
+        skipped = tables.is_complete(path)
+        if skipped:
+            meta = tables.read_marker(path)
+            self.results.append(StageResult(stage, path, meta["rows"], 0, skipped=True))
         else:
-            summary = tables.write_table(make_df(), path, stage)
-            self.results.append(StageResult(stage, path, summary["rows"],
-                                            summary["wall_ms"], info=info or {}))
-        return tables.read_table(self.spark, path)
+            meta = tables.write_table(make_df(), path, stage, observe=observe)
+            self.results.append(StageResult(stage, path, meta["rows"],
+                                            meta["wall_ms"], info=info or {}))
+        df = tables.read_table(self.spark, path)
+        if observe and not meta.get("observed"):  # another writer's marker, e.g. an upsert
+            meta["observed"] = df.agg(*observe).first().asDict()
+        # the views over this table: their rows, no path, no wall time
+        self.results += [StageResult(view, "", rows, 0, skipped)
+                         for view, rows in meta.get("observed", {}).items()]
+        return df
 
     def run(self, documents: DataFrame) -> dict[str, DataFrame]:
-        """Execute all stages (skipping completed ones) and return the
-        materialized tables.  Every stage reads its inputs back from the
-        written tables, so the local checkpoints linking leaves on its
-        distributed path are released when the run ends: no cached frame
-        outlives it."""
+        """Execute all stages (skipping completed ones) and return every
+        stage's frame.  Every stage reads its inputs back from the written
+        tables, so the local checkpoints linking leaves on its distributed
+        path are released when the run ends: no cached frame outlives it."""
         before = _checkpoints(self.spark)
         try:
             return graph(documents, self.extractor, self._run_stage)

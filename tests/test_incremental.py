@@ -6,21 +6,17 @@ import os
 from mmore_spark.operators import incremental as inc
 
 
-def _triples_by_doc(spark, path):
+def _rows_by_doc(spark, path):
     from mmore_spark.io import tables
 
-    out: dict[str, set] = {}
-    for r in tables.read_table(spark, path).collect():
-        out.setdefault(r["doc_id"], set()).add(
-            (r["subj"], r["obj"], tuple(r["pred"]), r["weight"]))
-    return out
+    return {r["doc_id"]: repr(r) for r in tables.read_table(spark, path).collect()}
 
 
 def test_incremental_upsert_of_changed_docs(spark, tmp_path):
     """§2.9 change detection wired into the sink (VERDICT r01 #9): after a
     full pipeline run, re-stage ~10% changed docs through a MERGE-style
-    upsert of the triples stage keyed by doc_id — only those doc_ids' rows
-    change; every unchanged doc's triples stay byte-identical."""
+    upsert of the extraction stage keyed by doc_id — only those doc_ids'
+    rows change; every unchanged doc's row stays byte-identical."""
     from mmore_spark.corpus.generator import generate_documents
     from mmore_spark.functions.spans import render_text
     from mmore_spark.io import tables
@@ -30,8 +26,8 @@ def test_incremental_upsert_of_changed_docs(spark, tmp_path):
     wh = str(tmp_path / "wh")
     docs = generate_documents(spark, 100, seed=42)
     KGPipeline(spark, wh).run(docs)
-    tpath = os.path.join(wh, "triples")
-    before = _triples_by_doc(spark, tpath)
+    epath = os.path.join(wh, "extracted")
+    before = _rows_by_doc(spark, epath)
 
     # 10% of docs change content (different seed → different planted
     # relations for the same doc_ids)
@@ -39,16 +35,23 @@ def test_incremental_upsert_of_changed_docs(spark, tmp_path):
         "cast(substr(doc_id, 5) as int) % 10 = 0")
     changed_ids = {r["doc_id"] for r in changed.select("doc_id").collect()}
     rendered = changed.select("doc_id", render_text("spans").alias("text"))
-    _mentions, new_triples = extract.extract_mentions_triples(rendered)
-    tables.upsert_table(spark, tpath, new_triples, key="doc_id")
+    tables.upsert_table(spark, epath, extract.extract_combined(rendered), key="doc_id")
 
-    after = _triples_by_doc(spark, tpath)
-    for d in set(before) | set(after):
+    after = _rows_by_doc(spark, epath)
+    assert set(after) == set(before)
+    for d in before:
         if d not in changed_ids:
-            assert after.get(d) == before.get(d), d
-    assert any(after.get(d) != before.get(d) for d in changed_ids)
-    # the stage stays resumable: completion marker intact after the upsert
-    assert tables.is_complete(tpath)
+            assert after[d] == before[d], d
+    assert any(after[d] != before[d] for d in changed_ids)
+    # the stage stays resumable: completion marker intact after the upsert,
+    # and a resume counts the views over it from the upserted rows
+    assert tables.is_complete(epath)
+    pipe = KGPipeline(spark, wh)
+    out = pipe.run(docs)
+    rows = {r.name: r.rows for r in pipe.lineage() if r.skipped}
+    assert len(rows) == 8
+    for view in ("mentions", "triples", "canonical_triples"):
+        assert rows[view] == out[view].count(), view
 
 
 def test_latest_wins(spark):

@@ -3,6 +3,7 @@ resume after failure, and determinism across parallelism levels."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mmore_spark.corpus import oracle
@@ -52,6 +53,11 @@ def test_build_graph_pr_gate(spark, small_docs, small_docs_df):
     assert len(got_names) == len(oracle.golden_clusters(small_docs))
 
 
+MATERIALIZED = {"extracted", "canonical_map", "entities", "triples_global",
+                "entities_global"}
+VIEWS = {"mentions", "triples", "canonical_triples"}
+
+
 def test_pipeline_materializes_and_resumes(spark, small_docs_df, tmp_path):
     wh = str(tmp_path / "wh")
     pipe = KGPipeline(spark, wh)
@@ -62,23 +68,24 @@ def test_pipeline_materializes_and_resumes(spark, small_docs_df, tmp_path):
     first = {r.name: r.rows for r in pipe.lineage()}
     assert not any(r.skipped for r in pipe.lineage())
 
-    # every stage's marker lists its part files, and their footer rows
-    # sum to the rows an independent scan of the table counts
+    # every written stage's marker lists its part files, and their footer
+    # rows sum to the rows an independent scan of the table counts
     from mmore_spark.io import tables
 
-    for r in pipe.lineage():
+    written = [r for r in pipe.lineage() if r.name in MATERIALIZED]
+    assert {r.name for r in written} == MATERIALIZED
+    for r in written:
         assert tables.is_complete(r.path), r.name
         lin = tables.read_lineage(spark, r.path)
         assert lin.count() > 0, r.name
         assert lin.agg(F.sum("rows")).first()[0] == r.rows \
             == tables.read_table(spark, r.path).count(), r.name
 
-    # simulate failure after 'triples': delete later stage outputs
+    # simulate failure after 'extracted': delete every later written stage
     import shutil
 
-    for stage in ["canonical_map", "entities", "canonical_triples",
-                  "triples_global", "entities_global"]:
-        shutil.rmtree(os.path.join(wh, stage), ignore_errors=True)
+    for stage in MATERIALIZED - {"extracted"}:
+        shutil.rmtree(os.path.join(wh, stage))
 
     pipe2 = KGPipeline(spark, wh)
     out2 = pipe2.run(small_docs_df)
@@ -92,6 +99,58 @@ def test_pipeline_materializes_and_resumes(spark, small_docs_df, tmp_path):
     assert a == b
 
 
+def test_pipeline_writes_five_tables_and_lineage_of_eight(spark, small_docs_df, tmp_path):
+    """Only the five stages that earn a table are written.  The lineage
+    still holds all 8 stages: each view's rows, observed by the
+    ``extracted`` write, equal an independent count of the frame ``run``
+    returned under its name, and a resumed run reports the same rows."""
+    wh = str(tmp_path / "wh")
+    pipe = KGPipeline(spark, wh)
+    out = pipe.run(small_docs_df)
+    assert set(os.listdir(wh)) == MATERIALIZED
+    lineage = pipe.lineage()
+    assert len(lineage) == 8 and {r.name for r in lineage} == MATERIALIZED | VIEWS
+    for r in lineage:
+        if r.name in VIEWS:
+            assert (r.path, r.wall_ms) == ("", 0), r.name
+            assert r.rows == out[r.name].count() > 0, r.name
+    first = {r.name: r.rows for r in lineage}
+
+    pipe2 = KGPipeline(spark, wh)
+    pipe2.run(small_docs_df)
+    assert all(r.skipped for r in pipe2.lineage())
+    assert {r.name: r.rows for r in pipe2.lineage()} == first
+
+
+def test_extracted_write_is_one_spark_job(spark, small_docs_df, tmp_path):
+    """Observing the views' row counts adds no job to the ``extracted``
+    write: run the pipeline up to that stage under a job group."""
+    class Stop(Exception):
+        pass
+
+    sc = spark.sparkContext
+    group = f"test-extracted-{os.getpid()}"
+    pipe = KGPipeline(spark, str(tmp_path / "wh"))
+    run_stage = pipe._run_stage
+
+    def extracted_only(stage, *a, **kw):
+        if stage != "extracted":
+            raise Stop
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return run_stage(stage, *a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    pipe._run_stage = extracted_only
+    with pytest.raises(Stop):
+        pipe.run(small_docs_df)
+    assert [r.name for r in pipe.lineage()] == [
+        "extracted", "mentions", "triples", "canonical_triples"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_missing_part_file_reruns_its_stage(spark, small_docs_df, tmp_path):
     """A stage whose marker lists a part file that is gone is incomplete:
     resume re-runs it, with the same rows, and trusts the intact ones."""
@@ -101,16 +160,16 @@ def test_missing_part_file_reruns_its_stage(spark, small_docs_df, tmp_path):
     pipe = KGPipeline(spark, wh)
     pipe.run(small_docs_df)
     first = {r.name: r.rows for r in pipe.lineage()}
-    triples = os.path.join(wh, "triples")
-    os.remove(os.path.join(triples, tables.read_marker(triples)["files"][0]["file"]))
+    entities = os.path.join(wh, "entities")
+    os.remove(os.path.join(entities, tables.read_marker(entities)["files"][0]["file"]))
 
     pipe2 = KGPipeline(spark, wh)
     pipe2.run(small_docs_df)
     skipped = {r.name: r.skipped for r in pipe2.lineage()}
-    assert not skipped["triples"]
-    assert skipped["extracted"] and skipped["mentions"] and skipped["triples_global"]
+    assert not skipped["entities"]
+    assert skipped["extracted"] and skipped["canonical_map"] and skipped["triples_global"]
     assert {r.name: r.rows for r in pipe2.lineage()} == first
-    assert tables.read_table(spark, triples).count() == first["triples"]
+    assert tables.read_table(spark, entities).count() == first["entities"]
 
 
 def test_run_leaves_no_persisted_frames(spark, small_docs, tmp_path, monkeypatch):
