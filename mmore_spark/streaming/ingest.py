@@ -33,13 +33,13 @@ hit a stale commit marker and silently drop a genuinely new batch):
     pay an extra anti-join against the output table's own doc_ids; the
     normal path never scans the output.
 
-One pass per micro-batch: the in-batch-deduplicated extraction output is
-the only persisted frame, so extraction runs once.  The output append
-explodes it, anti-joins the seen-id set and counts rows on both sides of
-that join with ``DataFrame.observe`` — no separate count action.  The
-seen append then anti-joins the same cache once more.  A batch with
-nothing new adds no file to the output.  The sink's Spark jobs run under
-a job group named after the batch and are returned as ``jobs``.
+One Spark action per micro-batch, the output append: it explodes the
+in-batch-deduplicated extraction output, anti-joins the seen-id set and
+observes (``DataFrame.observe``) the rows on both sides of that join and
+the ids that passed it — no persist, no count, no seen-set write job.
+The driver lands those ids as one seen file.  A batch with nothing new
+adds no file to the output.  The sink's Spark jobs run under a job group
+named after the batch and are returned as ``jobs``.
 """
 
 from __future__ import annotations
@@ -50,6 +50,7 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -75,8 +76,8 @@ SEEN_TIER_BYTES = 64 * 1024 * 1024
 # a drain of B distinct ids would touch 1 - (1 - 1/k)^B of k hash buckets
 # (0.96 of 64 at B = 200), so bucketing the set prunes nothing at drain
 # sizes that matter.  Readers pass the schema, so no inference or
-# partition-discovery job runs, and "_"-prefixed entries (Spark's
-# _SUCCESS, a crashed fold's tmp) stay invisible to them.
+# partition-discovery job runs, and "_"/"."-prefixed entries (a crashed
+# fold's or seen append's tmp) stay invisible to them.
 SEEN_SCHEMA = "doc_id string"
 
 # Keep at most this many attempt/commit marker files; older batch ids are
@@ -142,9 +143,15 @@ def _read_seen(spark: SparkSession, seen_dir: str) -> "DataFrame | None":
     return spark.read.schema(SEEN_SCHEMA).parquet(seen_dir)
 
 
-def _append_seen(ids: DataFrame, seen_dir: str) -> None:
-    """Append ``ids``' doc_ids to the seen set as one file."""
-    ids.select("doc_id").coalesce(1).write.mode("append").parquet(seen_dir)
+def _append_seen(ids: list, seen_dir: str) -> None:
+    """Land ``ids`` in the seen set as one doc_id-only file, from the
+    driver.  It is written under a name no reader lists ("." prefix, no
+    .parquet suffix) and renamed in, so a crash leaves no partial file."""
+    os.makedirs(seen_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(seen_dir, f".{name}.tmp")
+    pq.write_table(pa.table({"doc_id": pa.array(ids, pa.string())}), tmp)
+    os.replace(tmp, os.path.join(seen_dir, name))
 
 
 def _fold_files(spark: SparkSession, files: list, dest_dir: str) -> None:
@@ -237,26 +244,25 @@ def stream_extract_triples(spark: SparkSession, staging_dir: str,
         sc.setLocalProperty(_JOB_GROUP, groups[-1])
         # in-batch dedup: two staged files carrying the same doc_id in one
         # micro-batch would both pass the anti-join below (ADVICE r01) —
-        # the queue's file-id dedup applies within a drain too.
-        # persist: the output append and the seen append both read it, and
-        # without it each replays the Arrow extraction stage.  Only this
-        # frame is cached: its plan reads nothing under output_dir, so the
-        # append's recacheByPath(output_dir) cannot invalidate it (a cached
-        # post-anti-join frame reads _seen_ids/ and would be re-extracted).
-        batch_df = batch_df.dropDuplicates(["doc_id"]).persist()
+        # the queue's file-id dedup applies within a drain too.  The output
+        # append is its only consumer: extraction runs once, no persist.
+        batch_df = batch_df.dropDuplicates(["doc_id"])
         try:
             seen_bytes = sum(_seen_files(seen_dir).values())
             counters["seen_bytes_read"] += seen_bytes
             counters["seen_bytes_total"] = seen_bytes
             seen = _read_seen(spark_b, seen_dir)
-
-            def unseen(df: DataFrame) -> DataFrame:
-                return df if seen is None else df.join(seen, "doc_id", "left_anti")
-
-            # both counts are taken by the append itself, no extra action
-            rows_in, rows_out = Observation(), Observation()
-            to_write = unseen(extract.explode(batch_df, "triples")
-                              .observe(rows_in, F.count(F.lit(1)).alias("n")))
+            # the append observes its row counts and the ids to mark seen:
+            # every doc with triples that passed the SEEN anti-join, also
+            # those a crashed attempt wrote to the output but not to
+            # _seen_ids (skipping them would let a later drain duplicate)
+            rows_in, new_ids, rows_out = Observation(), Observation(), Observation()
+            to_write = (extract.explode(batch_df, "triples")
+                        .observe(rows_in, F.count(F.lit(1)).alias("n")))
+            if seen is not None:
+                to_write = to_write.join(seen, "doc_id", "left_anti")
+            to_write = to_write.observe(
+                new_ids, F.collect_set("doc_id").alias("ids"))
             if suspect_replay and _has_parquet(output_dir):
                 written = spark_b.read.schema(SEEN_SCHEMA).parquet(output_dir)
                 to_write = to_write.join(written, "doc_id", "left_anti")
@@ -268,21 +274,14 @@ def stream_extract_triples(spark: SparkSession, staging_dir: str,
             counters["rows_written"] += n
             if not n:
                 _drop_empty_parts(output_dir, t0)
-            if n or suspect_replay:
-                # mark seen every doc with triples that passed the SEEN
-                # anti-join, not only those written: on a suspect replay
-                # the crashed attempt's ids already landed in the output
-                # but never reached _seen_ids — skipping them here would
-                # let a later drain duplicate them
-                _append_seen(unseen(batch_df.filter(F.size("triples") > 0)),
-                             seen_dir)
+            if new_ids.get["ids"]:
+                _append_seen(new_ids.get["ids"], seen_dir)
             _compact_seen(spark_b, seen_dir)
             with open(commit_file, "w") as f:
                 json.dump({"batch_id": batch_id, "rows_written": n}, f)
             _prune_markers(commits_dir)
             _prune_markers(attempts_dir)
         finally:
-            batch_df.unpersist()
             sc.setLocalProperty(_JOB_GROUP, stream_group)
 
     q = (

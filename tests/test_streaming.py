@@ -79,11 +79,10 @@ def test_stateful_sessionization_across_drains(spark, tmp_path):
 
 
 def test_stream_single_extraction_eval_per_batch(spark, tmp_path, monkeypatch):
-    """The sink takes two actions (the output and seen appends); the
-    persisted batch must make the extraction stage evaluate ONCE per
-    micro-batch (VERDICT r02: the old sink replayed extraction per
-    action), also once a seen set exists: a cached frame that reads it
-    would be invalidated by the output append and re-extracted."""
+    """The sink takes one action, the output append, and persists
+    nothing: the extraction stage must evaluate ONCE per micro-batch
+    (VERDICT r02: an old sink replayed extraction per action), also once
+    a seen set exists under the output the sink appends to."""
     from pyspark.sql import functions as F
 
     import mmore_spark.streaming.ingest as ingest
@@ -122,11 +121,11 @@ def test_stream_single_extraction_eval_per_batch(spark, tmp_path, monkeypatch):
 
 
 # Spark jobs of one steady-state drain (one batch, a non-empty seen set, no
-# compaction): the output append and the seen append with their seen-set
-# broadcasts, plus the in-batch dedup shuffle that runs extraction.
-# Measured 6 on local[4] and local[8]; one more action, or a scan added to
-# either append, fails the budget.
-STEADY_DRAIN_JOBS = 6
+# compaction): the extraction + in-batch dedup map stage, the seen-set
+# broadcast beside it, and the output append (the seen ids are observed by
+# that append and written by the driver).  Measured 3 on local[4] and
+# local[8]; one more action, or a scan added to the append, fails the budget.
+STEADY_DRAIN_JOBS = 3
 
 
 def test_stream_drain_reports_jobs_within_budget(spark, tmp_path):
@@ -171,7 +170,7 @@ def test_stream_replay_after_partial_commit_is_exactly_once(spark, tmp_path,
     real_append = ingest._append_seen
     calls = {"n": 0}
 
-    def dying_append(triples, seen_dir):
+    def dying_append(ids, seen_dir):
         calls["n"] += 1
         raise RuntimeError("simulated crash between triples and seen appends")
 
@@ -204,6 +203,120 @@ def test_stream_replay_after_partial_commit_is_exactly_once(spark, tmp_path,
     spark.catalog.refreshByPath(out)
     final2 = spark.read.parquet(out)
     assert final2.select("doc_id", "subj", "obj").distinct().count() == final2.count()
+
+
+def _docs_with_triples(seed, indices):
+    """doc_ids among ``indices`` that have at least one golden triple."""
+    from mmore_spark.corpus import oracle
+    from mmore_spark.corpus.generator import build_doc
+
+    return {t["doc_id"] for t in oracle.golden_triples(
+        [build_doc(i, seed) for i in indices])}
+
+
+def test_stream_seen_set_holds_exactly_the_docs_with_triples(spark, tmp_path):
+    """The seen ids the output append observes are exactly the new docs
+    with triples: zero-triple docs stay out, re-staged docs are not added
+    twice, and the driver-side write leaves no temporary file behind."""
+    from pyspark.sql import functions as F
+
+    from mmore_spark.streaming.ingest import _read_seen, _seen_files
+
+    staging = str(tmp_path / "staging10")
+    out, ckpt = str(tmp_path / "out10"), str(tmp_path / "ckpt10")
+    seen_dir = os.path.join(out, "_seen_ids")
+    os.makedirs(staging)
+    seed = 21
+    with_triples = _docs_with_triples(seed, range(60))
+    assert len(with_triples) < 60  # the corpus has zero-triple docs
+
+    def seen_ids():
+        rows = _read_seen(spark, seen_dir).collect()
+        ids = {r["doc_id"] for r in rows}
+        assert len(ids) == len(rows)  # no id landed twice
+        return ids
+
+    generate_documents(spark, 30, seed=seed).write.mode("append").parquet(staging)
+    stream_extract_triples(spark, staging, out, ckpt)
+    prior = seen_ids()
+    assert prior == {d for d in with_triples if d < "doc-00000030"}
+
+    # 30 new docs plus 10 re-staged ones
+    generate_documents(spark, 60, seed=seed) \
+        .filter((F.col("doc_id") >= "doc-00000030")
+                | (F.col("doc_id") < "doc-00000010")) \
+        .write.mode("append").parquet(staging)
+    c = stream_extract_triples(spark, staging, out, ckpt)
+    assert c["rows_in"] > c["rows_written"] > 0
+    assert seen_ids() == prior | {d for d in with_triples
+                                  if d >= "doc-00000030"}
+    # one seen file per drain and nothing else: no temporary file left
+    assert sorted(os.listdir(seen_dir)) == sorted(
+        os.path.basename(p) for p in _seen_files(seen_dir))
+    assert len(os.listdir(seen_dir)) == 2
+
+
+def test_stream_seen_append_crash_before_rename_is_exactly_once(
+        spark, tmp_path, monkeypatch):
+    """Crash inside the driver-side seen write, after its temporary file
+    exists but before the rename: the leftover is invisible to the seen
+    set, the replay writes nothing and lands the ids, and a later
+    re-stage of those docs writes nothing."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    import mmore_spark.streaming.ingest as ingest
+
+    staging = str(tmp_path / "staging11")
+    out, ckpt = str(tmp_path / "out11"), str(tmp_path / "ckpt11")
+    seen_dir = os.path.join(out, "_seen_ids")
+    os.makedirs(staging)
+    seed = 23
+    docs = generate_documents(spark, 50, seed=seed)
+    docs.filter(F.col("doc_id") < "doc-00000020") \
+        .write.mode("append").parquet(staging)
+    n1 = stream_extract_triples(spark, staging, out, ckpt)["rows_written"]
+    prior_files = ingest._seen_files(seen_dir)
+    prior = {r["doc_id"] for r in ingest._read_seen(spark, seen_dir).collect()}
+
+    real_replace = ingest.os.replace
+    leftovers = []
+
+    def failing_replace(src, dst):
+        if not leftovers and os.path.dirname(src) == seen_dir:
+            assert os.path.exists(src)  # the temporary file was written
+            leftovers.append(src)
+            raise OSError("simulated crash before the seen file is renamed in")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(ingest.os, "replace", failing_replace)
+    docs.filter(F.col("doc_id") >= "doc-00000020") \
+        .write.mode("append").parquet(staging)
+    with pytest.raises(StreamingQueryException):
+        stream_extract_triples(spark, staging, out, ckpt)
+    assert len(leftovers) == 1 and os.path.exists(leftovers[0])
+    assert ingest._seen_files(seen_dir) == prior_files
+    assert {r["doc_id"] for r in
+            ingest._read_seen(spark, seen_dir).collect()} == prior
+    spark.catalog.refreshByPath(out)
+    crashed_rows = spark.read.parquet(out).count()
+    assert crashed_rows > n1  # the output append DID land before the crash
+
+    # the replay (the fault fires once) writes nothing and lands the ids
+    c = stream_extract_triples(spark, staging, out, ckpt)
+    assert c["batches"] >= 1 and c["rows_written"] == 0
+    assert {r["doc_id"] for r in ingest._read_seen(spark, seen_dir).collect()} \
+        == _docs_with_triples(seed, range(50))
+
+    # re-staging the crashed batch's docs writes nothing
+    docs.filter(F.col("doc_id") >= "doc-00000020").coalesce(1) \
+        .write.mode("append").parquet(staging)
+    c2 = stream_extract_triples(spark, staging, out, ckpt)
+    assert c2["batches"] >= 1 and c2["rows_written"] == 0
+    spark.catalog.refreshByPath(out)
+    final = spark.read.parquet(out)
+    assert final.count() == crashed_rows
+    assert final.select("doc_id", "subj", "obj").distinct().count() == final.count()
 
 
 def test_stream_checkpoint_reset_does_not_drop_new_data(spark, tmp_path):
@@ -368,8 +481,7 @@ def test_crashed_fold_remnant_does_not_poison_history_reads(spark, tmp_path):
 
     seen = str(tmp_path / "o" / "_seen_ids")
     want = {f"d{i}" for i in range(50)}
-    _append_seen(spark.createDataFrame([(d,) for d in sorted(want)],
-                                       "doc_id string"), seen)
+    _append_seen(sorted(want), seen)
     # simulate a crashed fold: tmp written, sources not yet retired,
     # process died
     remnant = os.path.join(seen, "_fold_tmp")
