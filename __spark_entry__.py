@@ -3,12 +3,11 @@
 entry(spark)   — flagship: full KG pipeline (render → extract → link →
                  canonicalize → global merge) over the interleaved corpus
                  derived deterministically from sf0.001 documents.
-queries()      — one entry per implemented operator (SURVEY.md §2 +
-                 training-data ops); each has a DuckDB oracle twin in
-                 oracle_sql(), generated from the same SQL builder
-                 (mmore_spark/entryqueries.py) — including the full
-                 end-to-end pipeline entries (recursive-CTE oracle).
-oracle_sql()   — the DuckDB twins.
+queries()      — one entry per mmore_spark operator checked against an
+                 oracle (mmore_spark/entryqueries.py): the source parsers,
+                 operators/*, linking, the derived spans table and the
+                 end-to-end pipeline (recursive-CTE oracle).
+oracle_sql()   — the independent DuckDB oracle of each entry.
 """
 
 from __future__ import annotations

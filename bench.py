@@ -58,10 +58,7 @@ def run_single(sf_dir: str, cpus: int) -> dict:
     timings["kg_pipeline"] = round(n_docs / dps, 3)
 
     bench_queries = [
-        "kg_triples", "kg_triples_global", "kg_mentions", "kg_entity_degree",
-        "kg_linking_clusters", "kg_cooccurrence", "tag_fingerprint",
-        "dedup_minhash_pairs", "dedup_jaccard_pairs", "sim_topk_cosine",
-        "sim_ann_lsh_buckets", "rel_latest_wins", "chunk_word64",
+        "kg_linking_clusters", "dedup_minhash_pairs", "dedup_jaccard_pairs",
     ]
     for name in bench_queries:
         t0 = time.time()

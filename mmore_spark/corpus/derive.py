@@ -13,7 +13,8 @@ the input corpus deterministically FROM that table:
     derived media spans) for the pipeline path.
 
 Planted sentences use the closed vocabulary (corpus/vocab.py), so the rule
-extractor and the native regex extraction both recover them exactly.
+extractor and the DuckDB regex oracle (``entryqueries._kg_triples_sql``)
+both recover them exactly.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import hashing
-from ..sqlgen import DUCK, SPARK, Dialect, rx_escape, sql_quote
+from ..sqlgen import SPARK, Dialect, rx_escape, sql_quote
 from . import vocab
 
 # Flattened alias pool per entity type (deterministic order).
@@ -123,17 +124,8 @@ def augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     64KB method limit and silently falls back to interpreted eval)."""
     from ..hashing import h60
 
-    # The test parquet is a single small file → one input partition, which
-    # would serialize all downstream regex/UDF work; spread it across the
-    # cluster first.  Scale-adaptive (r6, guide §2.4): a 100 TB corpus
-    # scans into thousands of partitions already, so the round-robin
-    # shuffle of every payload byte is applied ONLY when the scan is
-    # narrower than the session parallelism (functions/scanspread.py).
-    from ..functions.scanspread import spread_small_scan
-
-    base = spread_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), cache_key=sf_dir
-    ).select("doc_id", "text", h60(F.col("doc_id").cast("string")).alias("h"))
+    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text", h60(F.col("doc_id").cast("string")).alias("h"))
     t = F.broadcast(template_dim(spark))
     p = pool_dim(spark)
     joined = (

@@ -1,13 +1,13 @@
-"""Driver-facing query registry: every entry has a Spark plan and (where
-SQL-expressible) a DuckDB oracle twin generated from the SAME builder
-(sqlgen dialects), so the two sides are semantically identical by
-construction.
+"""Driver-facing query registry: each entry runs an mmore_spark operator
+(a ``sources/registry`` parser, an ``operators/*`` stage, ``linking``,
+``plans.pipeline`` or the derived spans table) on the Spark side and is
+value-checked against an independent DuckDB oracle.
 
 Conventions (driver contract):
   * each Spark callable takes (spark, sf_dir) and reads
     ``{sf_dir}/{table}.parquet``;
   * the DuckDB oracle references bare table names (the driver pre-registers
-    the views);
+    the views of ``TABLES``);
   * every computed column is aliased IDENTICALLY on both sides;
   * floats that undergo engine-specific arithmetic are rounded and cast to
     double on both sides.
@@ -24,61 +24,36 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .corpus import derive
 from .sqlgen import DUCK, SPARK, Dialect, sql_quote
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+# the tables the oracles read
+TABLES = ["events", "documents", "embeddings"]
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
 
-def _register_views(spark: SparkSession, sf_dir: str,
-                    only: list[str] | None = None) -> None:
-    """Register the sf tables as temp views.  ``only`` restricts to the
-    tables a query actually references — each registration is a driver-side
-    parquet schema read (~100 ms), so registering all 10 cost ~1 s of pure
-    latency per query invocation (r6, guide §1.2/§7.3 driver-side work)."""
-    for t in (only if only is not None else TABLES):
+def _register_views(spark: SparkSession, sf_dir: str, only: list[str]) -> None:
+    """Register the named sf tables as temp views (each registration is a
+    driver-side parquet schema read, ~100 ms)."""
+    for t in only:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
-def _sql_query(name: str, build_sql: Callable[[Dialect], str]) -> None:
-    """Register a query whose Spark plan is the SPARK-dialect SQL (fully
-    Catalyst-optimized) and whose oracle is the DUCK-dialect SQL."""
-    import re as _re
-
-    sql = build_sql(SPARK)
-    # self-contained SQL referencing bare lowercase table names — register
-    # exactly those (word-boundary match keeps 'part' from matching
-    # 'partition' etc.)
-    used = [t for t in TABLES if _re.search(rf"\b{t}\b", sql)]
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _register_views(spark, sf_dir, only=used)
-        return spark.sql(build_sql(SPARK))
-
-    QUERIES[name] = run
-    ORACLE[name] = build_sql(DUCK)
-
-
 def _df_query(name: str, fn: Callable[[SparkSession, str], DataFrame],
-              oracle_sql: str | None) -> None:
+              oracle_sql: str) -> None:
     QUERIES[name] = fn
-    if oracle_sql is not None:
-        ORACLE[name] = oracle_sql
+    ORACLE[name] = oracle_sql
 
 
 # ===========================================================================
 # KG extraction over the deterministically-derived corpus (SURVEY.md §2.6)
 # ===========================================================================
 
-def _kg_triples_sql(d: Dialect) -> str:
+def _kg_triples_sql() -> str:
     """Per-doc triple extraction: 12 template regexes over the augmented
     text (planted-sentence derivation, corpus/derive.py).  Reference
     semantics: names UPPERCASED (output_parser.py:55), one record per
     matched relationship."""
-    t2 = derive.text2_sql(d)
+    t2 = derive.text2_sql(DUCK)
     arms = []
     for pattern, pred, _st, _ot in derive.extraction_patterns():
         p = sql_quote(pattern)
@@ -90,48 +65,10 @@ def _kg_triples_sql(d: Dialect) -> str:
     return f"WITH base AS (SELECT doc_id, {t2} AS t2 FROM documents)\n" + "\nUNION ALL\n".join(arms)
 
 
-def _kg_triples_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark plan: ONE scan — planted text via broadcast dimension joins
-    (derive.augmented), then all 12 extraction regexes evaluated in a
-    single projection and exploded.  The SQL-generated twin (12 UNION
-    arms, giant CASE) re-scans 12× and overflows janino codegen; this
-    shape is what survives at 100 TB.
-
-    r6 (guide §1.2 "per-task work"): each regexp_extract is gated behind a
-    cheap ``instr(t2, mid) > 0`` check on the template's literal middle
-    text.  Every pattern contains its escaped mid as a mandatory literal,
-    so when the mid is absent the regex cannot match and regexp_extract
-    would return '' anyway — the gate is semantically exact and replaces
-    ~24 full alternation-regex scans per doc (~300-alias alternations,
-    backtracking at every position) with 12 Boyer-Moore substring scans
-    plus the one or two regexes that can actually fire."""
-    derive.augmented(spark, sf_dir).createOrReplaceTempView("__aug")
-    structs = []
-    for (pattern, pred, _st, _ot), (tmpl, *_r) in zip(
-            derive.extraction_patterns(), derive.vocab.RELATION_TEMPLATES):
-        p = sql_quote(pattern)
-        mid = derive._parts(tmpl)[1]
-        gate = f"instr(t2, {sql_quote(mid)}) > 0"
-        structs.append(
-            f"named_struct('subj', CASE WHEN {gate} THEN regexp_extract(t2, {p}, 1) ELSE '' END, "
-            f"'pred', {sql_quote(pred)}, "
-            f"'obj', CASE WHEN {gate} THEN regexp_extract(t2, {p}, 2) ELSE '' END)"
-        )
-    arr = "array(" + ", ".join(structs) + ")"
-    return spark.sql(
-        f"SELECT doc_id, upper(m.subj) AS subj, m.pred AS pred, upper(m.obj) AS obj "
-        f"FROM __aug LATERAL VIEW explode({arr}) x AS m WHERE m.subj <> ''"
-    )
-
-
-_df_query("kg_triples", _kg_triples_spark, None)
-ORACLE["kg_triples"] = _kg_triples_sql(DUCK)
-
-
-def _kg_mentions_sql(d: Dialect) -> str:
+def _kg_mentions_sql() -> str:
     """Entity mentions with types (subject and object slots of each
     matched template; distinct per doc — output_parser.py:59-70 node dedup)."""
-    t2 = derive.text2_sql(d)
+    t2 = derive.text2_sql(DUCK)
     arms = []
     for pattern, _pred, stype, otype in derive.extraction_patterns():
         p = sql_quote(pattern)
@@ -152,300 +89,15 @@ def _kg_mentions_sql(d: Dialect) -> str:
     )
 
 
-def _kg_mentions_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single extraction scan + broadcast pred→(subj/obj type) map.
-
-    r6: the subj/obj arms previously went through ``unionByName``, which
-    duplicates the whole extraction subtree in the physical plan (Catalyst
-    does not CSE across union arms → 2× the regex work and 2 scans).  One
-    explode of a 2-struct array keeps a single extraction subtree; the
-    row multiset feeding distinct() is identical."""
-    triples = _kg_triples_spark(spark, sf_dir)
-    from .functions.localrel import local_df
-    types = local_df(
-        spark,
-        [(pred, st, ot) for _p, pred, st, ot in derive.extraction_patterns()],
-        "pred string, stype string, otype string",
-    )
-    joined = triples.join(F.broadcast(types), "pred")
-    both = joined.select(
-        "doc_id",
-        F.explode(F.array(
-            F.struct(F.col("subj").alias("entity_name"),
-                     F.col("stype").alias("entity_type")),
-            F.struct(F.col("obj").alias("entity_name"),
-                     F.col("otype").alias("entity_type")),
-        )).alias("m"),
-    ).select("doc_id", "m.entity_name", "m.entity_type")
-    return both.distinct()
-
-
-_df_query("kg_mentions", _kg_mentions_spark, None)
-ORACLE["kg_mentions"] = _kg_mentions_sql(DUCK)
-
-
-def _kg_triples_global_duck() -> str:
-    """Oracle: plain GROUP BY over unordered pairs with reference merge
-    semantics (weight = record count: output_parser.py:94-117 quirk;
-    predicate set-union as sorted csv)."""
-    inner = _kg_triples_sql(DUCK)
-    return (
-        f"WITH t AS (\n{inner}\n)\n"
-        "SELECT least(subj, obj) AS subj, greatest(subj, obj) AS obj, "
-        "string_agg(DISTINCT pred, ',' ORDER BY pred) AS preds, "
-        "CAST(count(*) AS DOUBLE) AS weight, "
-        "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs "
-        "FROM t GROUP BY 1, 2"
-    )
-
-
-def _kg_triples_global_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark plan: two-phase SALTED aggregation — the salt, a pure
-    function of doc_id, makes summed per-bucket count_distinct(doc_id) the
-    exact n_docs without a per-pair doc-id array."""
-    t = _kg_triples_spark(spark, sf_dir)
-    from .hashing import h60
-
-    salted = t.select(
-        F.least("subj", "obj").alias("s"),
-        F.greatest("subj", "obj").alias("o"),
-        "pred",
-        "doc_id",
-        F.pmod(h60(F.col("doc_id")), F.lit(16)).alias("_salt"),
-    )
-    # n_docs without materializing doc ids: the salt is a pure function of
-    # doc_id, so each doc's rows land in exactly ONE (s, o, _salt) bucket —
-    # summing per-bucket count_distinct(doc_id) over disjoint doc partitions
-    # IS the global count(DISTINCT doc_id), exactly.  (A per-pair
-    # collect_set(doc_id) would funnel a mega-hot pair's doc ids into one
-    # final reducer as an unbounded array just to take its size.)
-    partial = salted.groupBy("s", "o", "_salt").agg(
-        F.count("*").alias("_n"),
-        F.collect_set("pred").alias("_p"),
-        F.count_distinct("doc_id").alias("_nd"),
-    )
-    return (
-        partial.groupBy("s", "o")
-        .agg(
-            F.concat_ws(",", F.array_sort(F.array_distinct(F.flatten(F.collect_list("_p")))))
-            .alias("preds"),
-            F.sum("_n").cast("double").alias("weight"),
-            F.sum("_nd").cast("long").alias("n_docs"),
-        )
-        .select(F.col("s").alias("subj"), F.col("o").alias("obj"), "preds", "weight", "n_docs")
-    )
-
-
-_df_query("kg_triples_global", _kg_triples_global_spark, _kg_triples_global_duck())
-
-
-def _kg_entity_degree_sql(d: Dialect) -> str:
-    """Graph rollup: per entity, distinct-neighbor degree + total edge
-    weight (canonicalization-layer analytics)."""
-    inner = _kg_triples_sql(d)
-    return (
-        f"WITH t AS (\n{inner}\n),\n"
-        "e AS (SELECT least(subj, obj) AS a, greatest(subj, obj) AS b, count(*) AS w "
-        "FROM t GROUP BY 1, 2),\n"
-        "arms AS (SELECT a AS entity, b AS partner, w FROM e "
-        "UNION ALL SELECT b, a, w FROM e WHERE a <> b)\n"
-        "SELECT entity, CAST(count(DISTINCT partner) AS BIGINT) AS degree, "
-        "CAST(sum(w) AS DOUBLE) AS total_weight FROM arms GROUP BY entity"
-    )
-
-
-def _kg_entity_degree_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r6 plan notes: the two direction arms previously used unionByName,
-    duplicating the aggregation + extraction subtree (2× regex + 2
-    shuffles); one conditional-array explode keeps a single subtree.
-    ``degree`` uses count(*) instead of count_distinct(partner): partners
-    are provably unique per entity here — e is keyed by (a, b) with
-    a <= b, the forward arm contributes partners >= entity, the reverse
-    arm (only a <> b) partners < entity, so no (entity, partner) row can
-    repeat — which drops the distinct-aggregate expand pass."""
-    t = _kg_triples_spark(spark, sf_dir)
-    e = (
-        t.select(F.least("subj", "obj").alias("a"), F.greatest("subj", "obj").alias("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("w"))
-    )
-    fwd = F.struct(F.col("a").alias("entity"), F.col("b").alias("partner"))
-    rev = F.struct(F.col("b").alias("entity"), F.col("a").alias("partner"))
-    arms = e.select(
-        F.explode(
-            F.when(F.col("a") != F.col("b"), F.array(fwd, rev))
-            .otherwise(F.array(fwd))
-        ).alias("x"),
-        "w",
-    ).select("x.entity", "x.partner", "w")
-    return arms.groupBy("entity").agg(
-        F.count("*").cast("long").alias("degree"),
-        F.sum("w").cast("double").alias("total_weight"),
-    )
-
-
-_df_query("kg_entity_degree", _kg_entity_degree_spark, _kg_entity_degree_sql(DUCK))
-
-
-def _kg_span_render_sql(d: Dialect) -> str:
-    """Span interleaving contract check at driver scale: number of media
-    spans + rendered text length derived from the same hash in both
-    engines (full byte-equality is pytest-gated; FIXTURES.md §1)."""
-    t2 = derive.text2_sql(d)
-    h = d.h60("cast(doc_id as string)")
-    return (
-        f"SELECT doc_id, "
-        f"CASE cast({h} % 4 as int) WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 1 ELSE 2 END "
-        f"AS n_media, "
-        f"CAST(length({t2}) + 1 AS BIGINT) AS text_len "
-        f"FROM documents"
-    )
-
-
-_sql_query("kg_span_render", _kg_span_render_sql)
-
-
 # ===========================================================================
-# Taggers / text analysis (SURVEY.md §2.3 + training-data ops)
+# Deduplication (training-data ops; minhash-LSH + jaccard verify)
 # ===========================================================================
-
-def _tag_word_count_sql(d: Dialect) -> str:
-    """words_counter tagger: len(text.split()) (tagger/words.py:4-11)."""
-    words = "split(text, ' ')" if d.is_spark else "string_split(text, ' ')"
-    return (
-        f"SELECT doc_id, CAST({d.arr_len(words)} AS BIGINT) AS word_count, "
-        f"CAST(length(text) AS BIGINT) AS char_count FROM documents"
-    )
-
-
-_sql_query("tag_word_count", _tag_word_count_sql)
-
-
-def _tag_hash_sql(d: Dialect) -> str:
-    """TextHash tagger: md5 of text (tagger/hash.py:6-15)."""
-    return "SELECT doc_id, md5(text) AS text_md5 FROM documents"
-
-
-_sql_query("tag_hash", _tag_hash_sql)
-
-
-def _tag_token_stats_sql(d: Dialect) -> str:
-    """BPE-ish token counting: alnum token runs + distinct tokens."""
-    toks = d.rx_all("text", "[a-z0-9]+")
-    uniq = (
-        f"size(array_distinct({toks}))" if d.is_spark else f"len(list_distinct({toks}))"
-    )
-    return (
-        f"SELECT doc_id, CAST({d.arr_len(toks)} AS BIGINT) AS n_tokens, "
-        f"CAST({uniq} AS BIGINT) AS n_distinct_tokens FROM documents"
-    )
-
-
-_sql_query("tag_token_stats", _tag_token_stats_sql)
-
-
-def _tag_quality_sql(d: Dialect) -> str:
-    """Quality scoring: mean word length + stopword ratio (gopher/c4-style
-    signals, datatrove_wrapper.py:27-40 family) — rounded doubles."""
-    if d.is_spark:
-        words = "split(text, ' ')"
-        stop = "size(filter(split(text, ' '), __w -> __w IN ('the', 'a')))"
-    else:
-        words = "string_split(text, ' ')"
-        stop = "len(list_filter(string_split(text, ' '), __w -> __w IN ('the', 'a')))"
-    n = d.arr_len(words)
-    return (
-        f"SELECT doc_id, "
-        f"CAST(round(((length(text) + 1.0) / {n} - 1.0) * 1000000, 0) AS BIGINT) "
-        f"AS mean_word_len_e6, "
-        f"CAST(round(({stop} * 1.0 / {n}) * 1000000, 0) AS BIGINT) AS stopword_ratio_e6 "
-        f"FROM documents"
-    )
-
-
-_sql_query("tag_quality", _tag_quality_sql)
-
-
-def _tag_lang_guess_sql(d: Dialect) -> str:
-    """lang_detector stand-in: stopword-ratio heuristic
-    (tagger/lang_detector.py:7-18 — real langdetect is a pandas-UDF path;
-    the oracle-checkable version is the native heuristic)."""
-    if d.is_spark:
-        stop = "size(filter(split(text, ' '), __w -> __w IN ('the', 'a')))"
-        n = "size(split(text, ' '))"
-    else:
-        stop = "len(list_filter(string_split(text, ' '), __w -> __w IN ('the', 'a')))"
-        n = "len(string_split(text, ' '))"
-    return (
-        f"SELECT doc_id, CASE WHEN {stop} * 1.0 / {n} >= 0.03 THEN 'en' "
-        f"ELSE 'unknown' END AS lang_guess FROM documents"
-    )
-
-
-_sql_query("tag_lang_guess", _tag_lang_guess_sql)
-
-
-def _tag_fingerprint_sql(d: Dialect) -> str:
-    """Document fingerprint: min 60-bit hash over word 3-shingles (rolling-
-    hash family; the single-permutation MinHash)."""
-    if d.is_spark:
-        # let-bind the word array via a 1-element outer transform:
-        # element_at(split(text), __i) INSIDE the lambda would re-split the
-        # document per shingle (O(words²) — no CSE across lambda bounds)
-        n = "size(split(text, ' '))"
-        shingle = (
-            "flatten(transform(array(split(text, ' ')), __ws -> "
-            "transform(sequence(1, size(__ws) - 2), __i -> "
-            "concat(element_at(__ws, __i), ' ', element_at(__ws, __i + 1), "
-            "' ', element_at(__ws, __i + 2)))))"
-        )
-        mins = f"array_min(transform({shingle}, __s -> {d.h60('__s')}))"
-    else:
-        words = "string_split(text, ' ')"
-        n = f"len({words})"
-        shingle = (
-            f"list_transform(range(1, {n} - 1), __i -> "
-            f"concat(list_element({words}, __i), ' ', list_element({words}, __i + 1), "
-            f"' ', list_element({words}, __i + 2)))"
-        )
-        mins = f"list_min(list_transform({shingle}, __s -> {d.h60('__s')}))"
-    return (
-        f"SELECT doc_id, CASE WHEN {n} >= 3 THEN {mins} ELSE {d.h60('text')} END "
-        f"AS fingerprint FROM documents"
-    )
-
-
-_sql_query("tag_fingerprint", _tag_fingerprint_sql)
-
-
-# ===========================================================================
-# Deduplication (training-data ops; exact + minhash-LSH + jaccard verify)
-# ===========================================================================
-
-def _dedup_exact_sql(d: Dialect) -> str:
-    """Exact dedup via content hash groups (hash-groupBy)."""
-    return (
-        "SELECT md5(text) AS content_hash, CAST(count(*) AS BIGINT) AS n_docs, "
-        "min(doc_id) AS keep_doc_id FROM documents GROUP BY md5(text) HAVING count(*) > 1"
-    )
-
-
-_sql_query("dedup_exact", _dedup_exact_sql)
 
 _DEDUP_NPERM = 8
 _DEDUP_BAND_R = 2  # rows per band → 4 bands; P(collide) = 1-(1-J^2)^4
 
 
-def _shingles_sql(d: Dialect) -> str:
-    if d.is_spark:
-        words = "split(text, ' ')"
-        n = f"size({words})"
-        return (
-            f"transform(sequence(1, greatest({n} - 2, 1)), __i -> "
-            f"concat(try_element_at({words}, __i), ' ', "
-            f"coalesce(try_element_at({words}, __i + 1), ''), ' ', "
-            f"coalesce(try_element_at({words}, __i + 2), '')))"
-        )
+def _shingles_sql() -> str:
     words = "string_split(text, ' ')"
     n = f"len({words})"
     return (
@@ -456,34 +108,32 @@ def _shingles_sql(d: Dialect) -> str:
     )
 
 
-def _minv_sql(d: Dialect, shingles: str, perm: int) -> str:
-    seeded = d.h60(f"concat(__s, '#mh{perm}')")
-    fn = "transform" if d.is_spark else "list_transform"
-    mn = "array_min" if d.is_spark else "list_min"
-    return f"{mn}({fn}({shingles}, __s -> {seeded}))"
+def _minv_sql(shingles: str, perm: int) -> str:
+    seeded = DUCK.h60(f"concat(__s, '#mh{perm}')")
+    return f"list_min(list_transform({shingles}, __s -> {seeded}))"
 
 
-def _band_arms_sql(d: Dialect, src: str = "documents") -> str:
+def _band_arms_sql(src: str = "documents") -> str:
     """Per-doc BANDED signature rows (doc_id, band, bh): band hash = h60 of
     the concatenated r=2 min-hashes.  Banding is what keeps LSH sub-
     quadratic on corpora where everything shares common shingles: per-band
     collision probability is J^r, so weakly-similar pairs (J≈0.05) almost
     never collide while true near-dups (J≥0.8) hit ≥1 of 4 bands w.p. .98."""
-    sh = _shingles_sql(d)
+    sh = _shingles_sql()
     arms = []
     n_bands = _DEDUP_NPERM // _DEDUP_BAND_R
     for b in range(n_bands):
-        m0 = _minv_sql(d, sh, 2 * b)
-        m1 = _minv_sql(d, sh, 2 * b + 1)
-        bh = d.h60(f"concat(cast({m0} as string), ':', cast({m1} as string))")
+        m0 = _minv_sql(sh, 2 * b)
+        m1 = _minv_sql(sh, 2 * b + 1)
+        bh = DUCK.h60(f"concat(cast({m0} as string), ':', cast({m1} as string))")
         arms.append(f"SELECT doc_id, {b} AS band, {bh} AS bh FROM {src}")
     return "\nUNION ALL\n".join(arms)
 
 
-def _dedup_minhash_pairs_sql(d: Dialect) -> str:
+def _dedup_minhash_pairs_sql() -> str:
     """MinHash-LSH near-dup candidate pairs: docs sharing ≥1 banded key
     (shingle→minhash→band→bucket-join — the 100 TB dedup path)."""
-    sig = _band_arms_sql(d)
+    sig = _band_arms_sql()
     return (
         f"WITH sig AS (\n{sig}\n)\n"
         "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
@@ -521,22 +171,17 @@ def _dedup_minhash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs
 
 
-_df_query("dedup_minhash_pairs", _dedup_minhash_spark, _dedup_minhash_pairs_sql(DUCK))
+_df_query("dedup_minhash_pairs", _dedup_minhash_spark, _dedup_minhash_pairs_sql())
 
 
-def _dedup_jaccard_sql(d: Dialect) -> str:
+def _dedup_jaccard_sql() -> str:
     """Near-dup verification: exact word-set Jaccard ≥ 0.8 on the LSH
     candidate pairs (n-gram Jaccard family) — blocking keeps the pair
     space linear-ish; the exact check runs only on candidates."""
-    pairs = _dedup_minhash_pairs_sql(d)
-    if d.is_spark:
-        inter = "size(array_intersect(wa, wb))"
-        union = "size(array_union(wa, wb))"
-        wd = "array_distinct(split(text, ' '))"
-    else:
-        inter = "len(list_intersect(wa, wb))"
-        union = "len(list_distinct(list_concat(wa, wb)))"
-        wd = "list_distinct(string_split(text, ' '))"
+    pairs = _dedup_minhash_pairs_sql()
+    inter = "len(list_intersect(wa, wb))"
+    union = "len(list_distinct(list_concat(wa, wb)))"
+    wd = "list_distinct(string_split(text, ' '))"
     return (
         f"WITH cand AS (\n{pairs}\n),\n"
         f"w AS (SELECT doc_id, {wd} AS ws FROM documents),\n"
@@ -582,124 +227,14 @@ def _dedup_jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select("doc_a", "doc_b", "jaccard_e6")
 
 
-_df_query("dedup_jaccard_pairs", _dedup_jaccard_spark, _dedup_jaccard_sql(DUCK))
+_df_query("dedup_jaccard_pairs", _dedup_jaccard_spark, _dedup_jaccard_sql())
 
 
 # ===========================================================================
-# Similarity search (embeddings table)
+# Embedding near-dup groups (embeddings table)
 # ===========================================================================
-
-def _sim_topk_sql(d: Dialect) -> str:
-    """Brute-force cosine top-3 per query vector (ANN baseline).  Rank by
-    rounded similarity (engine float paths differ in ulps) with vec_id
-    tie-break — deterministic on both sides."""
-    if d.is_spark:
-        dot = ("aggregate(zip_with(qe, e.embedding, (__x, __y) -> "
-               "cast(__x as double) * cast(__y as double)), cast(0.0 as double), "
-               "(__a, __b) -> __a + __b)")
-        qnorm = ("sqrt(aggregate(qe, cast(0.0 as double), "
-                 "(__a, __x) -> __a + cast(__x as double) * cast(__x as double)))")
-        enorm = ("sqrt(aggregate(e.embedding, cast(0.0 as double), "
-                 "(__a, __x) -> __a + cast(__x as double) * cast(__x as double)))")
-    else:
-        dd = "list_transform(qe, __x -> CAST(__x AS DOUBLE))"
-        de = "list_transform(e.embedding, __x -> CAST(__x AS DOUBLE))"
-        dot = f"list_dot_product({dd}, {de})"
-        qnorm = f"sqrt(list_dot_product({dd}, {dd}))"
-        enorm = f"sqrt(list_dot_product({de}, {de}))"
-    return (
-        "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5),\n"
-        f"c AS (SELECT q.qid, e.vec_id AS nid, "
-        f"round({dot} / ({qnorm} * {enorm}), 4) AS sim "
-        f"FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.qid)\n"
-        "SELECT qid, nid, CAST(rnk AS BIGINT) AS rnk FROM ("
-        "SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk "
-        "FROM c) r WHERE rnk <= 3"
-    )
-
-
-_sql_query("sim_topk_cosine", _sim_topk_sql)
-
 
 _ANN_DIM = 64
-_ANN_PLANES = 6
-
-
-def _hyperplanes() -> list[list[int]]:
-    """Deterministic ±1 random hyperplanes from the md5 family — computed
-    at SQL-generation time, embedded as literals in BOTH dialects."""
-    from .hashing import h60_py
-
-    return [
-        [1 if h60_py(f"rp{p}:{i}") % 2 == 0 else -1 for i in range(_ANN_DIM)]
-        for p in range(_ANN_PLANES)
-    ]
-
-
-def _sim_ann_lsh_sql(d: Dialect) -> str:
-    """Random-hyperplane LSH bucketing (the ANN scale path): bucket id =
-    sign bits of 6 fixed ±1 projections.  At 100 TB the bucket id is the
-    shuffle key — candidates only ever join within a bucket."""
-    planes = _hyperplanes()
-    bits = []
-    for p, plane in enumerate(planes):
-        lits = ", ".join(str(v) for v in plane)
-        if d.is_spark:
-            dot = (
-                f"aggregate(zip_with(embedding, array({lits}), "
-                f"(__e{p}, __w{p}) -> cast(__e{p} as double) * __w{p}), "
-                f"cast(0.0 as double), (__a{p}, __b{p}) -> __a{p} + __b{p})"
-            )
-        else:
-            dot = (
-                f"list_dot_product(list_transform(embedding, __e{p} -> "
-                f"CAST(__e{p} AS DOUBLE)), [{lits}])"
-            )
-        bits.append(f"(CASE WHEN {dot} >= 0 THEN {1 << p} ELSE 0 END)")
-    bucket = " + ".join(bits)
-    return (
-        f"SELECT vec_id, CAST({bucket} AS BIGINT) AS bucket FROM embeddings"
-    )
-
-
-_sql_query("sim_ann_lsh_buckets", _sim_ann_lsh_sql)
-
-
-def _sim_ann_pairs_sql(d: Dialect) -> str:
-    """ANN via LSH buckets: same-bucket pairs with rounded cosine ≥ 0.5 —
-    the bucketed variant of sim_topk_cosine (restricted to vec_id < 200
-    so both engines compare a stable small set)."""
-    buckets = _sim_ann_lsh_sql(d)
-    if d.is_spark:
-        dcast = "transform(%s, __c -> cast(__c as double))"
-        dot = ("aggregate(zip_with(ea, eb, (__x2, __y2) -> __x2 * __y2), "
-               "cast(0.0 as double), (__a2, __b2) -> __a2 + __b2)")
-        norm = lambda side: (  # noqa: E731
-            f"sqrt(aggregate({side}, cast(0.0 as double), "
-            f"(__n{side[-1]}, __v{side[-1]}) -> __n{side[-1]} + __v{side[-1]} * __v{side[-1]}))")
-    else:
-        dcast = "list_transform(%s, __c -> CAST(__c AS DOUBLE))"
-        dot = "list_dot_product(ea, eb)"
-        norm = lambda side: f"sqrt(list_dot_product({side}, {side}))"  # noqa: E731
-    ea = dcast % "a.embedding"
-    eb = dcast % "b.embedding"
-    norm_a, norm_b = norm("ea"), norm("eb")
-    sim = f"round({dot} / ({norm_a} * {norm_b}), 4)"
-    sim_e4 = f"CAST(round({dot} * 10000 / ({norm_a} * {norm_b}), 0) AS BIGINT)"
-    return (
-        f"WITH bk AS ({buckets}),\n"
-        f"pairs AS (SELECT x.vec_id AS va, y.vec_id AS vb FROM bk x JOIN bk y "
-        f"ON x.bucket = y.bucket AND x.vec_id < y.vec_id "
-        f"WHERE x.vec_id < 200 AND y.vec_id < 200),\n"
-        f"j AS (SELECT va, vb, {ea} AS ea, {eb} AS eb FROM pairs "
-        f"JOIN embeddings a ON pairs.va = a.vec_id "
-        f"JOIN embeddings b ON pairs.vb = b.vec_id)\n"
-        f"SELECT va, vb, {sim_e4} AS cos_sim_e4 FROM j WHERE {sim} >= 0.2"
-    )
-
-
-_sql_query("sim_ann_lsh_pairs", _sim_ann_pairs_sql)
-
 _EMB_TABLES = 4   # OR-amplification: L independent hash tables …
 _EMB_PLANES = 3   # … of k hyperplanes each; P(candidate) = 1-(1-c^k)^L
 
@@ -851,222 +386,10 @@ _df_query("dedup_embedding_groups", _dedup_embedding_groups_spark,
           _dedup_embedding_groups_duck())
 
 
-_SIMHASH_BITS = 16
-
-
-def _dedup_simhash_sql(d: Dialect) -> str:
-    """SimHash document fingerprint: bit b of the hash = sign of the sum
-    over words of ±1 according to bit b of the word's 60-bit hash."""
-    if d.is_spark:
-        words = "split(text, ' ')"
-        word_h = "transform(%s, __w3 -> %s)" % (words, d.h60("__w3"))
-        bit_sum = (
-            "aggregate(wh, 0, (__acc, __h3) -> __acc + "
-            "(CASE WHEN (__h3 div {pw}) % 2 = 1 THEN 1 ELSE -1 END))"
-        )
-    else:
-        words = "string_split(text, ' ')"
-        word_h = "list_transform(%s, __w3 -> %s)" % (words, d.h60("__w3"))
-        bit_sum = (
-            "list_sum(list_transform(wh, __h3 -> "
-            "(CASE WHEN (__h3 // {pw}) % 2 = 1 THEN 1 ELSE -1 END)))"
-        )
-    terms = []
-    for b in range(_SIMHASH_BITS):
-        s = bit_sum.format(pw=1 << b)
-        terms.append(f"(CASE WHEN {s} > 0 THEN {1 << b} ELSE 0 END)")
-    total = " + ".join(terms)
-    return (
-        f"SELECT doc_id, CAST({total} AS BIGINT) AS simhash "
-        f"FROM (SELECT doc_id, {word_h} AS wh FROM documents) t"
-    )
-
-
-_sql_query("dedup_simhash", _dedup_simhash_sql)
-
-
-# ===========================================================================
-# Relational / lifecycle operators (SURVEY.md §2.8-2.9) over events/orders
-# ===========================================================================
-
-def _rel_latest_wins_sql(d: Dialect) -> str:
-    """Latest-wins dedup: previous results keyed by path keep max
-    processed_at (incremental.py:24-48) — here: latest event per user."""
-    return (
-        "SELECT user_id, event_id, event_type, value FROM ("
-        "SELECT user_id, event_id, event_type, value, "
-        "row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn "
-        "FROM events) t WHERE rn = 1"
-    )
-
-
-_sql_query("rel_latest_wins", _rel_latest_wins_sql)
-
-
-def _rel_incremental_anti_sql(d: Dialect) -> str:
-    """Incremental change detection: crawled − previously-processed →
-    to-process (run_process.py:147-177, left_anti semantics).  'Previous
-    snapshot' = every third event id."""
-    return (
-        "SELECT e.event_id, e.user_id, e.event_type FROM events e "
-        "WHERE NOT EXISTS (SELECT 1 FROM events p "
-        "WHERE p.event_id % 3 = 0 AND p.event_id = e.event_id)"
-    )
-
-
-_sql_query("rel_incremental_anti", _rel_incremental_anti_sql)
-
-
-def _rel_semi_filter_sql(d: Dialect) -> str:
-    """Candidate-doc restriction: semi-join vs a small id set
-    (retriever.py:174-178 `document_id in [...]`) — orders of the 10
-    richest customers."""
-    return (
-        "SELECT o.o_orderkey, o.o_custkey, o.o_totalprice FROM orders o "
-        "WHERE EXISTS (SELECT 1 FROM ("
-        "SELECT c_custkey FROM customer ORDER BY c_acctbal DESC, c_custkey LIMIT 10) t "
-        "WHERE t.c_custkey = o.o_custkey)"
-    )
-
-
-_sql_query("rel_semi_filter", _rel_semi_filter_sql)
-
-
-def _rel_union_merge_sql(d: Dialect) -> str:
-    """Merged-results union: per-processor outputs concatenated
-    (run_process.py:56-81) — two disjoint splits unioned, per-type counts."""
-    return (
-        "SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM ("
-        "SELECT event_id, event_type FROM events WHERE event_id % 2 = 0 "
-        "UNION ALL SELECT event_id, event_type FROM events WHERE event_id % 2 = 1) u "
-        "GROUP BY event_type"
-    )
-
-
-_sql_query("rel_union_merge", _rel_union_merge_sql)
-
-
-def _rel_topk_fusion_sql(d: Dialect) -> str:
-    """Top-k with weighted score fusion (retriever.py:182-236
-    WeightedRanker): 0.7·value + 0.3·hash-derived score, top-10 per type."""
-    h = d.h60("cast(event_id as string)")
-    return (
-        f"SELECT event_type, event_id, score_e6 FROM ("
-        f"SELECT event_type, event_id, "
-        f"CAST(round((0.7 * value + 0.3 * (({h} % 1000) / 1000.0)) * 1000000, 0) AS BIGINT) "
-        f"AS score_e6, "
-        f"row_number() OVER (PARTITION BY event_type ORDER BY "
-        f"round(0.7 * value + 0.3 * (({h} % 1000) / 1000.0), 6) DESC, event_id) AS rn "
-        f"FROM events) t WHERE rn <= 10"
-    )
-
-
-_sql_query("rel_topk_fusion", _rel_topk_fusion_sql)
-
-
-def _rel_sessions_sql(d: Dialect) -> str:
-    """Event sessionization: a session break is a >30-minute gap per user
-    (gap-based windows via lag; stateful-streaming semantics expressed as
-    a batch window program).  Returns per-session aggregates."""
-    return (
-        "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, CAST(count(*) AS BIGINT) AS n_events, "
-        "CAST(round(sum(value) * 10000, 0) AS BIGINT) AS session_value_e4 "
-        "FROM ("
-        "  SELECT user_id, value, "
-        "  sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id "
-        "  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id "
-        "  FROM ("
-        "    SELECT user_id, ts, event_id, value, "
-        "    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) "
-        "    IS NULL THEN 1 WHEN CAST(ts AS TIMESTAMP) > "
-        "    CAST(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) "
-        "    AS TIMESTAMP) + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS is_new "
-        "    FROM events) g"
-        ") s GROUP BY user_id, session_id"
-    )
-
-
-_sql_query("rel_sessions", _rel_sessions_sql)
-
-
-def _rel_rollup_sql(d: Dialect) -> str:
-    """Hierarchical rollup: per (event_type, user bucket) with subtotals
-    (GROUP BY ROLLUP — grouping-set machinery)."""
-    stype = "string" if d.is_spark else "VARCHAR"
-    return (
-        f"SELECT coalesce(event_type, '<ALL>') AS event_type, "
-        f"coalesce(CAST(user_id % 10 AS {stype}), '<ALL>') AS user_bucket, "
-        f"CAST(count(*) AS BIGINT) AS n, "
-        f"CAST(round(sum(value) * 10000, 0) AS BIGINT) AS total_value_e4 "
-        f"FROM events GROUP BY ROLLUP (event_type, (user_id % 10))"
-    )
-
-
-_sql_query("rel_rollup", _rel_rollup_sql)
-
-
-def _kg_cooccurrence_sql(d: Dialect) -> str:
-    """Entity co-occurrence graph: pairs of entities mentioned in the same
-    document with doc counts (the raw signal behind edge weighting)."""
-    mentions = _kg_mentions_sql(d)
-    return (
-        f"WITH m AS (\n{mentions}\n)\n"
-        "SELECT a.entity_name AS ent_a, b.entity_name AS ent_b, "
-        "CAST(count(DISTINCT a.doc_id) AS BIGINT) AS n_docs "
-        "FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.entity_name < b.entity_name "
-        "GROUP BY 1, 2"
-    )
-
-
-def _kg_cooccurrence_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark plan: ONE extraction scan (VERDICT r01 "what's wrong" #1 —
-    the SQL twin's 24 UNION arms each re-scan documents; it remains the
-    DuckDB oracle only).  Per-doc sorted distinct mention set → native
-    ordered-pair explode (no self-join: the per-doc set is tiny, and the
-    pair space shuffles once on the pair key)."""
-    # r6: build the per-doc name set straight from the triples (subj+obj
-    # arrays flattened + deduped) instead of going through the distinct-ed
-    # mentions frame — the name set per doc is identical (types play no
-    # role here) and this drops two shuffles (mentions distinct + its
-    # explode) from the plan: triples → groupBy(doc_id) → pair explode →
-    # groupBy(pair).  n_docs uses count(*) instead of count_distinct:
-    # each doc contributes each ordered pair at most once by construction
-    # (pairs come from a per-doc deduplicated sorted set), so the counts
-    # are equal and the distinct-aggregate expand pass disappears.
-    t = _kg_triples_spark(spark, sf_dir)
-    per_doc = t.groupBy("doc_id").agg(
-        F.sort_array(F.array_distinct(F.flatten(
-            F.collect_list(F.array("subj", "obj"))))).alias("ns")
-    )
-    # Two-stage explode (VERDICT r05 nit #3): the old single nested
-    # transform built ALL k(k-1)/2 pair structs of a doc inside ONE array
-    # cell — O(k²) memory in a single row, unbounded for a mega-doc with
-    # 10⁴ distinct mentions.  Exploding the left element first and slicing
-    # per row keeps every materialized array O(k) while the pair multiset
-    # (and therefore the aggregate) is identical; the rows stream through
-    # the pipelined generates instead of ballooning one buffer.
-    lhs = per_doc.select("doc_id", "ns", F.posexplode("ns").alias("__ci", "__cx"))
-    pairs = lhs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(ns, __ci + 2, size(ns)), __cy -> "
-                "struct(__cx AS ent_a, __cy AS ent_b))"
-            )
-        ).alias("p"),
-    )
-    return pairs.groupBy(
-        F.col("p.ent_a").alias("ent_a"), F.col("p.ent_b").alias("ent_b")
-    ).agg(F.count("*").cast("long").alias("n_docs"))
-
-
-_df_query("kg_cooccurrence", _kg_cooccurrence_spark, _kg_cooccurrence_sql(DUCK))
-
-
 def _dedup_groups_duck() -> str:
     """Oracle: transitive closure of jaccard-verified near-dup pairs via a
     recursive CTE → dedup groups with an elected keeper (min doc_id)."""
-    pairs = _dedup_jaccard_sql(DUCK)
+    pairs = _dedup_jaccard_sql()
     return f"""
 WITH RECURSIVE
 p AS ({pairs}),
@@ -1110,64 +433,6 @@ def _dedup_groups_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _df_query("dedup_groups", _dedup_groups_spark, _dedup_groups_duck())
-
-
-def _chunk_word_sql(d: Dialect) -> str:
-    """Chunker partitioning semantics: 64-word chunks per doc →
-    (doc_id, chunk_idx, n_tokens) (chunker/multimodal.py:187-245 family;
-    full table-aware chunker is the pandas-UDF path, pytest-gated)."""
-    if d.is_spark:
-        return (
-            "SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx, CAST(least(64, n - 64 * chunk_idx) AS BIGINT) "
-            "AS n_tokens FROM ("
-            "SELECT doc_id, size(split(text, ' ')) AS n FROM documents) t "
-            "LATERAL VIEW explode(sequence(0, cast(ceil(n / 64.0) as int) - 1)) x AS chunk_idx"
-        )
-    return (
-        "SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx, CAST(least(64, n - 64 * chunk_idx) AS BIGINT) "
-        "AS n_tokens FROM ("
-        "SELECT doc_id, n, unnest(range(0, CAST(ceil(n / 64.0) AS BIGINT))) AS chunk_idx "
-        "FROM (SELECT doc_id, len(string_split(text, ' ')) AS n FROM documents) b) t"
-    )
-
-
-_sql_query("chunk_word64", _chunk_word_sql)
-
-
-def _filter_kept_sql(d: Dialect) -> str:
-    """Quality-filter family (SURVEY.md §2.4) as one projection: per doc,
-    each gate's verdict + the first rejecting filter (exclusion-writer
-    contract) — gopher word-bounds, symbol ratio, c4 stopwords, url block,
-    deterministic sampler."""
-    if d.is_spark:
-        words = "split(text, ' ')"
-        stop_hits = "size(filter(split(text, ' '), __fw -> __fw IN ('the', 'a', 'of', 'to')))"
-    else:
-        words = "string_split(text, ' ')"
-        stop_hits = ("len(list_filter(string_split(text, ' '), "
-                     "__fw -> __fw IN ('the', 'a', 'of', 'to')))")
-    n = d.arr_len(words)
-    symbols = "length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))" if not d.is_spark \
-        else "length(regexp_replace(text, '[a-z0-9 ]', ''))"
-    gates = {
-        "gopher_words": f"({n} BETWEEN 5 AND 200000)",
-        "symbol_ratio": f"({symbols} * 1.0 / {n} <= 0.5)",
-        "c4_stopwords": f"({stop_hits} >= 1)",
-        "url_block": "(source NOT LIKE '%spam%')",
-        "sampler90": f"(({d.h60('cast(doc_id as string)', )} % 10) < 9)",
-    }
-    first_reject = "CASE " + " ".join(
-        f"WHEN NOT {cond} THEN '{name}'" for name, cond in gates.items()
-    ) + " ELSE NULL END"
-    keep = " AND ".join(gates.values())
-    verdicts = ", ".join(f"{cond} AS {name}" for name, cond in gates.items())
-    return (
-        f"SELECT doc_id, {verdicts}, ({keep}) AS kept, {first_reject} AS rejected_by "
-        f"FROM documents"
-    )
-
-
-_sql_query("filter_kept", _filter_kept_sql)
 
 
 # ===========================================================================
@@ -1556,52 +821,12 @@ GROUP BY doc_id
 _df_query("filter_unigram_logprob", _filter_unigram_spark, _filter_unigram_duck())
 
 
-def _kg_triangles_sql(d: Dialect) -> str:
-    """Graph analytic: entity triangles over the undirected co-mention
-    edge set (distinct unordered triple-extraction pairs) — classic
-    3-cycle join with a < b < c canonical orientation."""
-    inner = _kg_triples_sql(d)
-    return (
-        f"WITH t AS (SELECT * FROM (\n{inner}\n) __t),\n"
-        "e AS (SELECT DISTINCT least(subj, obj) AS a, greatest(subj, obj) AS b "
-        "FROM t WHERE subj <> obj)\n"
-        "SELECT e1.a AS ent_a, e1.b AS ent_b, e2.b AS ent_c "
-        "FROM e e1 JOIN e e2 ON e2.a = e1.b JOIN e e3 "
-        "ON e3.a = e1.a AND e3.b = e2.b"
-    )
-
-
-def _kg_triangles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark plan: one extraction scan → distinct oriented edge set →
-    two self-joins (the edge set is entity-dimension-scale; at corpus
-    scale the join keys are entity names — skew handled by the same
-    salting seam as the global merges if needed)."""
-    t = _kg_triples_spark(spark, sf_dir)
-    e = (
-        t.filter(F.col("subj") != F.col("obj"))
-        .select(F.least("subj", "obj").alias("a"), F.greatest("subj", "obj").alias("b"))
-        .distinct()
-        # the edge set feeds two self-joins — materialize once
-        .localCheckpoint()
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    return (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(e3, (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")))
-        .select(F.col("e1.a").alias("ent_a"), F.col("e1.b").alias("ent_b"),
-                F.col("e2.b").alias("ent_c"))
-    )
-
-
-_df_query("kg_triangles", _kg_triangles_spark, _kg_triangles_sql(DUCK))
-
-
-def _kg_spans_explode_sql(d: Dialect) -> str:
+def _kg_spans_explode_sql() -> str:
     """Full span-contract check at driver scale: the exploded
     (doc_id, offset, kind, text, media_ref) rows of the derived
     interleaved table, recomputed independently in each engine."""
-    t2 = derive.text2_sql(d)
-    h = d.h60("cast(doc_id as string)")
+    t2 = derive.text2_sql(DUCK)
+    h = DUCK.h60("cast(doc_id as string)")
     media = lambda k, i: (  # noqa: E731
         f"SELECT doc_id, {i} AS offset, '{k}' AS kind, CAST(NULL AS VARCHAR) AS text, "
         f"('media/' || cast(doc_id as string) || '/m-{0 if i == 0 else i - 1}.bin') AS media_ref "
@@ -1641,7 +866,7 @@ def _kg_spans_explode_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_df_query("kg_spans_explode", _kg_spans_explode_spark, _kg_spans_explode_sql(DUCK))
+_df_query("kg_spans_explode", _kg_spans_explode_spark, _kg_spans_explode_sql())
 
 
 def _er_match_duck(a: str, b: str) -> str:
@@ -1677,7 +902,7 @@ def _canon_ctes() -> str:
     Election mirrors canonicalize exactly: canonical name = most-mentioned
     then lex-min (rn); component type = most-mentioned name's type, ties →
     lexicographically greatest type (rt — linking.entities_table)."""
-    mentions = _kg_mentions_sql(DUCK)
+    mentions = _kg_mentions_sql()
     match = _er_match_duck("a.name", "b.name")
     return f"""
 m AS ({mentions}),
@@ -1729,13 +954,13 @@ FROM elect GROUP BY comp
 
 
 def _kg_linking_clusters_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark side: the REAL linking path — LSH blocking + pandas ER
-    verification + iterative connected components + election
-    (operators/linking.py) — value-checked against the all-pairs oracle."""
-    from .operators import linking
+    """Spark side: the REAL linking path — LSH blocking + ER verification
+    + connected components + election (operators/linking.py) over the
+    mentions of the real extractor (plans/pipeline.graph) — value-checked
+    against the all-pairs oracle."""
+    from .plans.pipeline import graph
 
-    mentions = _kg_mentions_spark(spark, sf_dir)
-    cmap = linking.canonicalize(mentions)
+    cmap = graph(derive.derived_documents(spark, sf_dir))["canonical_map"]
     return cmap.groupBy("component").agg(
         F.max_by("canonical_name", F.lit(1)).alias("canonical_name"),
         F.concat_ws(",", F.sort_array(F.collect_set("name"))).alias("members"),
@@ -1748,8 +973,8 @@ _df_query("kg_linking_clusters", _kg_linking_clusters_spark, _kg_linking_cluster
 
 
 # ===========================================================================
-# Full pipeline end-to-end (render → extract → link → rewrite → salted
-# global merge) — the flagship outputs, value-checked against the same
+# Full pipeline end-to-end (render → extract → link → rewrite → global
+# merge) — the flagship outputs, value-checked against the same
 # recursive-CTE canonicalization oracle extended through the rewrite +
 # merge (VERDICT r01 #1: these were the only rows-only entries).
 # ===========================================================================
@@ -1758,7 +983,7 @@ def _kg_pipeline_triples_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full pipeline → globally merged canonical triples.  Spark side runs
     the REAL operators: spans render, one-Arrow-stage extraction
     (operators/extract.py), LSH+ER+CC canonicalization (operators/
-    linking.py), broadcast rewrite, two-phase salted merge (operators/
+    linking.py), broadcast rewrite, one-groupBy global merge (operators/
     agg.py)."""
     from .operators.agg import merge_triples_global
     from .plans.pipeline import build_graph
@@ -1772,12 +997,12 @@ def _kg_pipeline_triples_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_pipeline_triples_duck() -> str:
-    """Oracle: per-doc extracted triples (kg_triples SQL) rewritten through
+    """Oracle: per-doc extracted triples (_kg_triples_sql) rewritten through
     the all-pairs canonical map, unordered-pair orientation, then the
     global merge semantics of agg.merge_triples_global (weight = summed
     per-record 1.0 quirk ⇒ row count; n_docs = supporting row count;
     preds = sorted distinct union)."""
-    triples = _kg_triples_sql(DUCK)
+    triples = _kg_triples_sql()
     return f"""
 WITH RECURSIVE
 {_canon_ctes()},
@@ -1859,10 +1084,10 @@ def _kg_triples_chunked_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_triples_chunked_duck() -> str:
-    """Oracle: doc-level flat extraction (kg_triples SQL) merged per doc
+    """Oracle: doc-level flat extraction (_kg_triples_sql) merged per doc
     with the parser's within-doc edge semantics: unordered pair, preds =
     sorted distinct union, weight = per-record 1.0 accumulation."""
-    triples = _kg_triples_sql(DUCK)
+    triples = _kg_triples_sql()
     return f"""
 WITH t AS (SELECT * FROM (\n{triples}\n) __t)
 SELECT doc_id, least(subj, obj) AS subj, greatest(subj, obj) AS obj,
@@ -2672,7 +1897,7 @@ def _dedup_minhash_capped_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_minhash_capped_duck() -> str:
-    arms = _band_arms_sql(DUCK, src="docs2")
+    arms = _band_arms_sql(src="docs2")
     return f"""
 WITH docs2 AS (
     SELECT doc_id, text FROM documents
@@ -2861,135 +2086,6 @@ FROM documents
 """)
 
 
-_PR_ITERS = 5
-_PR_DAMP = 0.85
-
-
-def _kg_pagerank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the undirected entity graph (graph-analytics layer
-    beside degree/cooccurrence/triangles): each undirected pair edge
-    becomes two directed edges, so every node has out-degree ≥ 1 (no
-    dangling mass).  Fixed {iters} iterations, damping {damp}; each
-    iteration is one join + groupBy over the edge set with a
-    localCheckpoint lineage cut (the twophase-CC pattern).  Scores are
-    rounded to 6 decimals on BOTH sides — rank updates involve division,
-    so raw doubles would differ across engines at ~1e-15."""
-    t = _kg_triples_spark(spark, sf_dir)
-    und = (
-        t.select(F.least("subj", "obj").alias("a"),
-                 F.greatest("subj", "obj").alias("b"))
-        .filter(F.col("a") != F.col("b")).distinct()
-    )
-    edges = und.select(F.col("a").alias("src"), F.col("b").alias("dst")) \
-        .unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst"))) \
-        .localCheckpoint()
-    ranks = pagerank_ranks(edges, iters=_PR_ITERS)
-    if ranks is None:  # no non-self edges: empty result, not ZeroDivision
-        return spark.createDataFrame(
-            [], "entity string, pagerank double")
-    return ranks.select(
-        F.col("node").alias("entity"),
-        F.round(F.col("rank"), 6).alias("pagerank"),
-    )
-
-
-def pagerank_ranks(edges: DataFrame, iters: int = _PR_ITERS,
-                   tol: float | None = None,
-                   damp: float = _PR_DAMP,
-                   metrics: dict | None = None) -> "DataFrame | None":
-    """(src, dst) directed edges → (node, rank).  ``tol=None`` runs
-    exactly ``iters`` iterations (the oracle-friendly mode: the SQL twin
-    unrolls the same count); with ``tol`` set, iteration stops early once
-    the L1 delta ``sum(|rank_t - rank_{t-1}|)`` drops under it (VERDICT
-    r04 #8) — on low-diameter graphs (stars) that converges in a couple
-    of rounds instead of paying all ``iters`` join+groupBy passes.  The
-    delta check reuses the localCheckpoint each round already takes, so
-    it costs one extra join+agg action per round, each over materialized
-    inputs.  Returns None for an empty graph; ``metrics["iterations"]``
-    records the executed count."""
-    nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    n = nodes.count()
-    if n == 0:
-        return None
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    contrib_base = edges.join(out_deg, "src")  # (src, dst, out_deg)
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint()
-    done = 0
-    for done in range(1, iters + 1):
-        inflow = (
-            contrib_base.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("_in"))
-        )
-        new_ranks = (
-            nodes.join(inflow.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (F.lit((1.0 - damp) / n)
-                 + F.lit(damp) * F.coalesce(F.col("_in"), F.lit(0.0)))
-                .alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        if tol is not None:
-            delta = (
-                new_ranks.join(
-                    ranks.withColumnRenamed("rank", "_prev"), "node")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
-    if metrics is not None:
-        metrics["iterations"] = done
-    return ranks
-
-
-_kg_pagerank_spark.__doc__ = _kg_pagerank_spark.__doc__.format(
-    iters=_PR_ITERS, damp=_PR_DAMP)
-
-
-def _kg_pagerank_duck() -> str:
-    inner = _kg_triples_sql(DUCK)
-    head = f"""
-WITH t AS (\n{inner}\n),
-und AS (
-    SELECT DISTINCT least(subj, obj) AS a, greatest(subj, obj) AS b
-    FROM t WHERE subj <> obj
-),
-edges AS (
-    SELECT a AS src, b AS dst FROM und
-    UNION ALL SELECT b, a FROM und
-),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-nn AS (SELECT count(*) AS n FROM nodes),
-deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY src),
-r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
-    steps = []
-    for k in range(1, _PR_ITERS + 1):
-        steps.append(f"""
-r{k} AS (
-    SELECT nd.node,
-           (1 - {_PR_DAMP}) / (SELECT n FROM nn)
-           + {_PR_DAMP} * COALESCE(s.inflow, 0) AS rank
-    FROM nodes nd LEFT JOIN (
-        SELECT e.dst AS node, sum(p.rank / d.out_deg) AS inflow
-        FROM edges e
-        JOIN r{k - 1} p ON p.node = e.src
-        JOIN deg d ON d.src = e.src
-        GROUP BY e.dst
-    ) s ON s.node = nd.node
-)""")
-    return (head + "," + ",".join(steps)
-            + f"\nSELECT node AS entity, round(rank, 6) AS pagerank FROM r{_PR_ITERS}")
-
-
-_df_query("kg_pagerank", _kg_pagerank_spark, _kg_pagerank_duck())
-
-
 def _tag_langid_nb_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trainable char-trigram Naive Bayes language ID under the oracle
     gate (operators/langid — the langdetect seam): train profiles on the
@@ -3066,28 +2162,3 @@ FROM ranked WHERE rk = 1
 
 
 _df_query("tag_langid_nb", _tag_langid_nb_spark, _tag_langid_nb_duck())
-
-
-# ===========================================================================
-# Driver-gate rotation (VERDICT r05, next-round item #1)
-# ===========================================================================
-# The driver's correctness gate runs the FIRST 50 registered rows
-# (CORRECTNESS_r05 keys == the registration-order prefix, verified).  16 of
-# the 66 rows had therefore never received a driver-green row — only local
-# check_oracle.py verification.  Rotate those 16 into the prefix and move 16
-# multiply-driver-green core rows (each ALSO re-exercised every round by the
-# frozen bench and the local sf0.001/sf0.01/sf0.1 sweeps) to the back.  Pure
-# re-ordering: same 66 names, same callables, same oracle SQL — bench.py and
-# the oracle fingerprints address queries by NAME and are unaffected.
-_ROTATE_BACK = [
-    "kg_span_render", "tag_word_count", "tag_hash", "tag_token_stats",
-    "tag_quality", "tag_lang_guess", "dedup_exact", "dedup_simhash",
-    "rel_incremental_anti", "rel_semi_filter", "rel_union_merge",
-    "rel_topk_fusion", "rel_sessions", "rel_rollup", "chunk_table_mode",
-    "chunk_multi_rows",
-]
-assert all(n in QUERIES for n in _ROTATE_BACK)
-QUERIES = {**{k: v for k, v in QUERIES.items() if k not in _ROTATE_BACK},
-           **{k: QUERIES[k] for k in _ROTATE_BACK}}
-# keep oracle_sql() in the same key order as queries() (texts untouched)
-ORACLE = {k: ORACLE[k] for k in QUERIES if k in ORACLE}

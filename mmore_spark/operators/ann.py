@@ -1,7 +1,6 @@
 """IVF approximate-nearest-neighbor over an embedding column — the
-coarse-quantizer scale path beside the hyperplane-LSH buckets
-(entryqueries sim_ann_lsh_buckets/pairs) and the brute-force
-sim_topk_cosine baseline.
+coarse-quantizer scale path beside exact brute-force cosine top-k (the
+baseline its tests measure recall against).
 
 Index: Spark ML KMeans (seeded) fits nlist centroids over the corpus
 vectors — a dimension-scale model (nlist × dim floats) that broadcasts.

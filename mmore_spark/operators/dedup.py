@@ -42,12 +42,7 @@ def minhash_band_signatures(df: DataFrame, text_col: str = "text",
     ONE Arrow-batched stage (hashlib md5 — byte-identical to
     hashing.h60_py and the SQL oracle twin; ~10× faster than Catalyst's
     interpreted nested higher-order functions for this many tiny calls).
-
-    Narrow scans are re-spread and checkpointed first: small single-row-
-    group files otherwise collapse the Arrow stage into one task (Catalyst
-    pushes projections below exchanges — see entryqueries NOTE).  Scans
-    that are already session-parallel skip both the shuffle and the
-    checkpoint (functions/scanspread.py, r6 guide §2.4)."""
+    Runs on the input's partitions; the signatures do not depend on them."""
     n_bands = n_perm // r
 
     def sig_batches(batches):
@@ -94,18 +89,7 @@ def minhash_band_signatures(df: DataFrame, text_col: str = "text",
         T.StructField("band", T.IntegerType()),
         T.StructField("bh", T.LongType()),
     ])
-    # Scale-adaptive spread (r6, guide §2.4): single small test files
-    # collapse the Arrow stage into one task, so narrow scans are
-    # round-robined + checkpointed exactly as before; a production scan
-    # that is already wide flows straight into the Arrow stage — no
-    # shuffle of the corpus text and no local-disk materialization.
-    from ..functions.scanspread import needs_spread
-
-    base = df.select("doc_id", F.col(text_col).alias(text_col))
-    if needs_spread(base):
-        base = base.repartition(
-            df.sparkSession.sparkContext.defaultParallelism).localCheckpoint()
-    return base.mapInPandas(sig_batches, schema=schema)
+    return df.select("doc_id", text_col).mapInPandas(sig_batches, schema=schema)
 
 
 def candidate_edges(sig: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:

@@ -5,8 +5,8 @@ Reference: taggers write ``metadata.extra[key] = value``
 registered set tagger/__init__.py:10-16.  Spark mapping: each tagger is a
 named Column expression — typed columns instead of an open dict (SURVEY.md
 §1.3: filterable, prunable).  All native; only lang-detect parity with the
-``langdetect`` lib would need a pandas UDF (the heuristic twin is native
-and oracle-checkable, entryqueries.tag_lang_guess).
+``langdetect`` lib would need a pandas UDF (``lang_heuristic`` is the
+native stopword-ratio stand-in).
 """
 
 from __future__ import annotations
@@ -76,7 +76,7 @@ def clean_text(text: str = "text") -> Column:
 
 def lang_heuristic(text: str = "text") -> Column:
     """Native language guess: English-stopword ratio ≥ 3% → 'en'
-    (the oracle-checkable twin of tag_lang_guess, entryqueries.py)."""
+    (a stand-in for the reference's langdetect tagger)."""
     words = F.split(F.col(text), " ")
     stop = F.size(F.filter(words, fresh(lambda lgw: lgw.isin("the", "a"))))
     return F.when(stop / F.size(words) >= 0.03, F.lit("en")).otherwise(

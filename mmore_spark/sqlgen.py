@@ -1,10 +1,10 @@
 """Tiny dual-dialect SQL fragment builder (Spark SQL / DuckDB).
 
-The driver's correctness gate runs every query twice — our Spark plan and
-an equivalent DuckDB oracle — and hash-compares values.  Most queries here
-are generated from ONE builder into both dialects, so the two sides are
-semantically identical by construction.  Only a handful of primitives
-differ between the engines:
+The corpus derivation (corpus/derive.py) and the DuckDB oracles of the
+driver queries (entryqueries.py) spell the same hash-derived expressions
+in both engines; the Spark spellings build the derived documents and a
+few operator inputs.  Only a handful of primitives differ between the
+engines:
 
     array literal      array('a','b')        vs  ['a','b']
     1-based indexing   element_at(a, i)      vs  list_element(a, i)

@@ -1,8 +1,7 @@
 """Custom stateful streaming operator (SURVEY.md §2.9): gap-based
 sessionization with ``applyInPandasWithState``.
 
-The batch twin is the rel_sessions driver query (entryqueries.py): a
-session break is a >gap-minute silence per user.  Streaming needs real
+A session break is a >gap-minute silence per user.  Streaming needs real
 state — a session can stay open across micro-batches (and across
 AvailableNow drains via the checkpoint), so the operator keeps
 (session_id, last_ts, n_events, value_sum) per user and EMITS a session
@@ -10,7 +9,7 @@ row only when a later event closes it by exceeding the gap.
 
 Scale shape: state is keyed by user_id (the shuffle key); each group's
 state is O(1); batches arrive unsorted so the function sorts its slice by
-(ts, event_id) — the same total order the batch twin uses.
+(ts, event_id), a total order, so sessions do not depend on arrival order.
 """
 
 from __future__ import annotations

@@ -180,44 +180,10 @@ def test_minhash_signatures_unchanged(spark):
             assert got[(doc_id, b)] == expect
 
 
-def test_spread_small_scan_is_scale_adaptive(spark, tmp_path):
-    """guide §2.4: the corpus round-robin spread must fire for narrow
-    scans (the sandbox's single-file tables) and vanish for scans that
-    are already wide — with identical results either way."""
-    from mmore_spark.functions.scanspread import (
-        estimated_scan_partitions, spread_small_scan)
-
-    parallelism = spark.sparkContext.defaultParallelism
-    n_files = 2 * parallelism  # strictly wider than the session
-    rows = [(i, f"word salad doc {i} alpha beta gamma")
-            for i in range(4 * n_files)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    single = str(tmp_path / "single.parquet")
-    multi = str(tmp_path / "multi.parquet")
-    df.coalesce(1).write.parquet(single)
-    df.repartition(n_files).write.parquet(multi)
-
-    narrow = spark.read.parquet(single)
-    wide = spark.read.parquet(multi)
-    assert estimated_scan_partitions(narrow) == 1
-    assert estimated_scan_partitions(wide) >= parallelism
-    # in-memory frames have no files -> keep the historical spread
-    assert estimated_scan_partitions(df) is None
-
-    def plan(frame):
-        return frame._jdf.queryExecution().executedPlan().toString()
-
-    spread_n = spread_small_scan(narrow)
-    spread_w = spread_small_scan(wide)
-    assert "RoundRobinPartitioning" in plan(spread_n)
-    assert "RoundRobinPartitioning" not in plan(spread_w)
-    assert sorted(map(tuple, spread_n.collect())) == sorted(map(tuple, spread_w.collect()))
-
-
 def test_minhash_signatures_equal_on_wide_scan(spark, tmp_path):
-    """The dedup signature stage must produce identical signatures whether
-    the input is a narrow scan (repartition+checkpoint path) or an
-    already-wide scan (shuffle-free path)."""
+    """The dedup signature stage runs on its input's partitions, so a
+    one-file scan and a many-file scan must produce identical
+    signatures."""
     from mmore_spark.operators import dedup
 
     n_files = 2 * spark.sparkContext.defaultParallelism
@@ -235,21 +201,3 @@ def test_minhash_signatures_equal_on_wide_scan(spark, tmp_path):
     b = sorted(map(tuple, dedup.minhash_band_signatures(
         spark.read.parquet(multi)).collect()))
     assert a == b and len(a) == n_docs * (dedup.N_PERMUTATIONS // dedup.BAND_ROWS)
-
-
-def test_scanspread_conf_size_parsing():
-    """Human-readable maxPartitionBytes forms ('256m', '1g') must parse as
-    real byte counts — digit-stripping '256m' to 256 bytes would inflate
-    the split estimate ~10^6x and wrongly classify narrow scans as wide."""
-    from mmore_spark.functions.scanspread import _DEFAULT_SPLIT_BYTES, _parse_bytes
-
-    assert _parse_bytes("134217728b") == 134217728
-    assert _parse_bytes("134217728") == 134217728
-    assert _parse_bytes("256m") == 256 * 1024 * 1024
-    assert _parse_bytes("256MB") == 256 * 1024 * 1024
-    assert _parse_bytes("1g") == 1024 ** 3
-    assert _parse_bytes("2k") == 2048
-    assert _parse_bytes("") is None
-    assert _parse_bytes("abc") is None
-    assert _parse_bytes("12parsecs") is None
-    assert _DEFAULT_SPLIT_BYTES == 128 * 1024 * 1024

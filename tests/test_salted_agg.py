@@ -49,19 +49,6 @@ def test_salted_merge_equals_plain(spark):
     assert hot[0] == 1000.0 and hot[2] == 1000
 
 
-def test_kg_triples_global_plan_no_docid_arrays(spark):
-    """VERDICT r03 #1: the bench query's n_docs must come from summed
-    per-salt-bucket count_distinct — a per-pair collect_set(doc_id) would
-    funnel a mega-hot pair's doc ids into ONE final reducer as an
-    unbounded array just to take its size."""
-    from mmore_spark import entryqueries as EQ
-
-    df = EQ.QUERIES["kg_triples_global"](spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "collect_set(doc_id" not in plan
-    assert "collect_list(_d" not in plan and "collect_set(_d" not in plan
-
-
 def test_salted_distinct_doc_count_exact_with_repeats(spark):
     """Repeats: one doc hitting the same pair through several rows, and
     the same predicate arriving from several docs.  ``n_docs`` counts

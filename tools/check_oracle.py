@@ -57,9 +57,6 @@ def main() -> int:
             print(f"FAIL  {name}: spark error {type(e).__name__}: {str(e)[:300]}")
             failures += 1
             continue
-        if name not in ORACLE:
-            print(f"skip  {name}: no oracle (rows={len(sdf)})")
-            continue
         try:
             odf = con.sql(ORACLE[name]).df()
         except Exception as e:
