@@ -192,5 +192,4 @@ def write_table(df: DataFrame, table: str,
                 "rows": spark.table(f"{catalog}.{table}").count()}
     from . import tables
 
-    return tables.write_table(df, _fallback_path(spark, table, catalog),
-                              stage=table, partition_by=None)
+    return tables.write_table(df, _fallback_path(spark, table, catalog), stage=table)

@@ -9,7 +9,7 @@ generation, snapshot-range incremental reads — is real and unit-tested in
 ``io/iceberg.py``; with the runtime present those statements drive the
 production tables.  The interface is format-agnostic: every write is ONE
 Spark job (the data write) and lands
-  * the data, partitioned by the declared columns,
+  * the data, unpartitioned, one file per write task,
   * ``_mmore_schema.json``, the frame's schema (an empty frame may write
     no part file, and schema inference on it fails),
   * the ``_MMORE_COMPLETE`` marker: stage, rows, bytes, wall_ms, one record
@@ -35,8 +35,6 @@ import time
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..functions.localrel import local_df
-
-ICEBERG_AVAILABLE = False  # flipped when an Iceberg catalog is configured
 
 
 def _marker(path: str) -> str:
@@ -106,37 +104,25 @@ def is_complete(path: str) -> bool:
 
 
 def _part_files(path: str) -> list[dict]:
-    """(file relative to ``path``, rows, bytes) of every data file of the
-    table, rows from its parquet footer.  Names starting with ``_`` or
-    ``.`` are skipped, as Spark's reader skips them."""
+    """(file name, rows, bytes) of every data file of the table, rows from
+    its parquet footer.  Names starting with ``_`` or ``.`` are skipped,
+    as Spark's reader skips them."""
     import pyarrow.parquet as pq
 
-    out = []
-    for root, dirs, names in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        for n in sorted(names):
-            if n.startswith(("_", ".")):
-                continue
-            full = os.path.join(root, n)
-            out.append({"file": os.path.relpath(full, path),
-                        "rows": pq.read_metadata(full).num_rows,
-                        "bytes": os.path.getsize(full)})
-    return out
+    return [{"file": n, "rows": pq.read_metadata(os.path.join(path, n)).num_rows,
+             "bytes": os.path.getsize(os.path.join(path, n))}
+            for n in sorted(os.listdir(path)) if not n.startswith(("_", "."))]
 
 
 def write_table(df: DataFrame, path: str, stage: str,
-                partition_by: list[str] | None = None,
-                mode: str = "overwrite", observe: list[Column] | None = None) -> dict:
+                observe: list[Column] | None = None) -> dict:
     """Write a stage output in one Spark job, then its schema and its
     completion marker; returns the marker's contents.  The values of the
     aliased ``observe`` aggregates, taken by the write itself, land in it
     under ``observed``."""
     t0 = time.time()
     obs = Observation()
-    writer = (df.observe(obs, *observe) if observe else df).write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    (df.observe(obs, *observe) if observe else df).write.mode("overwrite").parquet(path)
     # Spark caches file listings per path; an overwrite of a previously-read
     # location must invalidate them or later scans hit deleted files.
     df.sparkSession.catalog.refreshByPath(path)

@@ -22,18 +22,20 @@ exact-match linking.  This module adds the real thing, designed for
      driver (``_component_labels``) while the edge set fits, else
      large-star/small-star rounds (``connected_components``).
   4. **Canonical election** — per component, the most-mentioned surface
-     form wins (ties: lexicographic min).
-  5. **Rewrite** — triples' subj/obj mapped through the canonical map
-     (broadcast when dimension-sized; AQE otherwise), and the global
-     triple merge goes through two-phase SALTED aggregation
-     (operators/agg.py) because entity mentions are Zipf-skewed.
+     form wins (ties: lexicographic min); ``_elect`` on the driver.
+  5. **Rewrite** — triples' subj/obj mapped through the broadcast
+     canonical map; the global triple merge is one ``groupBy``
+     (operators/agg.py).
 
-Two executors share these definitions: below ``DRIVER_LINK_MAX_NAMES``
-distinct names ``_canonicalize_driver`` runs steps 1-4 in driver Python;
-above it Spark does (an Arrow signature stage, the capped bucket
-self-join of ``dedup.candidate_edges``, the verification UDF, CC and a
-window election).  Step 1's join key space is (perm × hash) — uniform by
-construction; step 3 shuffles only the edge set (distinct names only).
+Two executors run steps 1-3: below ``DRIVER_LINK_MAX_NAMES`` distinct
+names ``_canonicalize_driver`` runs them in driver Python; above it Spark
+does (an Arrow signature stage, the capped bucket self-join of
+``dedup.candidate_edges``, the verification UDF and CC).  Both hand their
+labelled names to the one election, ``_elect``, which returns the map as
+a local relation — the map has one row per name and crosses the driver
+anyway, as ``rewrite_triples`` broadcasts it.  Step 1's join key space is
+(perm × hash) — uniform by construction; step 3 shuffles only the edge
+set (distinct names only).
 """
 
 from __future__ import annotations
@@ -166,22 +168,20 @@ DRIVER_CC_MAX_EDGES = 2_000_000
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
                          max_iterations: int = MAX_CC_ITERATIONS,
-                         strategy: str = "auto",
                          metrics: dict | None = None) -> DataFrame:
     """nodes(name), edges(name_a, name_b) → (name, component) where
     component is the minimum 60-bit name hash in the component.
 
-    Strategies:
-      * ``driver`` — union-find on collected edges.  The name graph is
-        DIMENSION-scale (distinct entity names ≪ documents), so even a
-        10^12-doc corpus rarely exceeds a few 10^7 names; one collect +
-        one broadcast-able map replaces ~4 Spark jobs per iteration.
-      * ``twophase`` — alternating large-star/small-star rounds (Kiveris
-        et al., "Connected Components in MapReduce and Beyond"):
+    The edge count picks the executor (``metrics["strategy"]`` records it):
+      * ``driver`` — at most DRIVER_CC_MAX_EDGES edges: union-find on the
+        collected edges.  The name graph is DIMENSION-scale (distinct
+        entity names ≪ documents), so even a 10^12-doc corpus rarely
+        exceeds a few 10^7 names; one collect + one broadcast-able map
+        replaces ~4 Spark jobs per iteration.
+      * ``twophase`` — above it: alternating large-star/small-star rounds
+        (Kiveris et al., "Connected Components in MapReduce and Beyond"):
         converges in O(log n) rounds regardless of diameter — the shape
         that survives chain-like graphs a label-propagation loop cannot.
-      * ``auto`` (default) — driver path when the edge count is under
-        DRIVER_CC_MAX_EDGES, else twophase.
 
     A third strategy (min-label propagation) was retired in round 4: at
     2.4M edges it merely TIED twophase on its best-case shape (diameter-2
@@ -190,41 +190,31 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     labels a diameter-1023 chain in 10 rounds) — no niche where it wins
     (VERDICT r03 #6; measurement in BENCH/BASELINE.md).
 
-    All produce identical labels (min name-hash per component) — asserted
+    Both produce identical labels (min name-hash per component) — asserted
     by tests/test_linking.py.
     """
-    if strategy == "auto":
-        # bounded-limit count decides the strategy with 8 bytes on the
-        # driver (a limit+collect probe materialized up to
-        # DRIVER_CC_MAX_EDGES rows there even when twophase was then
-        # chosen — VERDICT r04 nit #2) AND early-terminates: counting
-        # limit(cap+1) stops after cap+1 rows instead of scanning an
-        # arbitrarily large edge set (a full count() cost ~30 s extra at
-        # 8.8M edges).  The persist keeps the single-ER-evaluation
-        # property — partitions the probe touches are cached, the rest
-        # compute once for whichever path consumes e.
-        e = edges.select("name_a", "name_b").persist()
-        try:
-            if e.limit(DRIVER_CC_MAX_EDGES + 1).count() <= DRIVER_CC_MAX_EDGES:
-                if metrics is not None:
-                    metrics["strategy"] = "driver"
-                # guard-ok: dimension-scale collect, gated by the count
-                return _connected_components_driver(nodes, e.collect())
+    # bounded-limit count decides the executor with 8 bytes on the driver
+    # (a limit+collect probe materialized up to DRIVER_CC_MAX_EDGES rows
+    # there even when twophase was then chosen — VERDICT r04 nit #2) AND
+    # early-terminates: counting limit(cap+1) stops after cap+1 rows
+    # instead of scanning an arbitrarily large edge set (a full count()
+    # cost ~30 s extra at 8.8M edges).  The persist keeps the single-ER-
+    # evaluation property — partitions the probe touches are cached, the
+    # rest compute once for whichever path consumes e.
+    e = edges.select("name_a", "name_b").persist()
+    try:
+        if e.limit(DRIVER_CC_MAX_EDGES + 1).count() <= DRIVER_CC_MAX_EDGES:
             if metrics is not None:
-                metrics["strategy"] = "twophase"
-            # twophase's first localCheckpoint is eager, so e is fully
-            # consumed before this returns and unpersist below is safe
-            return _connected_components_twophase(nodes, e, max_iterations,
-                                                  metrics)
-        finally:
-            e.unpersist()
-    if strategy == "driver":
-        # guard-ok: dimension-scale collect — distinct-name edges, not rows
-        return _connected_components_driver(
-            nodes, edges.select("name_a", "name_b").collect())
-    if strategy == "twophase":
-        return _connected_components_twophase(nodes, edges, max_iterations, metrics)
-    raise ValueError(f"unknown connected-components strategy: {strategy!r}")
+                metrics["strategy"] = "driver"
+            # guard-ok: dimension-scale collect, gated by the count
+            return _connected_components_driver(nodes, e.collect())
+        if metrics is not None:
+            metrics["strategy"] = "twophase"
+        # twophase's first localCheckpoint is eager, so e is fully
+        # consumed before this returns and unpersist below is safe
+        return _connected_components_twophase(nodes, e, max_iterations, metrics)
+    finally:
+        e.unpersist()
 
 
 def _component_labels(edges, names=()) -> dict[str, int]:
@@ -365,7 +355,7 @@ def _connected_components_twophase(nodes: DataFrame, edges: DataFrame,
 # names are dimension-scale (the module premise), and below this cap the
 # LSH + ER + CC + election sequence is a few ms of driver Python versus
 # ~8 sequential Spark jobs (sig materialization, bucket sizing broadcasts,
-# self-join, pandas-UDF verify, CC probe, election window) — measured ~3 s
+# self-join, pandas-UDF verify, CC probe, label collect) — measured ~3 s
 # of fixed latency at local[32].  Same philosophy as DRIVER_CC_MAX_EDGES
 # (VERDICT r04: the count-gated dimension-scale collect is the accepted
 # exception); the Spark path remains the >cap production path and pytest
@@ -378,17 +368,32 @@ DRIVER_LINK_MAX_NAMES = 20_000
 DRIVER_LINK_MAX_PAIRS = 5_000_000
 
 
+def _elect(spark, rows: list) -> DataFrame:
+    """(name, component, n_mentions, entity_type) rows → the canonical map
+    as a local relation.  Per component the most-mentioned name wins
+    (ties → lexicographically smallest); canonical_id is its h60."""
+    from ..functions.localrel import local_df
+
+    best: dict[int, tuple[int, str]] = {}
+    for name, comp, n, _ in rows:
+        best[comp] = min(best.get(comp, (-n, name)), (-n, name))
+    canon = {comp: (name, h60_py(name)) for comp, (_, name) in best.items()}
+    # rows grouped by component: the canonical columns then repeat in
+    # runs, which the written table's parquet encoding stores compactly
+    return local_df(spark, [(name, comp, *canon[comp], etype, n)
+                            for name, comp, n, etype in sorted(rows, key=lambda r: r[1])],
+                    "name string, component long, canonical_name string, "
+                    "canonical_id long, entity_type string, n_mentions long")
+
+
 def _canonicalize_driver(spark, rows, max_bucket: int = MAX_NAME_BUCKET,
                          max_pairs: int = DRIVER_LINK_MAX_PAIRS
                          ) -> "DataFrame | None":
     """The Spark linking path's definitions run on the driver over
     collected (name, n_mentions, entity_type) rows: ``_signature`` buckets
     with the star cap, ``names_match_py`` once per distinct candidate
-    pair, ``_component_labels``, and per component label the
-    most-mentioned-then-lex-min election.  Returns None (caller → Spark
-    path) if the candidate-pair set exceeds ``max_pairs``."""
-    from ..functions.localrel import local_df
-
+    pair, ``_component_labels``, then ``_elect``.  Returns None (caller →
+    Spark path) if the candidate-pair set exceeds ``max_pairs``."""
     stats = {r["name"]: (r["n_mentions"], r["entity_type"]) for r in rows}
     buckets: dict[tuple[int, int], list[str]] = {}
     for name in stats:
@@ -405,17 +410,7 @@ def _canonicalize_driver(spark, rows, max_bucket: int = MAX_NAME_BUCKET,
         if len(pairs) > max_pairs:
             return None
     labels = _component_labels(((a, b) for a, b in pairs if names_match_py(a, b)), stats)
-    components: dict[int, list[str]] = {}
-    for n, comp in labels.items():
-        components.setdefault(comp, []).append(n)
-    out = []
-    for comp, members in components.items():
-        canonical = min(members, key=lambda n: (-stats[n][0], n))
-        cid = h60_py(canonical)
-        out.extend((n, comp, canonical, cid, stats[n][1], stats[n][0]) for n in members)
-    schema = ("name string, component long, canonical_name string, "
-              "canonical_id long, entity_type string, n_mentions long")
-    return local_df(spark, out, schema)
+    return _elect(spark, [(n, comp, *stats[n]) for n, comp in labels.items()])
 
 
 def canonicalize(mentions: DataFrame, metrics: dict | None = None,
@@ -428,15 +423,15 @@ def canonicalize(mentions: DataFrame, metrics: dict | None = None,
     Canonical form = the most-mentioned surface name in the component
     (ties → lexicographically smallest); canonical_id = 60-bit hash of the
     canonical name.  The returned map has one row per distinct surface
-    name — dimension-sized, broadcastable downstream.  ``metrics``
+    name, as a local relation that rests on no cache or checkpoint: every
+    frame linking persisted is released before it returns.  ``metrics``
     (optional dict) receives the linking path taken (``path``: driver or
     spark) and, on the Spark path, the CC strategy chosen and its twophase
     round count — surfaced into pipeline lineage.
     """
-    from pyspark.sql import Window
-
     metrics = {} if metrics is None else metrics
-    counts_lazy = mentions.groupBy(F.col("entity_name").alias("name")).agg(
+    spark = mentions.sparkSession
+    counts = mentions.groupBy(F.col("entity_name").alias("name")).agg(
         F.count("*").alias("n_mentions"),
         # deterministic election: longest type wins, ties broken
         # lexicographically (a bare max_by ties arbitrarily, which would
@@ -449,42 +444,39 @@ def canonicalize(mentions: DataFrame, metrics: dict | None = None,
             ),
         ).alias("entity_type"),
     )
-    # ONE early-terminating probe job decides the strategy AND, below the
-    # cap, already holds every row the driver path needs — replacing the
-    # former localCheckpoint + count + collect sequence (3 jobs) on the
-    # common dimension-scale path (guard-ok: bounded by the limit).  The
-    # persist keeps the >cap path from aggregating the full mention set
-    # twice (probe partitions are cached; the rest compute once for the
-    # localCheckpoint below).
-    counts_lazy = counts_lazy.persist()
+    # ONE early-terminating probe job decides the path AND, below the cap,
+    # already holds every row the driver path needs (guard-ok: bounded by
+    # the limit).  The persist keeps the >cap path from aggregating the
+    # full mention set again: probe partitions are cached, the rest
+    # compute once, and the LSH self-join and CC read the cache.
+    counts = counts.persist()
     try:
-        probe = counts_lazy.limit(driver_max_names + 1).collect()
+        probe = counts.limit(driver_max_names + 1).collect()
         if len(probe) <= driver_max_names:
-            out = _canonicalize_driver(mentions.sparkSession, probe)
+            out = _canonicalize_driver(spark, probe)
             if out is not None:
                 metrics["path"] = "driver"
                 return out
-        # dimension-sized (distinct names); cut lineage so the LSH
-        # self-join and the CC loop don't re-aggregate the full mention
-        # set repeatedly
-        counts = counts_lazy.localCheckpoint()
+        metrics["path"] = "spark"
+        jsc = spark.sparkContext._jsc
+        held = set(jsc.getPersistentRDDs())
+        try:
+            names = counts.select("name")
+            comps = connected_components(names, match_edges(names), metrics=metrics)
+            # guard-ok: dimension-scale collect, one row per distinct name
+            # (rewrite_triples broadcasts the map anyway)
+            rows = counts.join(comps, "name").select(
+                "name", "component", "n_mentions", "entity_type").collect()
+        finally:
+            # the candidate pairs (dedup.candidate_edges) and the twophase
+            # rounds rest on local checkpoints the collected rows no longer need
+            rdds = jsc.getPersistentRDDs()
+            for rid in rdds:
+                if rid not in held and rdds[rid].isCheckpointed():
+                    rdds[rid].unpersist(False)
     finally:
-        counts_lazy.unpersist()
-    metrics["path"] = "spark"
-    edges = match_edges(counts.select("name"))
-    comps = connected_components(counts.select("name"), edges, metrics=metrics)
-    labeled = counts.join(comps, "name")
-    w = (
-        Window.partitionBy("component")
-        .orderBy(F.desc("n_mentions"), F.asc("name"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    elected = labeled.withColumn("canonical_name", F.first("name").over(w)).withColumn(
-        "canonical_id", h60(F.col("canonical_name"))
-    )
-    return elected.select(
-        "name", "component", "canonical_name", "canonical_id", "entity_type", "n_mentions"
-    )
+        counts.unpersist()
+    return _elect(spark, rows)
 
 
 def entities_table(canonical_map: DataFrame) -> DataFrame:

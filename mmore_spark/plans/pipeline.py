@@ -105,13 +105,6 @@ class StageResult:
     info: dict = field(default_factory=dict)  # stage-specific metrics
 
 
-def _checkpoints(spark: SparkSession) -> dict:
-    """RDD id → RDD of every checkpoint the context holds in storage (a
-    local checkpoint is a persisted RDD; a cached frame is not checkpointed)."""
-    rdds = spark.sparkContext._jsc.getPersistentRDDs()
-    return {k: rdds[k] for k in rdds if rdds[k].isCheckpointed()}
-
-
 @dataclass
 class KGPipeline:
     """Materializing, resumable pipeline over a warehouse directory."""
@@ -145,16 +138,8 @@ class KGPipeline:
 
     def run(self, documents: DataFrame) -> dict[str, DataFrame]:
         """Execute all stages (skipping completed ones) and return every
-        stage's frame.  Every stage reads its inputs back from the written
-        tables, so the local checkpoints linking leaves on its distributed
-        path are released when the run ends: no cached frame outlives it."""
-        before = _checkpoints(self.spark)
-        try:
-            return graph(documents, self.extractor, self._run_stage)
-        finally:
-            for rid, rdd in _checkpoints(self.spark).items():
-                if rid not in before:
-                    rdd.unpersist(False)
+        stage's frame, each read back from its written table."""
+        return graph(documents, self.extractor, self._run_stage)
 
     def lineage(self) -> list[StageResult]:
         return list(self.results)

@@ -1,5 +1,5 @@
 """Exercise the large-star/small-star CC at its trigger scale (VERDICT r02
-#6): the auto strategy switches to the distributed twophase path above
+#6): connected_components switches to the distributed twophase path above
 DRIVER_CC_MAX_EDGES (2M edges) — this script actually runs it there.
 
 Graph: N nodes partitioned into chains of length BLOCK (worst case for
@@ -54,8 +54,7 @@ def main() -> int:
 
     metrics: dict = {}
     t0 = time.time()
-    labels = linking.connected_components(nodes, edges, strategy="auto",
-                                          metrics=metrics)
+    labels = linking.connected_components(nodes, edges, metrics=metrics)
     n_components = labels.select("component").distinct().count()
     wall = time.time() - t0
 
@@ -63,12 +62,12 @@ def main() -> int:
     bound = int(math.log2(n_nodes)) + 2
     assert n_components == expected_components, (n_components, expected_components)
     if real_edges > linking.DRIVER_CC_MAX_EDGES:
-        assert rounds >= 1, "auto did not engage the twophase path"
+        assert rounds >= 1, "the edge count did not engage the twophase path"
         assert rounds <= bound, f"rounds {rounds} > log2(n)+2 = {bound}"
 
     print(json.dumps({
         "edges": real_edges, "nodes": n_nodes, "block": block,
-        "strategy": "auto->twophase" if rounds >= 1 else "auto->driver",
+        "strategy": metrics["strategy"],
         "rounds": rounds, "rounds_bound": bound,
         "wall_s": round(wall, 1),
         "components": n_components, "components_expected": expected_components,

@@ -65,9 +65,9 @@ def test_write_falls_back_without_runtime(spark, tmp_path, monkeypatch):
     captured = {}
     real = TBL.write_table
 
-    def spy(d, path, stage, partition_by=None, mode="overwrite"):
+    def spy(d, path, stage):
         captured["stage"] = stage
-        return real(d, str(tmp_path / "tbl"), stage, partition_by, mode)
+        return real(d, str(tmp_path / "tbl"), stage)
 
     monkeypatch.setattr(TBL, "write_table", spy)
     summary = I.write_table(df, "kg.triples_global")

@@ -3,6 +3,7 @@ connected components, canonical clusters vs the golden alias clusters."""
 
 import itertools
 
+import pytest
 from pyspark.sql import functions as F
 
 from mmore_spark.corpus import oracle, vocab
@@ -139,9 +140,10 @@ def test_connected_components_chain(spark):
         [("A", "B"), ("B", "C"), ("D", "E")], ["name_a", "name_b"]
     )
     results = {}
-    for strategy in ("driver", "twophase"):
-        comps = {r["name"]: r["component"] for r in
-                 linking.connected_components(nodes, edges, strategy=strategy).collect()}
+    for strategy, labels in (
+            ("driver", linking._connected_components_driver(nodes, edges.collect())),
+            ("twophase", linking._connected_components_twophase(nodes, edges))):
+        comps = {r["name"]: r["component"] for r in labels.collect()}
         assert comps["A"] == comps["B"] == comps["C"]
         assert comps["D"] == comps["E"]
         assert comps["A"] != comps["D"]
@@ -149,10 +151,6 @@ def test_connected_components_chain(spark):
         results[strategy] = comps
     # both strategies produce IDENTICAL labels
     assert results["driver"] == results["twophase"]
-    import pytest
-
-    with pytest.raises(ValueError):
-        linking.connected_components(nodes, edges, strategy="bogus")
 
 
 def test_twophase_cc_long_chain(spark):
@@ -166,10 +164,10 @@ def test_twophase_cc_long_chain(spark):
         [(names[i], names[i + 1]) for i in range(59)], ["name_a", "name_b"])
     metrics: dict = {}
     two = {r["name"]: r["component"] for r in
-           linking.connected_components(nodes, edges, strategy="twophase",
-                                        metrics=metrics).collect()}
+           linking._connected_components_twophase(nodes, edges,
+                                                  metrics=metrics).collect()}
     drv = {r["name"]: r["component"] for r in
-           linking.connected_components(nodes, edges, strategy="driver").collect()}
+           linking._connected_components_driver(nodes, edges.collect()).collect()}
     assert two == drv
     assert len(set(two.values())) == 1  # one component
     # O(log n) claim, observable: 60 nodes → rounds ≤ log2(60)+2 = 7
@@ -186,8 +184,8 @@ def test_twophase_cc_zero_iterations_no_crash(spark):
     nodes = spark.createDataFrame([("A",), ("B,",)], ["name"])
     edges = spark.createDataFrame([("A", "B,")], ["name_a", "name_b"])
     metrics: dict = {}
-    labels = linking.connected_components(
-        nodes, edges, max_iterations=0, strategy="twophase", metrics=metrics)
+    labels = linking._connected_components_twophase(
+        nodes, edges, max_iterations=0, metrics=metrics)
     assert labels.count() == 2
     assert metrics["rounds"] == 0
 
@@ -209,3 +207,32 @@ def test_canonical_clusters_match_golden(spark, small_docs, small_docs_df):
         sorted(map(sorted, got - golden))[:5],
         sorted(map(sorted, golden - got))[:5],
     )
+
+
+@pytest.mark.parametrize("strategy", ["driver", "twophase"])
+def test_spark_path_canonicalize_leaves_no_persisted_frames(
+        spark, small_docs, small_docs_df, monkeypatch, strategy):
+    """The distributed path checkpoints its candidate pairs and, past the
+    CC edge cap, every twophase round.  The map it returns is a local
+    relation, so ``canonicalize`` leaves no RDD persisted that was not
+    before, and the map still reads the golden clusters.  (Ids, not a
+    count: the context cleaner may drop RDDs earlier tests left
+    unreferenced while this one runs.)"""
+    from mmore_spark.functions.spans import render_text
+    from mmore_spark.operators import extract
+
+    if strategy == "twophase":
+        monkeypatch.setattr(linking, "DRIVER_CC_MAX_EDGES", 0)
+    rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
+    mentions, _ = extract.extract_mentions_triples(rendered)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent())
+    metrics: dict = {}
+    cmap = linking.canonicalize(mentions, metrics=metrics, driver_max_names=0)
+    assert metrics["path"] == "spark" and metrics["strategy"] == strategy
+    assert set(persistent()) <= before
+    got = {}
+    for r in cmap.collect():
+        got.setdefault(r["component"], set()).add(r["name"])
+    golden = {frozenset(v) for v in oracle.golden_clusters(small_docs).values()}
+    assert {frozenset(v) for v in got.values()} == golden

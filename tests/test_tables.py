@@ -27,10 +27,18 @@ def _jobs(spark, group: str, fn):
 
 def test_narrow_write_is_one_spark_job(spark, tmp_path):
     df = spark.range(0, 1000, 1, 4).select("id", F.col("id").cast("string").alias("s"))
+    path = str(tmp_path / "t")
     summary, jobs = _jobs(spark, f"test-write-{os.getpid()}",
-                          lambda: tables.write_table(df, str(tmp_path / "t"), "t"))
+                          lambda: tables.write_table(df, path, "t"))
     assert jobs == 1
     assert summary["rows"] == 1000 and summary["wall_ms"] >= 0
+    # the marker lists exactly the table's data files, at their sizes
+    files = tables.read_marker(path)["files"]
+    on_disk = {os.path.basename(p) for p in glob.glob(os.path.join(path, "part-*"))}
+    assert on_disk == {f["file"] for f in files}
+    assert sum(f["rows"] for f in files) == 1000
+    for f in files:
+        assert os.path.getsize(os.path.join(path, f["file"])) == f["bytes"]
 
 
 def test_empty_frame_writes_marker_and_keeps_schema(spark, tmp_path):
@@ -43,22 +51,3 @@ def test_empty_frame_writes_marker_and_keeps_schema(spark, tmp_path):
     back = tables.read_table(spark, path)
     assert back.schema == df.schema
     assert back.count() == 0
-
-
-def test_partitioned_write_marker_lists_every_file(spark, tmp_path):
-    path = str(tmp_path / "parts")
-    df = spark.range(0, 5000, 1, 6).select(
-        "id", F.pmod(F.col("id"), F.lit(3)).alias("k"))
-    summary = tables.write_table(df, path, "parts", partition_by=["k"])
-    files = tables.read_marker(path)["files"]
-    assert {f["file"].split(os.sep)[0] for f in files} == {"k=0", "k=1", "k=2"}
-    assert sum(f["rows"] for f in files) == summary["rows"] \
-        == tables.read_table(spark, path).count() == 5000
-    for f in files:
-        assert os.path.getsize(os.path.join(path, f["file"])) == f["bytes"]
-    # the marker lists exactly the table's data files
-    on_disk = {os.path.relpath(p, path) for p in glob.glob(os.path.join(path, "k=*", "part-*"))}
-    assert on_disk == {f["file"] for f in files}
-    lin = tables.read_lineage(spark, path)
-    assert lin.agg(F.sum("rows")).first()[0] == 5000
-    assert lin.count() == len(files)
