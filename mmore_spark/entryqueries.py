@@ -901,11 +901,15 @@ def _canon_ctes() -> str:
     all-pairs ER is fine for the oracle; the Spark side runs LSH blocking).
     Election mirrors canonicalize exactly: canonical name = most-mentioned
     then lex-min (rn); component type = most-mentioned name's type, ties →
-    lexicographically greatest type (rt — linking.entities_table)."""
+    lexicographically greatest type (rt — linking.entities_table).
+
+    ``m`` is MATERIALIZED: DuckDB otherwise inlines the mentions subquery
+    at each of its references and re-runs it (kg_pipeline_triples took
+    162.6 s at sf0.001 that way, 4.8 s materialized)."""
     mentions = _kg_mentions_sql()
     match = _er_match_duck("a.name", "b.name")
     return f"""
-m AS ({mentions}),
+m AS MATERIALIZED ({mentions}),
 -- per-name type election mirrors linking.canonicalize exactly: longest
 -- type wins, ties -> lexicographically greatest (ADVICE r02: min() agreed
 -- only while every name carried a single type)

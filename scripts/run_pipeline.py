@@ -7,7 +7,10 @@ the same warehouse resumes from the last completed stage (completion
 markers carrying per-file lineage, mmore_spark.plans.pipeline).
 
 On a real cluster, omit --master and let spark-submit's cluster manager
-drive; all engine tuning lives in mmore_spark.session.
+drive; all engine tuning lives in mmore_spark.session.  Under spark-submit
+the JVM is up before this script runs, so it starts without the class-data
+archive that get_spark keeps for the JVMs it launches itself (``python
+scripts/run_pipeline.py ...``; see README "Cold start").
 """
 
 from __future__ import annotations

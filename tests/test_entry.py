@@ -10,12 +10,14 @@ import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# one row per operator family; the pipeline rows are left to the full sweep
-# (their recursive-CTE oracle takes minutes in DuckDB) and to
-# test_pipeline_queries_run
+# one row per operator family, plus the end-to-end pipeline rows (their
+# recursive-CTE oracle runs in seconds in DuckDB since it materializes the
+# mentions once)
 FAST_SUBSET = [
     "kg_triples_chunked",      # extract (the real extractor's per-doc triples)
     "kg_linking_clusters",     # linking over the real extractor's mentions
+    "kg_pipeline_triples",     # the whole pipeline: globally merged triples
+    "kg_pipeline_entities",    # the whole pipeline: canonical entities
     "kg_spans_explode",        # derived spans table
     "dedup_minhash_pairs",     # dedup signatures
     "dedup_embedding_groups",  # embedding near-dups + connected components
