@@ -899,9 +899,11 @@ def _canon_ctes() -> str:
 
     DuckDB twin of linking.canonicalize (names are vocabulary-bounded, so
     all-pairs ER is fine for the oracle; the Spark side runs LSH blocking).
-    Election mirrors canonicalize exactly: canonical name = most-mentioned
-    then lex-min (rn); component type = most-mentioned name's type, ties →
-    lexicographically greatest type (rt — linking.entities_table).
+    ``counts`` is the mention rollup linking reads (agg.merge_entities_global:
+    mention count, ``max`` type).  Election mirrors canonicalize exactly:
+    canonical name = most-mentioned then lex-min (rn); component type =
+    most-mentioned name's type, ties → lexicographically greatest type
+    (rt — linking.entities_table).
 
     ``m`` is MATERIALIZED: DuckDB otherwise inlines the mentions subquery
     at each of its references and re-runs it (kg_pipeline_triples took
@@ -910,17 +912,8 @@ def _canon_ctes() -> str:
     match = _er_match_duck("a.name", "b.name")
     return f"""
 m AS MATERIALIZED ({mentions}),
--- per-name type election mirrors linking.canonicalize exactly: longest
--- type wins, ties -> lexicographically greatest (ADVICE r02: min() agreed
--- only while every name carried a single type)
-tname AS (SELECT name, etype,
-                 row_number() OVER (PARTITION BY name
-                                    ORDER BY length(coalesce(etype, '')) DESC,
-                                             coalesce(etype, '') DESC) AS tr
-          FROM (SELECT DISTINCT entity_name AS name, entity_type AS etype FROM m) d),
-counts AS (SELECT c.name, c.nm, t.etype
-           FROM (SELECT entity_name AS name, count(*) AS nm FROM m GROUP BY 1) c
-           JOIN tname t ON c.name = t.name AND t.tr = 1),
+counts AS (SELECT entity_name AS name, count(*) AS nm, max(entity_type) AS etype
+           FROM m GROUP BY 1),
 nodes AS (SELECT name FROM counts),
 edges AS (SELECT a.name AS na, b.name AS nb FROM nodes a JOIN nodes b
           ON a.name < b.name AND {match}),

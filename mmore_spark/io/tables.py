@@ -133,7 +133,6 @@ def write_table(df: DataFrame, path: str, stage: str,
         "stage": stage,
         "rows": sum(f["rows"] for f in files),
         "bytes": sum(f["bytes"] for f in files),
-        "path": path,
         "files": files,
         "observed": obs.get if observe else {},
     }
@@ -195,7 +194,6 @@ def replace_table(spark: SparkSession, path: str, df: DataFrame,
             raise
     shutil.rmtree(old, ignore_errors=True)
     spark.catalog.refreshByPath(path)
-    summary["path"] = path
     return summary
 
 

@@ -1,8 +1,7 @@
 """Pure-numpy loader + classifier for fasttext's public ``model.bin``
 format — the pretrained-model slot of the reference's
 ``filter_fasttext`` (datatrove FastTextClassifierFilter wraps the
-fasttext library; SURVEY §2.4).  The trainable in-engine equivalent
-lives in operators/classifier.py; THIS module makes the seam accept the
+fasttext library; SURVEY §2.4).  This module makes the seam accept the
 real artifact when a corpus owner ships one, with no fasttext install.
 
 Format (fasttext src/fasttext.cc saveModel — stable since 0.2):

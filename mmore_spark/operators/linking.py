@@ -3,7 +3,10 @@
 The reference's only global entity key is the UPPERCASED surface name
 (/root/reference/src/mmore/process/post_processor/ner/output_parser.py:55) —
 exact-match linking.  This module adds the real thing, designed for
-10^12-doc scale:
+10^12-doc scale.  Its input is the mention rollup
+``agg.merge_entities_global`` makes (the ``entities_global`` table: one
+row per distinct name with its mention count and type), so linking
+aggregates no mentions itself:
 
   1. **Blocking** — MinHash-LSH over the name's token set: P independent
      min-hashes per name (``_signature``, md5-family h60), one blocking
@@ -33,7 +36,9 @@ does (an Arrow signature stage, the capped bucket self-join of
 ``dedup.candidate_edges``, the verification UDF and CC).  Both hand their
 labelled names to the one election, ``_elect``, which returns the map as
 a local relation — the map has one row per name and crosses the driver
-anyway, as ``rewrite_triples`` broadcasts it.  Step 1's join key space is
+anyway, as ``rewrite_triples`` broadcasts it.  Neither path persists the
+rollup, and the Spark path releases its checkpoints before
+``canonicalize`` returns.  Step 1's join key space is
 (perm × hash) — uniform by construction; step 3 shuffles only the edge
 set (distinct names only).
 """
@@ -413,9 +418,11 @@ def _canonicalize_driver(spark, rows, max_bucket: int = MAX_NAME_BUCKET,
     return _elect(spark, [(n, comp, *stats[n]) for n, comp in labels.items()])
 
 
-def canonicalize(mentions: DataFrame, metrics: dict | None = None,
+def canonicalize(rollup: DataFrame, metrics: dict | None = None,
                  driver_max_names: int = DRIVER_LINK_MAX_NAMES) -> DataFrame:
-    """mentions(doc_id, entity_name, entity_type, …) → canonical entity map:
+    """The mention rollup, one row per distinct name —
+    ``agg.merge_entities_global``'s (entity_name, n_mentions, entity_type,
+    …) — → canonical entity map:
 
         (name, component, canonical_name, canonical_id, entity_type,
          n_mentions)
@@ -423,59 +430,43 @@ def canonicalize(mentions: DataFrame, metrics: dict | None = None,
     Canonical form = the most-mentioned surface name in the component
     (ties → lexicographically smallest); canonical_id = 60-bit hash of the
     canonical name.  The returned map has one row per distinct surface
-    name, as a local relation that rests on no cache or checkpoint: every
-    frame linking persisted is released before it returns.  ``metrics``
+    name, as a local relation that rests on no cache or checkpoint: it
+    persists nothing of its own (``KGPipeline`` hands it the small written
+    ``entities_global``, so each re-read is cheap), and it releases the
+    checkpoints its Spark path made before it returns.  ``metrics``
     (optional dict) receives the linking path taken (``path``: driver or
     spark) and, on the Spark path, the CC strategy chosen and its twophase
     round count — surfaced into pipeline lineage.
     """
     metrics = {} if metrics is None else metrics
-    spark = mentions.sparkSession
-    counts = mentions.groupBy(F.col("entity_name").alias("name")).agg(
-        F.count("*").alias("n_mentions"),
-        # deterministic election: longest type wins, ties broken
-        # lexicographically (a bare max_by ties arbitrarily, which would
-        # break value-level oracle comparison)
-        F.max_by(
-            "entity_type",
-            F.struct(
-                F.length(F.coalesce("entity_type", F.lit(""))).alias("l"),
-                F.coalesce("entity_type", F.lit("")).alias("t"),
-            ),
-        ).alias("entity_type"),
-    )
+    spark = rollup.sparkSession
+    counts = rollup.select(F.col("entity_name").alias("name"), "n_mentions", "entity_type")
     # ONE early-terminating probe job decides the path AND, below the cap,
     # already holds every row the driver path needs (guard-ok: bounded by
-    # the limit).  The persist keeps the >cap path from aggregating the
-    # full mention set again: probe partitions are cached, the rest
-    # compute once, and the LSH self-join and CC read the cache.
-    counts = counts.persist()
+    # the limit)
+    probe = counts.limit(driver_max_names + 1).collect()
+    if len(probe) <= driver_max_names:
+        out = _canonicalize_driver(spark, probe)
+        if out is not None:
+            metrics["path"] = "driver"
+            return out
+    metrics["path"] = "spark"
+    jsc = spark.sparkContext._jsc
+    held = set(jsc.getPersistentRDDs())
     try:
-        probe = counts.limit(driver_max_names + 1).collect()
-        if len(probe) <= driver_max_names:
-            out = _canonicalize_driver(spark, probe)
-            if out is not None:
-                metrics["path"] = "driver"
-                return out
-        metrics["path"] = "spark"
-        jsc = spark.sparkContext._jsc
-        held = set(jsc.getPersistentRDDs())
-        try:
-            names = counts.select("name")
-            comps = connected_components(names, match_edges(names), metrics=metrics)
-            # guard-ok: dimension-scale collect, one row per distinct name
-            # (rewrite_triples broadcasts the map anyway)
-            rows = counts.join(comps, "name").select(
-                "name", "component", "n_mentions", "entity_type").collect()
-        finally:
-            # the candidate pairs (dedup.candidate_edges) and the twophase
-            # rounds rest on local checkpoints the collected rows no longer need
-            rdds = jsc.getPersistentRDDs()
-            for rid in rdds:
-                if rid not in held and rdds[rid].isCheckpointed():
-                    rdds[rid].unpersist(False)
+        names = counts.select("name")
+        comps = connected_components(names, match_edges(names), metrics=metrics)
+        # guard-ok: dimension-scale collect, one row per distinct name
+        # (rewrite_triples broadcasts the map anyway)
+        rows = counts.join(comps, "name").select(
+            "name", "component", "n_mentions", "entity_type").collect()
     finally:
-        counts.unpersist()
+        # the candidate pairs (dedup.candidate_edges) and the twophase
+        # rounds rest on local checkpoints the collected rows no longer need
+        rdds = jsc.getPersistentRDDs()
+        for rid in rdds:
+            if rid not in held and rdds[rid].isCheckpointed():
+                rdds[rid].unpersist(False)
     return _elect(spark, rows)
 
 

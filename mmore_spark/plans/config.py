@@ -19,8 +19,8 @@ filter/datatrove_wrapper.py:27-39):
 
 Unknown args are ignored with a warning (the reference carries
 model-specific knobs — whisper/marker batch sizes — that have no Spark
-analog); ``filter_fasttext`` needs a model file and raises with a
-pointer to operators/classifier (the trainable in-engine path).
+analog); ``filter_fasttext`` needs a model file and raises without
+one.
 """
 
 from __future__ import annotations
@@ -187,9 +187,7 @@ def _build_filter(mtype: str, args: dict):
         raise NotImplementedError(
             "filter_fasttext needs a model file (model_url/model_path "
             "pointing at a fasttext .bin — loaded natively by "
-            "operators/fasttext_bin); or train the in-engine equivalent "
-            "with operators/classifier.py (HashingTF + LogisticRegression) "
-            "and use quality_filter()")
+            "operators/fasttext_bin)")
     raise ValueError(f"unrecognized filter type: {mtype}")
 
 

@@ -5,8 +5,10 @@ Logical plan (BASELINE.json north_star):
     documents(doc_id, spans)
       → render_text            (native array expressions, spans preserved)
       → extract                (ONE Arrow-batched stage → mentions, triples)
-      → canonicalize           (LSH blocking + connected components)
-      → rewrite + global merge (one groupBy each → triples / entities tables)
+      → mention rollup         (one groupBy per name → entities_global)
+      → canonicalize           (over the rollup: LSH blocking + connected
+                                components → canonical_map, entities)
+      → rewrite + global merge (one groupBy → triples_global)
 
 ``graph`` defines the 8 stages once.  ``build_graph`` runs them lazily
 (no I/O) — what a library user calls.  ``KGPipeline.run`` writes the
@@ -46,9 +48,11 @@ def graph(documents: DataFrame, extractor=None,
     stages, for ``canonical_map`` the dict linking fills with its
     metrics, and for ``extracted`` the row counts of the views over it,
     as aggregates its write can observe.  The views ``mentions`` and
-    ``triples`` explode ``extracted``; ``canonical_triples`` rewrites
-    ``triples`` and keeps its rows (two left joins against a map with one
-    row per name)."""
+    ``triples`` explode ``extracted``.  ``entities_global``, the one
+    rollup of the mentions by name, comes before ``canonical_map``,
+    which links its rows; ``canonical_triples`` rewrites ``triples`` and
+    keeps its rows (two left joins against a map with one row per
+    name)."""
     extracted = materialize(
         "extracted", lambda: extract.extract_combined(
             documents.select("doc_id", render_text("spans").alias("text")), "text", extractor),
@@ -57,28 +61,28 @@ def graph(documents: DataFrame, extractor=None,
                   ("canonical_triples", "triples"))])
     mentions = extract.explode(extracted, "entities")
     triples = extract.explode(extracted, "triples")
+    entities_global = materialize(
+        "entities_global", lambda: agg.merge_entities_global(mentions))
     # linking observability flows into this stage's lineage: the path
     # taken (driver vs spark) and, on the Spark path, the CC strategy
     # and its twophase round count
     cc_metrics: dict = {}
     canonical_map = materialize(
-        "canonical_map", lambda: linking.canonicalize(mentions, metrics=cc_metrics),
+        "canonical_map", lambda: linking.canonicalize(entities_global, metrics=cc_metrics),
         info=cc_metrics)
     entities = materialize("entities", lambda: linking.entities_table(canonical_map))
     canonical_triples = linking.rewrite_triples(triples, canonical_map)
     triples_global = materialize(
         "triples_global", lambda: agg.merge_triples_global(canonical_triples))
-    entities_global = materialize(
-        "entities_global", lambda: agg.merge_entities_global(mentions))
     return {
         "extracted": extracted,
         "mentions": mentions,
         "triples": triples,
+        "entities_global": entities_global,
         "canonical_map": canonical_map,
         "entities": entities,
         "canonical_triples": canonical_triples,
         "triples_global": triples_global,
-        "entities_global": entities_global,
     }
 
 

@@ -80,7 +80,7 @@ def test_run_process_config(spark, tmp_path):
     assert got["x.txt"]["text"] == "hello config world"
     assert got["x.txt"]["error"] is None
     assert os.path.exists(os.path.join(outp, "_SUCCESS"))
-    # filter_fasttext points at the in-engine trainable path
+    # filter_fasttext without a model file raises
     import pytest
 
     with pytest.raises(NotImplementedError):

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mmore_spark.corpus import oracle, vocab
-from mmore_spark.operators import linking
+from mmore_spark.operators import agg, linking
 
 
 def _surfaced_names(docs):
@@ -196,7 +196,7 @@ def test_canonical_clusters_match_golden(spark, small_docs, small_docs_df):
 
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
     mentions, _ = extract.extract_mentions_triples(rendered)
-    cmap = linking.canonicalize(mentions)
+    cmap = linking.canonicalize(agg.merge_entities_global(mentions))
     got_clusters = {}
     for r in cmap.collect():
         got_clusters.setdefault(r["component"], set()).add(r["name"])
@@ -228,7 +228,8 @@ def test_spark_path_canonicalize_leaves_no_persisted_frames(
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persistent())
     metrics: dict = {}
-    cmap = linking.canonicalize(mentions, metrics=metrics, driver_max_names=0)
+    cmap = linking.canonicalize(agg.merge_entities_global(mentions), metrics=metrics,
+                                driver_max_names=0)
     assert metrics["path"] == "spark" and metrics["strategy"] == strategy
     assert set(persistent()) <= before
     got = {}

@@ -211,3 +211,46 @@ def test_pipeline_deterministic_across_parallelism(spark, small_docs_df):
     b = sorted(map(tuple, merge_triples_global(ct_b)
                    .select("subj", "obj", "weight", "n_docs").collect()))
     assert a == b
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_name_type_is_the_max_of_its_mention_types(spark, tmp_path, monkeypatch, path):
+    """One type rule per name, ``max`` over its mentions: NOVA LABS is an
+    organization in one document and a person in another, so it is a
+    PERSON in ``entities_global``, in ``canonical_map`` on both linking
+    paths, and in ``entities``, whose canonical NOVA LABS outnumbers its
+    alias NOVA LABS INC."""
+    import functools
+
+    from mmore_spark.corpus.generator import DOCUMENTS_SCHEMA
+    from mmore_spark.operators import linking
+    from mmore_spark.operators.extract import COMPLETION_TAG, RECORD_DELIM, TUPLE_DELIM
+
+    if path == "spark":
+        monkeypatch.setattr(linking, "canonicalize", functools.partial(
+            linking.canonicalize, driver_max_names=0))
+
+    def extractor(text):
+        etype = "PERSON" if "person" in text else "ORGANIZATION"
+        records = [TUPLE_DELIM.join(['("entity"', "NOVA LABS", etype, f"a {etype})"])]
+        if "alias" in text:
+            records.append(TUPLE_DELIM.join(
+                ['("entity"', "NOVA LABS INC", "ORGANIZATION", "a company)"]))
+        return RECORD_DELIM.join(records + [COMPLETION_TAG])
+
+    docs = spark.createDataFrame(
+        [(f"doc-{i}", [("text", text, None, 0)])
+         for i, text in enumerate(["an organization with an alias", "a person"])],
+        DOCUMENTS_SCHEMA)
+    pipe = KGPipeline(spark, str(tmp_path / "wh"), extractor=extractor)
+    out = pipe.run(docs)
+    assert {r.name: r.info for r in pipe.lineage()}["canonical_map"]["path"] == path
+
+    def types(df, key):
+        return {r[key]: r["entity_type"] for r in df.collect()}
+
+    assert types(out["entities_global"], "entity_name") == {
+        "NOVA LABS": "PERSON", "NOVA LABS INC": "ORGANIZATION"}
+    assert types(out["canonical_map"], "name") == {
+        "NOVA LABS": "PERSON", "NOVA LABS INC": "ORGANIZATION"}
+    assert types(out["entities"], "canonical_name") == {"NOVA LABS": "PERSON"}

@@ -74,14 +74,14 @@ def test_canonicalize_driver_equals_spark_path(spark, small_docs_df):
     import pandas as pd
 
     from mmore_spark.functions.spans import render_text
-    from mmore_spark.operators import linking
+    from mmore_spark.operators import agg, linking
 
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
     mentions, _ = extract.extract_mentions_triples(rendered, "text")
-    mentions = mentions.cache()
+    rollup = agg.merge_entities_global(mentions).cache()
     driver_metrics, spark_metrics = {}, {}
-    driver = linking.canonicalize(mentions, metrics=driver_metrics).toPandas()
-    spark_side = linking.canonicalize(mentions, metrics=spark_metrics,
+    driver = linking.canonicalize(rollup, metrics=driver_metrics).toPandas()
+    spark_side = linking.canonicalize(rollup, metrics=spark_metrics,
                                       driver_max_names=0).toPandas()
     # lineage tells the two paths apart; CC's strategy is the Spark path's
     assert driver_metrics == {"path": "driver"}
@@ -101,7 +101,7 @@ def test_canonicalize_driver_pair_cap_falls_back_to_spark_path(spark, small_docs
     import pandas as pd
 
     from mmore_spark.functions.spans import render_text
-    from mmore_spark.operators import linking
+    from mmore_spark.operators import agg, linking
 
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
     mentions, _ = extract.extract_mentions_triples(rendered, "text")
@@ -112,7 +112,7 @@ def test_canonicalize_driver_pair_cap_falls_back_to_spark_path(spark, small_docs
     assert linking._canonicalize_driver(spark, rows, max_pairs=0) is None
     # and the full operator still produces the driver-path result when the
     # cap is generous
-    normal = linking.canonicalize(mentions).toPandas()
+    normal = linking.canonicalize(agg.merge_entities_global(mentions)).toPandas()
     assert len(normal) == len(rows)
 
 

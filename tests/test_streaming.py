@@ -37,47 +37,6 @@ def test_stream_drain_resume_and_dedup(spark, tmp_path):
     assert final.select("doc_id", "subj", "obj").distinct().count() == final.count()
 
 
-def test_stateful_sessionization_across_drains(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): sessions close on
-    a >30-min gap, and OPEN sessions survive across AvailableNow drains via
-    the checkpointed state."""
-    from datetime import datetime, timedelta
-
-    from mmore_spark.streaming.sessions import drain_sessions
-
-    staging = str(tmp_path / "ev")
-    ckpt = str(tmp_path / "ck")
-    out = str(tmp_path / "sessions")
-    os.makedirs(staging)
-    t0 = datetime(2025, 3, 1, 9, 0, 0)
-
-    def ev(eid, uid, minutes, value):
-        return (eid, t0 + timedelta(minutes=minutes), uid, value)
-
-    def sessions():
-        return {(r["user_id"], r["session_id"]): (r["n_events"], r["value_sum"])
-                for r in spark.read.parquet(out).collect()}
-
-    schema = "event_id long, ts timestamp, user_id long, value double"
-    # drain 1: user 1 closes a session (gap 10→50); user 2 stays open
-    spark.createDataFrame(
-        [ev(1, 1, 0, 1.0), ev(2, 1, 10, 2.0), ev(3, 1, 50, 4.0),
-         ev(4, 2, 0, 8.0), ev(5, 2, 5, 16.0)], schema
-    ).write.mode("append").parquet(staging)
-    drain_sessions(spark, staging, ckpt, out)
-    assert sessions() == {(1, 0): (2, 3.0)}  # user 1's first session closed
-
-    # drain 2: user 1 continues the OPEN session (no close); user 2's
-    # 5→55 min gap closes its first session — state crossed the drains
-    spark.createDataFrame(
-        [ev(6, 1, 55, 32.0), ev(7, 2, 55, 64.0)], schema
-    ).write.mode("append").parquet(staging)
-    spark.catalog.refreshByPath(staging)
-    drain_sessions(spark, staging, ckpt, out)
-    spark.catalog.refreshByPath(out)
-    assert sessions() == {(1, 0): (2, 3.0), (2, 0): (2, 24.0)}
-
-
 def test_stream_single_extraction_eval_per_batch(spark, tmp_path, monkeypatch):
     """The sink takes one action, the output append, and persists
     nothing: the extraction stage must evaluate ONCE per micro-batch

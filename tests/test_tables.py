@@ -39,6 +39,10 @@ def test_narrow_write_is_one_spark_job(spark, tmp_path):
     assert sum(f["rows"] for f in files) == 1000
     for f in files:
         assert os.path.getsize(os.path.join(path, f["file"])) == f["bytes"]
+    # the marker does not name where the table lives, so its size does not
+    # depend on the directory's path
+    with open(os.path.join(path, "_MMORE_COMPLETE")) as f:
+        assert path not in f.read()
 
 
 def test_empty_frame_writes_marker_and_keeps_schema(spark, tmp_path):
