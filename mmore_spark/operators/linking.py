@@ -30,17 +30,19 @@ aggregates no mentions itself:
      canonical map; the global triple merge is one ``groupBy``
      (operators/agg.py).
 
-Two executors run steps 1-3: below ``DRIVER_LINK_MAX_NAMES`` distinct
-names ``_canonicalize_driver`` runs them in driver Python; above it Spark
-does (an Arrow signature stage, the capped bucket self-join of
+Two executors run steps 1-3.  ``canonicalize`` collects the rollup once
+(the map has one row per name and crosses the driver anyway, as
+``rewrite_triples`` broadcasts it), and the name count picks the
+executor: up to ``DRIVER_LINK_MAX_NAMES`` names ``_canonicalize_driver``
+runs them in driver Python; above it Spark does, over a local relation
+of those names (an Arrow signature stage, the capped bucket self-join of
 ``dedup.candidate_edges``, the verification UDF and CC).  Both hand their
 labelled names to the one election, ``_elect``, which returns the map as
-a local relation — the map has one row per name and crosses the driver
-anyway, as ``rewrite_triples`` broadcasts it.  Neither path persists the
-rollup, and the Spark path releases its checkpoints before
-``canonicalize`` returns.  Step 1's join key space is
-(perm × hash) — uniform by construction; step 3 shuffles only the edge
-set (distinct names only).
+a local relation.  So the rollup's plan, and a lazy caller's extraction
+under it, runs once on either path; nothing is persisted, and the Spark
+path releases its checkpoints before ``canonicalize`` returns.  Step 1's
+join key space is (perm × hash) — uniform by construction; step 3
+shuffles only the edge set (distinct names only).
 """
 
 from __future__ import annotations
@@ -131,13 +133,14 @@ def names_match_udf():
 MAX_NAME_BUCKET = 4096
 
 
-def candidate_pairs(names: DataFrame, max_bucket: int = MAX_NAME_BUCKET) -> DataFrame:
-    """names(name) → distinct (name_a < name_b) candidate pairs via LSH:
-    names sharing a (perm, minv) bucket of their ``_signature``.
+def candidate_pairs(names: DataFrame) -> DataFrame:
+    """names(name), one row per name → distinct (name_a < name_b)
+    candidate pairs via LSH: names sharing a (perm, minv) bucket of their
+    ``_signature``.
 
     The signature is one Arrow-batched stage; its (name, perm, minv) rows
     go to ``dedup.candidate_edges`` as (doc_id, band, bh), which runs the
-    bucket self-join with the ``max_bucket`` star fallback above and
+    bucket self-join with the ``MAX_NAME_BUCKET`` star fallback above and
     returns a local checkpoint.  Names are dimension-sized, so the stage
     is cheap.
     """
@@ -153,26 +156,18 @@ def candidate_pairs(names: DataFrame, max_bucket: int = MAX_NAME_BUCKET) -> Data
                     out_m.append(minv)
             yield pd.DataFrame({"name": out_n, "perm": out_p, "minv": out_m})
 
-    sig = names.select("name").distinct().mapInPandas(
-        sig_batches, "name string, perm int, minv long")
+    sig = names.select("name").mapInPandas(sig_batches, "name string, perm int, minv long")
     edges = candidate_edges(
         sig.select(F.col("name").alias("doc_id"), F.col("perm").alias("band"),
                    F.col("minv").alias("bh")),
-        max_bucket)
+        MAX_NAME_BUCKET)
     return edges.select(F.col("doc_a").alias("name_a"), F.col("doc_b").alias("name_b"))
-
-
-def match_edges(names: DataFrame) -> DataFrame:
-    """Verified duplicate-name edges (name_a, name_b)."""
-    return candidate_pairs(names).filter(
-        names_match_udf()(F.col("name_a"), F.col("name_b")))
 
 
 DRIVER_CC_MAX_EDGES = 2_000_000
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
-                         max_iterations: int = MAX_CC_ITERATIONS,
                          metrics: dict | None = None) -> DataFrame:
     """nodes(name), edges(name_a, name_b) → (name, component) where
     component is the minimum 60-bit name hash in the component.
@@ -187,13 +182,6 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         (Kiveris et al., "Connected Components in MapReduce and Beyond"):
         converges in O(log n) rounds regardless of diameter — the shape
         that survives chain-like graphs a label-propagation loop cannot.
-
-    A third strategy (min-label propagation) was retired in round 4: at
-    2.4M edges it merely TIED twophase on its best-case shape (diameter-2
-    stars: 21.6 s vs 21.8 s, local[32]) and its round count is the graph
-    diameter, so on chain-like graphs it loses unboundedly (twophase
-    labels a diameter-1023 chain in 10 rounds) — no niche where it wins
-    (VERDICT r03 #6; measurement in BENCH/BASELINE.md).
 
     Both produce identical labels (min name-hash per component) — asserted
     by tests/test_linking.py.
@@ -217,7 +205,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
             metrics["strategy"] = "twophase"
         # twophase's first localCheckpoint is eager, so e is fully
         # consumed before this returns and unpersist below is safe
-        return _connected_components_twophase(nodes, e, max_iterations, metrics)
+        return _connected_components_twophase(nodes, e, metrics)
     finally:
         e.unpersist()
 
@@ -298,11 +286,11 @@ def _edge_stats(e: DataFrame) -> tuple[int, int | None]:
 
 
 def _connected_components_twophase(nodes: DataFrame, edges: DataFrame,
-                                   max_iterations: int = MAX_CC_ITERATIONS,
                                    metrics: dict | None = None) -> DataFrame:
     """Large-star/small-star over 60-bit name-hash ids: O(log n) rounds
     regardless of graph diameter (each round is 2 groupBys + 2 joins over
-    the shrinking edge set; per-round localCheckpoint cuts lineage).
+    the shrinking edge set; per-round localCheckpoint cuts lineage), at
+    most ``MAX_CC_ITERATIONS`` of them.
 
     Convergence check is count + order-insensitive ``sum(xxhash64(u, v))``
     in one action per round; the full ``exceptAll`` set-difference (an
@@ -331,7 +319,7 @@ def _connected_components_twophase(nodes: DataFrame, edges: DataFrame,
             metrics["rounds"] = rounds
         return names.select("name", F.col("id").alias("component"))
     prev_n, prev_chk = _edge_stats(e)
-    for rounds in range(1, max_iterations + 1):
+    for rounds in range(1, MAX_CC_ITERATIONS + 1):
         e1 = _large_star(e).localCheckpoint()
         e2 = _small_star(e1).localCheckpoint()
         n2, chk2 = _edge_stats(e2)
@@ -356,15 +344,14 @@ def _connected_components_twophase(nodes: DataFrame, edges: DataFrame,
     )
 
 
-# Count-gated driver path for the WHOLE linking stage (r6): distinct entity
+# Count-gated driver path for the WHOLE linking stage: distinct entity
 # names are dimension-scale (the module premise), and below this cap the
-# LSH + ER + CC + election sequence is a few ms of driver Python versus
-# ~8 sequential Spark jobs (sig materialization, bucket sizing broadcasts,
-# self-join, pandas-UDF verify, CC probe, label collect) — measured ~3 s
-# of fixed latency at local[32].  Same philosophy as DRIVER_CC_MAX_EDGES
-# (VERDICT r04: the count-gated dimension-scale collect is the accepted
-# exception); the Spark path remains the >cap production path and pytest
-# asserts both produce identical maps.
+# LSH + ER + CC + election sequence in driver Python replaces the fixed
+# latency of ~8 sequential Spark jobs (signature stage, bucket sizing,
+# self-join, pandas-UDF verify, CC probe, label collect).  Same philosophy
+# as DRIVER_CC_MAX_EDGES (the count-gated dimension-scale collect is the
+# accepted exception); the Spark path remains the >cap production path
+# and pytest asserts both produce identical maps.
 DRIVER_LINK_MAX_NAMES = 20_000
 # Bail out of the driver path when candidate-pair volume explodes (dense
 # same-token name families near the name cap can approach n²/2 pairs —
@@ -391,35 +378,33 @@ def _elect(spark, rows: list) -> DataFrame:
                     "canonical_id long, entity_type string, n_mentions long")
 
 
-def _canonicalize_driver(spark, rows, max_bucket: int = MAX_NAME_BUCKET,
-                         max_pairs: int = DRIVER_LINK_MAX_PAIRS
+def _canonicalize_driver(spark, stats: dict[str, tuple[int, str]]
                          ) -> "DataFrame | None":
-    """The Spark linking path's definitions run on the driver over
-    collected (name, n_mentions, entity_type) rows: ``_signature`` buckets
-    with the star cap, ``names_match_py`` once per distinct candidate
-    pair, ``_component_labels``, then ``_elect``.  Returns None (caller →
-    Spark path) if the candidate-pair set exceeds ``max_pairs``."""
-    stats = {r["name"]: (r["n_mentions"], r["entity_type"]) for r in rows}
+    """The Spark linking path's definitions run on the driver over the
+    collected rollup, name → (n_mentions, entity_type): ``_signature``
+    buckets with the ``MAX_NAME_BUCKET`` star cap, ``names_match_py`` once
+    per distinct candidate pair, ``_component_labels``, then ``_elect``.
+    Returns None (caller → Spark path) if the candidate-pair set exceeds
+    ``DRIVER_LINK_MAX_PAIRS``."""
     buckets: dict[tuple[int, int], list[str]] = {}
     for name in stats:
         for key in enumerate(_signature(name)):
             buckets.setdefault(key, []).append(name)
     pairs: set[tuple[str, str]] = set()
     for members in buckets.values():
-        if len(members) <= max_bucket:
+        if len(members) <= MAX_NAME_BUCKET:
             pairs.update((a, b) if a < b else (b, a)
                          for a, b in itertools.combinations(members, 2))
         else:
             m = min(members)
             pairs.update((m, x) for x in members if x != m)
-        if len(pairs) > max_pairs:
+        if len(pairs) > DRIVER_LINK_MAX_PAIRS:
             return None
     labels = _component_labels(((a, b) for a, b in pairs if names_match_py(a, b)), stats)
     return _elect(spark, [(n, comp, *stats[n]) for n, comp in labels.items()])
 
 
-def canonicalize(rollup: DataFrame, metrics: dict | None = None,
-                 driver_max_names: int = DRIVER_LINK_MAX_NAMES) -> DataFrame:
+def canonicalize(rollup: DataFrame, metrics: dict | None = None) -> DataFrame:
     """The mention rollup, one row per distinct name —
     ``agg.merge_entities_global``'s (entity_name, n_mentions, entity_type,
     …) — → canonical entity map:
@@ -429,24 +414,29 @@ def canonicalize(rollup: DataFrame, metrics: dict | None = None,
 
     Canonical form = the most-mentioned surface name in the component
     (ties → lexicographically smallest); canonical_id = 60-bit hash of the
-    canonical name.  The returned map has one row per distinct surface
-    name, as a local relation that rests on no cache or checkpoint: it
-    persists nothing of its own (``KGPipeline`` hands it the small written
-    ``entities_global``, so each re-read is cheap), and it releases the
-    checkpoints its Spark path made before it returns.  ``metrics``
-    (optional dict) receives the linking path taken (``path``: driver or
-    spark) and, on the Spark path, the CC strategy chosen and its twophase
-    round count — surfaced into pipeline lineage.
+    canonical name.  The rollup is read once, by one collect of its
+    (entity_name, n_mentions, entity_type) rows: their count picks the
+    path (module doc), the Spark path links a local relation of their
+    names, and the election reads them.  So a lazy rollup — the
+    extraction under a bare ``build_graph`` — is evaluated once on either
+    path.  The returned map has one row per distinct surface name, as a
+    local relation that rests on no cache or checkpoint: ``canonicalize``
+    persists nothing of its own and releases the checkpoints its Spark
+    path made before it returns.  ``metrics`` (optional dict) receives
+    the linking path taken (``path``: driver or spark) and, on the Spark
+    path, the CC strategy chosen and its twophase round count — surfaced
+    into pipeline lineage.
     """
+    from ..functions.localrel import local_df
+
     metrics = {} if metrics is None else metrics
     spark = rollup.sparkSession
-    counts = rollup.select(F.col("entity_name").alias("name"), "n_mentions", "entity_type")
-    # ONE early-terminating probe job decides the path AND, below the cap,
-    # already holds every row the driver path needs (guard-ok: bounded by
-    # the limit)
-    probe = counts.limit(driver_max_names + 1).collect()
-    if len(probe) <= driver_max_names:
-        out = _canonicalize_driver(spark, probe)
+    # guard-ok: dimension-scale collect, one row per distinct name, as the
+    # map has (rewrite_triples broadcasts it)
+    stats = {r["entity_name"]: (r["n_mentions"], r["entity_type"]) for r in
+             rollup.select("entity_name", "n_mentions", "entity_type").collect()}
+    if len(stats) <= DRIVER_LINK_MAX_NAMES:
+        out = _canonicalize_driver(spark, stats)
         if out is not None:
             metrics["path"] = "driver"
             return out
@@ -454,20 +444,19 @@ def canonicalize(rollup: DataFrame, metrics: dict | None = None,
     jsc = spark.sparkContext._jsc
     held = set(jsc.getPersistentRDDs())
     try:
-        names = counts.select("name")
-        comps = connected_components(names, match_edges(names), metrics=metrics)
-        # guard-ok: dimension-scale collect, one row per distinct name
-        # (rewrite_triples broadcasts the map anyway)
-        rows = counts.join(comps, "name").select(
-            "name", "component", "n_mentions", "entity_type").collect()
+        names = local_df(spark, [(n,) for n in stats], "name string")
+        edges = candidate_pairs(names).filter(
+            names_match_udf()(F.col("name_a"), F.col("name_b")))
+        labels = {r["name"]: r["component"] for r in
+                  connected_components(names, edges, metrics=metrics).collect()}
     finally:
         # the candidate pairs (dedup.candidate_edges) and the twophase
-        # rounds rest on local checkpoints the collected rows no longer need
+        # rounds rest on local checkpoints the collected labels no longer need
         rdds = jsc.getPersistentRDDs()
         for rid in rdds:
             if rid not in held and rdds[rid].isCheckpointed():
                 rdds[rid].unpersist(False)
-    return _elect(spark, rows)
+    return _elect(spark, [(n, labels[n], *s) for n, s in stats.items()])
 
 
 def entities_table(canonical_map: DataFrame) -> DataFrame:

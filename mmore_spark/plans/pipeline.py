@@ -91,9 +91,10 @@ def build_graph(documents: DataFrame, extractor=None
     """documents → (mentions, canonical_triples, entities, canonical_map).
 
     Lazy and persists nothing: callers decide caching/writes.  Without a
-    cache the extraction runs once per action that needs it (linking's
-    name collect, then each consumer of the triples); ``KGPipeline``
-    writes it once instead, with the product tables, and reads them back.
+    cache the extraction runs once per action that needs it: linking's
+    name collect, which is its only read of the rollup on either path,
+    then each consumer of the triples.  ``KGPipeline`` writes it once
+    instead, with the product tables, and reads them back.
     """
     g = graph(documents, extractor)
     return g["mentions"], g["canonical_triples"], g["entities"], g["canonical_map"]

@@ -57,12 +57,11 @@ _BASE_CONF = {
     # workers) often enough that an allocation exhausts the JDK's default
     # 2 GCLocker retries and throws OOM with plenty of free heap
     # ("Retried waiting for GCLocker too often" in the GC log).  Raising
-    # the retry budget is the documented mitigation.  Env-overridable:
-    # JDKs that drop the diagnostic flag (the GCLocker rework lands in
-    # newer releases) can set SPARK_GRAFT_JAVA_OPTS="" to omit it.
-    "spark.driver.extraJavaOptions": os.environ.get(
-        "SPARK_GRAFT_JAVA_OPTS",
-        "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"),
+    # the retry budget is the documented mitigation.  A JDK that drops the
+    # diagnostic flag (the GCLocker rework lands in newer releases) needs
+    # this line changed.
+    "spark.driver.extraJavaOptions":
+        "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100",
     # Spark 4 routes upper()/lower()/initcap() under UTF8_BINARY through
     # ICU (UCharacter case mappings).  Profiling the extraction-family
     # queries cold (r6, jstack sampling) showed 124/165 executor-thread
@@ -73,9 +72,8 @@ _BASE_CONF = {
     # byte-identical to ICU for ASCII input (the whole planted vocabulary
     # and every gate table is ASCII — verified, and all 66 oracle rows
     # stay green).  Corpora where ICU-vs-JVM edge cases matter (Turkish
-    # dotted-i, titlecase digraphs) can re-enable via env.
-    "spark.sql.icu.caseMappings.enabled": os.environ.get(
-        "SPARK_GRAFT_ICU_CASE", "false"),
+    # dotted-i, titlecase digraphs) can re-enable it through ``extra_conf``.
+    "spark.sql.icu.caseMappings.enabled": "false",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     "spark.sql.session.timeZone": "UTC",
@@ -256,9 +254,7 @@ def _warm_python_workers(spark: SparkSession) -> None:
     inherit them, is no substitute: at local[4] it left start-up as it was
     (median 6.96 s against 6.85 s over 6 pairs) and the first
     ``mapInPandas`` job slower (1.08 s against 1.01 s).  Computes nothing
-    from any input; disable with SPARK_GRAFT_NO_WORKER_WARMUP=1."""
-    if os.environ.get("SPARK_GRAFT_NO_WORKER_WARMUP"):
-        return
+    from any input."""
     if getattr(spark, "_mmore_workers_warm", False):
         return
     try:

@@ -94,7 +94,7 @@ def test_lsh_candidates_superset_of_er_matches_full_vocab(spark):
     assert not missed, sorted(missed)[:10]
 
 
-def test_candidate_pairs_bucket_cap_star_grouping(spark):
+def test_candidate_pairs_bucket_cap_star_grouping(spark, monkeypatch):
     """VERDICT r03 #3, name path: a same-token-set name family (permuted
     word orders) shares every (perm, minv) bucket; over the cap the join
     emits k-1 star rows instead of k(k-1)/2 pairs, and because
@@ -108,10 +108,9 @@ def test_candidate_pairs_bucket_cap_star_grouping(spark):
     others = ["ZEBRA HOLDINGS", "YONDER TRUST"]
     nodes = spark.createDataFrame([(n,) for n in fam + others], ["name"])
 
-    unc = {tuple(r) for r in linking.candidate_pairs(
-        nodes, max_bucket=1 << 30).collect()}
-    cap = {tuple(r) for r in linking.candidate_pairs(
-        nodes, max_bucket=4).collect()}
+    unc = {tuple(r) for r in linking.candidate_pairs(nodes).collect()}
+    monkeypatch.setattr(linking, "MAX_NAME_BUCKET", 4)
+    cap = {tuple(r) for r in linking.candidate_pairs(nodes).collect()}
     assert len(unc) >= 15                      # full family pairs
     assert len(cap) < len(unc)                 # linearized
     m = min(fam)
@@ -129,8 +128,7 @@ def test_candidate_pairs_bucket_cap_star_grouping(spark):
         assert comps[others[0]] != comps[others[1]]
     # the driver path's star branch (every family bucket holds 6 > 4
     # names) labels the same components as the capped Spark path
-    rows = [{"name": n, "n_mentions": 1, "entity_type": ""} for n in fam + others]
-    driver = linking._canonicalize_driver(spark, rows, max_bucket=4)
+    driver = linking._canonicalize_driver(spark, {n: (1, "") for n in fam + others})
     assert {r["name"]: r["component"] for r in driver.collect()} == comps
 
 
@@ -177,15 +175,15 @@ def test_twophase_cc_long_chain(spark):
     assert 1 <= metrics["rounds"] <= int(math.log2(60)) + 2
 
 
-def test_twophase_cc_zero_iterations_no_crash(spark):
-    """ADVICE r03: max_iterations < 1 on a non-empty edge set used to hit
-    an unbound `rounds` (NameError).  It must now degrade gracefully —
+def test_twophase_cc_zero_iterations_no_crash(spark, monkeypatch):
+    """ADVICE r03: an iteration cap < 1 on a non-empty edge set used to
+    hit an unbound `rounds` (NameError).  It must now degrade gracefully —
     labels from the un-contracted star graph, rounds recorded as 0."""
+    monkeypatch.setattr(linking, "MAX_CC_ITERATIONS", 0)
     nodes = spark.createDataFrame([("A",), ("B,",)], ["name"])
     edges = spark.createDataFrame([("A", "B,")], ["name_a", "name_b"])
     metrics: dict = {}
-    labels = linking._connected_components_twophase(
-        nodes, edges, max_iterations=0, metrics=metrics)
+    labels = linking._connected_components_twophase(nodes, edges, metrics=metrics)
     assert labels.count() == 2
     assert metrics["rounds"] == 0
 
@@ -228,8 +226,8 @@ def test_spark_path_canonicalize_leaves_no_persisted_frames(
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persistent())
     metrics: dict = {}
-    cmap = linking.canonicalize(agg.merge_entities_global(mentions), metrics=metrics,
-                                driver_max_names=0)
+    monkeypatch.setattr(linking, "DRIVER_LINK_MAX_NAMES", 0)
+    cmap = linking.canonicalize(agg.merge_entities_global(mentions), metrics=metrics)
     assert metrics["path"] == "spark" and metrics["strategy"] == strategy
     assert set(persistent()) <= before
     got = {}
@@ -237,3 +235,30 @@ def test_spark_path_canonicalize_leaves_no_persisted_frames(
         got.setdefault(r["component"], set()).add(r["name"])
     golden = {frozenset(v) for v in oracle.golden_clusters(small_docs).values()}
     assert {frozenset(v) for v in got.values()} == golden
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_canonicalize_reads_a_lazy_rollup_once(spark, monkeypatch, path):
+    """Over a lazy rollup — ``graph``'s mentions, never written — the
+    extraction under it runs once per document on either linking path:
+    ``canonicalize`` collects the rollup once and links what it
+    collected."""
+    from mmore_spark.corpus.generator import generate_documents
+    from mmore_spark.operators.extract import rule_extract
+    from mmore_spark.plans.pipeline import graph
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counting(text):
+        calls.add(1)
+        return rule_extract(text)
+
+    g = graph(generate_documents(spark, 120, seed=42), extractor=counting)
+    rollup = agg.merge_entities_global(g["mentions"])
+    if path == "spark":
+        monkeypatch.setattr(linking, "DRIVER_LINK_MAX_NAMES", 0)
+    before = calls.value
+    metrics: dict = {}
+    linking.canonicalize(rollup, metrics=metrics)
+    assert metrics["path"] == path
+    assert calls.value - before == 120

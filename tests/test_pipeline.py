@@ -173,16 +173,13 @@ def test_missing_part_file_reruns_its_stage(spark, small_docs_df, tmp_path):
 
 
 def test_run_leaves_no_persisted_frames(spark, small_docs, tmp_path, monkeypatch):
-    """Linking's distributed path checkpoints its name counts and candidate
-    pairs; the run releases them, so the context holds as many persistent
-    RDDs after ``run`` as before."""
-    import functools
-
+    """Linking's distributed path checkpoints its candidate pairs; the
+    run releases them, so the context holds as many persistent RDDs after
+    ``run`` as before."""
     from mmore_spark.corpus.generator import generate_documents
     from mmore_spark.operators import linking
 
-    monkeypatch.setattr(linking, "canonicalize",
-                        functools.partial(linking.canonicalize, driver_max_names=0))
+    monkeypatch.setattr(linking, "DRIVER_LINK_MAX_NAMES", 0)
     pair_calls = []
     pairs = linking.candidate_pairs
     monkeypatch.setattr(linking, "candidate_pairs",
@@ -220,15 +217,12 @@ def test_name_type_is_the_max_of_its_mention_types(spark, tmp_path, monkeypatch,
     PERSON in ``entities_global``, in ``canonical_map`` on both linking
     paths, and in ``entities``, whose canonical NOVA LABS outnumbers its
     alias NOVA LABS INC."""
-    import functools
-
     from mmore_spark.corpus.generator import DOCUMENTS_SCHEMA
     from mmore_spark.operators import linking
     from mmore_spark.operators.extract import COMPLETION_TAG, RECORD_DELIM, TUPLE_DELIM
 
     if path == "spark":
-        monkeypatch.setattr(linking, "canonicalize", functools.partial(
-            linking.canonicalize, driver_max_names=0))
+        monkeypatch.setattr(linking, "DRIVER_LINK_MAX_NAMES", 0)
 
     def extractor(text):
         etype = "PERSON" if "person" in text else "ORGANIZATION"

@@ -70,7 +70,7 @@ def test_rule_extract_empty_and_no_match():
     assert extract.rule_extract("no entities here") == ""
 
 
-def test_canonicalize_driver_equals_spark_path(spark, small_docs_df):
+def test_canonicalize_driver_equals_spark_path(spark, small_docs_df, monkeypatch):
     import pandas as pd
 
     from mmore_spark.functions.spans import render_text
@@ -81,8 +81,8 @@ def test_canonicalize_driver_equals_spark_path(spark, small_docs_df):
     rollup = agg.merge_entities_global(mentions).cache()
     driver_metrics, spark_metrics = {}, {}
     driver = linking.canonicalize(rollup, metrics=driver_metrics).toPandas()
-    spark_side = linking.canonicalize(rollup, metrics=spark_metrics,
-                                      driver_max_names=0).toPandas()
+    monkeypatch.setattr(linking, "DRIVER_LINK_MAX_NAMES", 0)
+    spark_side = linking.canonicalize(rollup, metrics=spark_metrics).toPandas()
     # lineage tells the two paths apart; CC's strategy is the Spark path's
     assert driver_metrics == {"path": "driver"}
     assert spark_metrics["path"] == "spark"
@@ -94,7 +94,8 @@ def test_canonicalize_driver_equals_spark_path(spark, small_docs_df):
     assert len(a) > 0
 
 
-def test_canonicalize_driver_pair_cap_falls_back_to_spark_path(spark, small_docs_df):
+def test_canonicalize_driver_pair_cap_falls_back_to_spark_path(spark, small_docs_df,
+                                                               monkeypatch):
     """When the driver path would enumerate more candidate pairs than its
     budget it must bail (return None) and canonicalize must fall through
     to the Spark path with identical results."""
@@ -107,13 +108,14 @@ def test_canonicalize_driver_pair_cap_falls_back_to_spark_path(spark, small_docs
     mentions, _ = extract.extract_mentions_triples(rendered, "text")
     mentions = mentions.cache()
     counts = mentions.groupBy("entity_name").count().collect()
-    rows = [{"name": r["entity_name"], "n_mentions": r["count"],
-             "entity_type": ""} for r in counts]
-    assert linking._canonicalize_driver(spark, rows, max_pairs=0) is None
+    stats = {r["entity_name"]: (r["count"], "") for r in counts}
+    monkeypatch.setattr(linking, "DRIVER_LINK_MAX_PAIRS", 0)
+    assert linking._canonicalize_driver(spark, stats) is None
+    monkeypatch.undo()
     # and the full operator still produces the driver-path result when the
     # cap is generous
     normal = linking.canonicalize(agg.merge_entities_global(mentions)).toPandas()
-    assert len(normal) == len(rows)
+    assert len(normal) == len(stats)
 
 
 def test_iceberg_fallback_ignores_remote_warehouse(spark):
