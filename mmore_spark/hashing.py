@@ -12,8 +12,9 @@ signatures, LSH band hashes, salting and deterministic sampling, so any of
 those operators can be oracle-checked value-for-value.
 
 Hot-path note: md5 evaluates JVM-side inside whole-stage codegen in Spark
-(no Python boundary).  At 10^12-doc scale one would swap ``xxhash64`` in via
-``HASH_IMPL`` below — the operators only depend on this module's interface.
+(no Python boundary).  A faster hash such as ``xxhash64`` would replace md5
+in ``h60``, ``h60_sql`` and ``h60_py`` together — the operators only depend
+on this module's interface — at the price of the DuckDB oracle check.
 """
 
 from __future__ import annotations

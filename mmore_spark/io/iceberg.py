@@ -16,9 +16,9 @@ NOT need the jar is real and unit-tested here:
     emulates (io/tables.upsert_table),
   * incremental reads between snapshot ids.
 
-On a cluster with the jar present, ``configure_session`` + these builders
-are the production path: the KG pipeline's stage writes become
-``writeTo(...).overwritePartitions()`` and lineage keys on snapshot ids.
+With the jar and a ``session_conf`` session, ``upsert_table`` runs
+``MERGE INTO`` and ``write_table`` runs ``writeTo(...).overwritePartitions()``.
+No library code calls them: the KG pipeline writes ``io.tables`` parquet.
 """
 
 from __future__ import annotations

@@ -1,13 +1,12 @@
 """Stage table writer and reader; lineage lives in the completion marker.
 
-Production format is Iceberg (partitioned triple/entity tables, snapshot-
-based incremental reads); this sandbox has no Iceberg runtime jar, so the
-writer transparently falls back to parquet with an atomic completion
-marker.  The jar-free half of the Iceberg path — catalog session conf,
-CREATE TABLE DDL with hidden-partition transforms, MERGE INTO upsert
-generation, snapshot-range incremental reads — is real and unit-tested in
-``io/iceberg.py``; with the runtime present those statements drive the
-production tables.  The interface is format-agnostic: every write is ONE
+Stage tables are parquet with an atomic completion marker: the KG
+pipeline writes every stage through ``write_table`` below, Iceberg jar or
+not.  The Iceberg path (partitioned tables, snapshot-based incremental
+reads) — catalog session conf, CREATE TABLE DDL with hidden-partition
+transforms, MERGE INTO upsert generation, snapshot-range reads — is
+unit-tested in ``io/iceberg.py``, whose own writers fall back to this
+module without the jar.  The interface is format-agnostic: every write is ONE
 Spark job (the data write) and lands
   * the data, unpartitioned, one file per write task,
   * ``_mmore_schema.json``, the frame's schema (an empty frame may write
@@ -16,8 +15,7 @@ Spark job (the data write) and lands
     (file, rows, bytes) per committed part file (rows from the parquet
     footers, read on the driver) and the aggregates the write observed.
 Resume = "skip stages whose marker exists and whose listed files are all
-intact" (plans/pipeline.py).  With Iceberg the same writes become
-``writeTo(...).overwritePartitions()`` and lineage keys on snapshot ids.
+intact" (plans/pipeline.py).
 
 Reference analog: per-processor JSONL append + merged results
 (/root/reference/src/mmore/process/dispatcher.py:438-456,

@@ -111,11 +111,24 @@ def test_canonicalize_driver_pair_cap_falls_back_to_spark_path(spark, small_docs
     stats = {r["entity_name"]: (r["count"], "") for r in counts}
     monkeypatch.setattr(linking, "DRIVER_LINK_MAX_PAIRS", 0)
     assert linking._canonicalize_driver(spark, stats) is None
+    # under the name cap, so only the pair budget sends it to the Spark path
+    assert len(stats) <= linking.DRIVER_LINK_MAX_NAMES
+    fallback_metrics = {}
+    fallback = linking.canonicalize(agg.merge_entities_global(mentions),
+                                    metrics=fallback_metrics).toPandas()
+    assert fallback_metrics["path"] == "spark"
     monkeypatch.undo()
     # and the full operator still produces the driver-path result when the
     # cap is generous
-    normal = linking.canonicalize(agg.merge_entities_global(mentions)).toPandas()
+    driver_metrics = {}
+    normal = linking.canonicalize(agg.merge_entities_global(mentions),
+                                  metrics=driver_metrics).toPandas()
     assert len(normal) == len(stats)
+    assert driver_metrics == {"path": "driver"}
+    key = ["name"]
+    pd.testing.assert_frame_equal(
+        fallback.sort_values(key).reset_index(drop=True),
+        normal.sort_values(key).reset_index(drop=True))
 
 
 def test_iceberg_fallback_ignores_remote_warehouse(spark):

@@ -315,7 +315,9 @@ def test_stream_checkpoint_reset_does_not_drop_new_data(spark, tmp_path):
 
 def test_stream_seen_ids_file_count_bounded(spark, tmp_path):
     """_seen_ids must not grow one file per drain forever: after many
-    drains the compactor folds it back under the threshold (VERDICT r02)."""
+    drains the compactor folds it back under the threshold (VERDICT r02).
+    The fold runs on the driver, so the drain that folds stays within
+    STEADY_DRAIN_JOBS like every other."""
     import pyarrow.parquet as pq
 
     from mmore_spark.streaming.ingest import SEEN_COMPACT_MAX_FILES
@@ -329,7 +331,8 @@ def test_stream_seen_ids_file_count_bounded(spark, tmp_path):
         total += 3
         generate_documents(spark, total, seed=9).coalesce(1).write.mode(
             "append").parquet(staging)
-        stream_extract_triples(spark, staging, out, ckpt)
+        c = stream_extract_triples(spark, staging, out, ckpt)
+        assert 0 < c["jobs"] <= STEADY_DRAIN_JOBS, (i, c)
     seen_dir = os.path.join(out, "_seen_ids")
     files = [os.path.join(seen_dir, f) for f in os.listdir(seen_dir)
              if f.endswith(".parquet")]
@@ -345,17 +348,18 @@ def test_stream_seen_ids_file_count_bounded(spark, tmp_path):
     assert c["seen_bytes_read"] == c["seen_bytes_total"] > 0
 
 
-def test_seen_compaction_is_size_tiered(spark, tmp_path):
+def test_seen_compaction_is_size_tiered(spark, tmp_path, monkeypatch):
     """VERDICT r03 #7: compaction folds the small seen files once there are
-    more than max_files of them, but never rewrites SEALED files
-    (≥ tier_bytes) — so per-compaction I/O is bounded by the small files,
-    not history size.  The sealed file's name/size/mtime survive every
-    round, and no id is ever lost."""
+    more than SEEN_COMPACT_MAX_FILES of them, but never rewrites SEALED
+    files (≥ SEEN_TIER_BYTES) — so per-compaction I/O is bounded by the
+    small files, not history size.  The sealed file's name/size/mtime
+    survive every round, and no id is ever lost."""
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    import mmore_spark.streaming.ingest as ingest
     from mmore_spark.streaming.ingest import _compact_seen, _read_seen
 
     seen = str(tmp_path / "out8" / "_seen_ids")
@@ -375,7 +379,9 @@ def test_seen_compaction_is_size_tiered(spark, tmp_path):
     append(old_ids)
     sealed_before = files()
     assert len(sealed_before) == 1
-    tier_bytes = min(sz for sz, _m in sealed_before.values())  # seals it
+    monkeypatch.setattr(ingest, "SEEN_COMPACT_MAX_FILES", 16)
+    monkeypatch.setattr(ingest, "SEEN_TIER_BYTES",  # seals it
+                        min(sz for sz, _m in sealed_before.values()))
 
     expect = set(old_ids)
     for rnd in range(3):
@@ -383,7 +389,7 @@ def test_seen_compaction_is_size_tiered(spark, tmp_path):
         for nid in new:
             append([nid])  # one tiny file per drain, like the sink
         expect.update(new)
-        _compact_seen(spark, seen, max_files=16, tier_bytes=tier_bytes)
+        _compact_seen(seen)
         now = files()
         # the 18 new files (plus the previous fold) folded into one
         assert len(now) == 2, now
@@ -430,25 +436,31 @@ def test_cli_ingest_verb(spark, tmp_path, capsys):
     assert out2["rows_written"] == 0
 
 
-def test_crashed_fold_remnant_does_not_poison_history_reads(spark, tmp_path):
-    """A fold that crashed after writing its tmp must not change what the
-    seen set reads: the tmp is an underscore-prefixed entry inside the
-    flat set (invisible to Spark's file index), and the next fold
-    replaces it without losing an id."""
-    from mmore_spark.streaming.ingest import (
-        _append_seen, _compact_seen, _read_seen)
+def test_crashed_fold_remnant_does_not_poison_history_reads(spark, tmp_path,
+                                                           monkeypatch):
+    """A fold that crashed after renaming its file in but before retiring
+    its sources leaves every id twice: the seen set reads the same id set,
+    and the next fold leaves one copy of each id."""
+    import mmore_spark.streaming.ingest as ingest
 
     seen = str(tmp_path / "o" / "_seen_ids")
     want = {f"d{i}" for i in range(50)}
-    _append_seen(sorted(want), seen)
-    # simulate a crashed fold: tmp written, sources not yet retired,
-    # process died
-    remnant = os.path.join(seen, "_fold_tmp")
-    spark.createDataFrame([("dX",)], "doc_id string").coalesce(1) \
-        .write.parquet(remnant)
-    vals = {r["doc_id"] for r in _read_seen(spark, seen).collect()}
-    assert vals == want  # remnant invisible
-    _compact_seen(spark, seen, max_files=0)
-    assert not os.path.exists(remnant)
-    vals = {r["doc_id"] for r in _read_seen(spark, seen).collect()}
-    assert vals == want
+    for lo in range(0, 50, 10):
+        ingest._append_seen([f"d{i}" for i in range(lo, lo + 10)], seen)
+    monkeypatch.setattr(ingest, "SEEN_COMPACT_MAX_FILES", 0)
+    real_remove = ingest._remove
+
+    def crash_once(path):
+        monkeypatch.setattr(ingest, "_remove", real_remove)
+        raise OSError("simulated crash before the sources are retired")
+
+    monkeypatch.setattr(ingest, "_remove", crash_once)
+    with pytest.raises(OSError, match="simulated crash"):
+        ingest._compact_seen(seen)
+    assert len(ingest._seen_files(seen)) == 6  # 5 sources + the fold
+    vals = [r["doc_id"] for r in ingest._read_seen(spark, seen).collect()]
+    assert set(vals) == want and len(vals) == 2 * len(want)
+    ingest._compact_seen(seen)
+    assert len(ingest._seen_files(seen)) == 1
+    vals = [r["doc_id"] for r in ingest._read_seen(spark, seen).collect()]
+    assert sorted(vals) == sorted(want)
