@@ -118,15 +118,6 @@ def golden_clusters(docs: list[Doc]) -> dict[str, set[str]]:
     return dict(clusters)
 
 
-def triple_key_set(triples: list[dict], per_doc: bool = True) -> set[tuple]:
-    """Match keys per FIXTURES.md §3: unordered (subj, obj) pair (+doc_id)."""
-    keys = set()
-    for t in triples:
-        pair = (min(t["subj"], t["obj"]), max(t["subj"], t["obj"]))
-        keys.add((t["doc_id"], *pair) if per_doc else pair)
-    return keys
-
-
 def precision_recall(predicted: list[dict], golden: list[dict],
                      per_doc: bool = True) -> tuple[float, float]:
     """Triple match = unordered pair match AND predicate-set overlap

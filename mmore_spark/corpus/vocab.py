@@ -17,8 +17,6 @@ from __future__ import annotations
 
 import itertools
 
-ENTITY_TYPES = ["ORGANIZATION", "PERSON", "LOCATION", "EVENT", "DATE"]
-
 _ORG_STEMS = [
     "Acme", "Globex", "Initech", "Umbrella", "Stark", "Wayne", "Wonka",
     "Tyrell", "Cyberdyne", "Aperture", "BlueSun", "Gringotts", "Hooli",

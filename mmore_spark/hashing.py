@@ -13,8 +13,9 @@ those operators can be oracle-checked value-for-value.
 
 Hot-path note: md5 evaluates JVM-side inside whole-stage codegen in Spark
 (no Python boundary).  A faster hash such as ``xxhash64`` would replace md5
-in ``h60``, ``h60_sql`` and ``h60_py`` together — the operators only depend
-on this module's interface — at the price of the DuckDB oracle check.
+in ``h60`` and ``h60_py`` together — the operators only depend on this
+module's interface — at the price of the DuckDB oracle check, whose SQL
+spells the same md5 slice.
 """
 
 from __future__ import annotations
@@ -32,12 +33,6 @@ def h60(col: Column | str, seed: str = "") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     payload = F.concat(c.cast("string"), F.lit(seed)) if seed else c.cast("string")
     return F.conv(F.substring(F.md5(payload), 1, HEX_DIGITS), 16, 10).cast("long")
-
-
-def h60_sql(expr: str, seed: str = "") -> str:
-    """DuckDB SQL fragment computing the same hash of string expression."""
-    payload = f"(CAST({expr} AS VARCHAR) || '{seed}')" if seed else f"CAST({expr} AS VARCHAR)"
-    return f"CAST(('0x' || substr(md5({payload}), 1, {HEX_DIGITS})) AS BIGINT)"
 
 
 def h60_py(value: str, seed: str = "") -> int:

@@ -1,13 +1,9 @@
 """Stage table writer and reader; lineage lives in the completion marker.
 
 Stage tables are parquet with an atomic completion marker: the KG
-pipeline writes every stage through ``write_table`` below, Iceberg jar or
-not.  The Iceberg path (partitioned tables, snapshot-based incremental
-reads) — catalog session conf, CREATE TABLE DDL with hidden-partition
-transforms, MERGE INTO upsert generation, snapshot-range reads — is
-unit-tested in ``io/iceberg.py``, whose own writers fall back to this
-module without the jar.  The interface is format-agnostic: every write is ONE
-Spark job (the data write) and lands
+pipeline writes every stage through ``write_table`` below, and the CLI's
+process verb writes its output through ``replace_table``.  Every write is
+ONE Spark job (the data write) and lands
   * the data, unpartitioned, one file per write task,
   * ``_mmore_schema.json``, the frame's schema (an empty frame may write
     no part file, and schema inference on it fails),
@@ -32,7 +28,6 @@ import time
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
-from ..functions.localrel import local_df
 
 
 def _marker(path: str) -> str:
@@ -155,17 +150,6 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_lineage(spark: SparkSession, path: str) -> DataFrame:
-    """The marker's per-file records as a small frame:
-    (stage, file, rows, bytes)."""
-    meta = read_marker(path)
-    if meta is None:
-        raise FileNotFoundError(f"no completion marker under {path}")
-    return local_df(spark, [(meta["stage"], f["file"], f["rows"], f["bytes"])
-                            for f in meta["files"]],
-                    "stage string, file string, rows long, bytes long")
-
-
 def replace_table(spark: SparkSession, path: str, df: DataFrame,
                   stage: str = "replace") -> dict:
     """Full-replacement write that stays safe when ``df``'s plan READS
@@ -199,8 +183,8 @@ def upsert_table(spark: SparkSession, path: str, updates: DataFrame,
                  key: str = "doc_id", version_col: str | None = None) -> dict:
     """MERGE-style upsert: rows in ``updates`` replace existing rows with
     the same key (latest-wins when ``version_col`` is given, else updates
-    always win).  With Iceberg this is ``MERGE INTO``; the parquet
-    fallback rewrites via an adjacent temp dir + directory swap.  The
+    always win).  A table format would do this with ``MERGE INTO``;
+    here it rewrites via an adjacent temp dir + directory swap.  The
     two-step rename is not atomic as a unit: a crash between the renames
     leaves no table at ``path`` — readers and the next upsert heal it via
     ``_recover_upsert`` (restore ``.__upsert_old``, retry the upsert).

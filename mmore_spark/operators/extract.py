@@ -352,11 +352,9 @@ def extract_mentions_triples_chunked(documents: DataFrame,
         media_refs("spans").alias("modalities"),
     )
     chunks = chunk_stage(base, chunk_size, table_mode)
-    mentions_c, triples_c = extract_mentions_triples(
-        chunks.select("doc_id", "text"), "text", extractor
-    )
+    combined = extract_combined(chunks, "text", extractor)
     mentions = (
-        mentions_c.groupBy("doc_id", "entity_name")
+        explode(combined, "entities").groupBy("doc_id", "entity_name")
         .agg(
             F.max("entity_type").alias("entity_type"),  # '' loses to any type
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("descriptions"))))
@@ -364,7 +362,7 @@ def extract_mentions_triples_chunked(documents: DataFrame,
         )
     )
     triples = (
-        triples_c.groupBy(
+        explode(combined, "triples").groupBy(
             "doc_id",
             F.least("subj", "obj").alias("subj"),
             F.greatest("subj", "obj").alias("obj"),
@@ -382,16 +380,3 @@ def explode(combined: DataFrame, column: str) -> DataFrame:
     (→ mentions) or ``triples`` array column, keyed by doc_id.  Narrow:
     Catalyst pipelines it with whatever produced ``combined``."""
     return combined.select("doc_id", F.inline(column))
-
-
-def extract_mentions_triples(df: DataFrame, text_col: str = "text",
-                             extractor: Extractor | None = None
-                             ) -> tuple[DataFrame, DataFrame]:
-    """Full stage: returns (mentions_df, triples_df).
-
-    Both explode the same lazy combined frame, so each action on either
-    re-runs the extraction; reuse via cache or a write is the caller's
-    call (plans/pipeline.py writes the combined frame once).
-    """
-    combined = extract_combined(df, text_col, extractor)
-    return explode(combined, "entities"), explode(combined, "triples")

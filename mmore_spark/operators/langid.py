@@ -71,56 +71,6 @@ def train_langid(labeled: DataFrame, text_col: str = "text",
     )
 
 
-def load_langdetect_profiles(spark, paths: "list[str] | str") -> DataFrame:
-    """Load langdetect's OWN profile artifacts (the language-detection
-    project's public JSON format: ``{"name": lang, "freq": {ngram:
-    count}, "n_words": [n1, n2, n3]}``, one file per language —
-    langdetect ships them under ``langdetect/profiles/``) into the
-    (lang, tri, logp, floor_logp) frame ``classify_lang`` consumes.
-
-    Only the 3-gram rows are used (this operator is a trigram NB);
-    counts are Laplace-smoothed exactly like ``train_langid`` with the
-    vocabulary = distinct trigrams across the loaded profiles.  So a
-    corpus owner with real langdetect profiles plugs them straight into
-    the native classifier — the reference seam's artifact, no library
-    needed.  Dimension-scale: profiles parse on the driver (a few MB),
-    and the result pins with localCheckpoint for the broadcast join."""
-    import glob as globmod
-    import json
-    import math
-    import os
-
-    if isinstance(paths, str):
-        paths = sorted(
-            globmod.glob(os.path.join(paths, "*"))) if os.path.isdir(paths) \
-            else [paths]
-    per_lang: dict[str, dict[str, int]] = {}
-    totals: dict[str, int] = {}
-    for p in paths:
-        with open(p, encoding="utf-8") as f:
-            prof = json.load(f)
-        lang = prof["name"]
-        tris = {k.lower(): int(v) for k, v in prof["freq"].items()
-                if len(k) == 3}
-        if not tris:
-            continue
-        per_lang[lang] = tris
-        n_words = prof.get("n_words") or []
-        totals[lang] = int(n_words[2]) if len(n_words) >= 3 \
-            else sum(tris.values())
-    vocab = len({t for tris in per_lang.values() for t in tris})
-    rows = []
-    for lang, tris in per_lang.items():
-        n = totals[lang]
-        floor = math.log(1.0 / (n + vocab))
-        for tri, c in tris.items():
-            rows.append((lang, tri, math.log((c + 1) / (n + vocab)), floor))
-    from ..functions.localrel import local_df
-    return local_df(
-        spark, rows, "lang string, tri string, logp double, floor_logp double"
-    ).localCheckpoint()
-
-
 def classify_lang(df: DataFrame, profiles: DataFrame,
                   text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(id, text) → (id, lang_pred, lang_score) via Naive Bayes argmax.

@@ -1,74 +1,21 @@
-"""Multimodal column operators: decode / feature-extract / resize /
-frame-sample over opaque ``binary`` media columns.
+"""Media decoding over opaque ``binary`` payloads, stdlib only.
 
 The reference processes media with real models (PyMuPDF image extraction +
-size/variance gate, process/utils.py:60-92 ``clean_image`` min 512×512,
-grayscale variance ≥ 100; Whisper ASR + frame sampling every
-``sample_rate`` seconds, media_processor.py:141-210).  The image/audio
-libraries are NOT in this container, so the decode step is STUBBED behind
-``set_decoder`` (a deterministic fake by default, NotImplementedError for
-real codecs) — but the Spark-side plumbing is real and tested: schema,
-Arrow batch shape, partitioning, and the native quality-gate filter that
-consumes the extracted features.
-
-Plumbing pattern = the reference's model-cache-per-executor idiom
-(pdf_processor.py:37-68): the decoder is initialized lazily once per
-executor inside the Arrow stage.
+size/variance gate, process/utils.py:60-92; Whisper ASR + frame sampling,
+media_processor.py:141-210).  Those libraries are not installed, so this
+module parses what the public container formats give without them: WAV
+samples, MP3 frame headers and ID3 tags, PNG/JPEG/GIF dimensions and the
+MP4 movie duration.  The source registry calls the ``decode_*`` parsers
+per file; ``extract_audio_features`` runs the WAV decoder over a payload
+column in one Arrow stage.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Iterator
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-from ..functions.hof import fresh
-
-MEDIA_FEATURES_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("variance", T.DoubleType()),
-    T.StructField("duration_s", T.DoubleType()),
-    T.StructField("n_frames_sampled", T.IntegerType()),
-])
-
-Decoder = Callable[[str, bytes | None, str], dict]
-
-
-def fake_decoder(media_ref: str, payload: bytes | None, kind: str) -> dict:
-    """Deterministic stand-in for real codecs: features derived from the
-    md5 of the media reference (stable across runs/partitionings)."""
-    import hashlib
-
-    h = int(hashlib.md5(media_ref.encode()).hexdigest()[:15], 16)
-    width = 256 + (h % 1280)
-    height = 256 + ((h >> 11) % 1280)
-    variance = float(50 + (h >> 22) % 200)
-    duration = float((h >> 31) % 600) if kind in ("audio", "video") else 0.0
-    return {
-        "width": width if kind == "image" else 0,
-        "height": height if kind == "image" else 0,
-        "variance": variance if kind == "image" else 0.0,
-        "duration_s": duration,
-    }
-
-
-def real_decoder(media_ref: str, payload: bytes | None, kind: str) -> dict:
-    """Real codec path: WAV PCM is decoded for real with the stdlib
-    (``decode_wav``); everything else (mp3/mp4/images) still needs
-    PIL/moviepy, absent from this container."""
-    if payload is not None and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        w = decode_wav(payload)
-        return {"width": 0, "height": 0, "variance": 0.0,
-                "duration_s": w["duration_s"]}
-    raise NotImplementedError(
-        "image/audio decode libraries are not available in this container; "
-        "install PIL/moviepy and plug a decoder via extract_media_features(decoder=...)"
-    )
 
 
 def decode_wav(payload: bytes) -> dict:
@@ -331,102 +278,3 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
 
     return df.select("doc_id", "media_ref", "payload").mapInPandas(
         run, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def extract_media_features(df: DataFrame, decoder: Decoder = fake_decoder,
-                           frame_sample_rate_s: float = 10.0) -> DataFrame:
-    """(doc_id, spans) → one feature row per media span via one Arrow stage.
-
-    Frame sampling mirrors the reference: one frame every ``sample_rate``
-    seconds of video (media_processor.py sample-rate contract).
-    """
-    media = df.select(
-        "doc_id",
-        F.explode(F.filter("spans", fresh(lambda msp2: msp2["kind"] != F.lit("text")))).alias("m"),
-    ).select(
-        "doc_id", F.col("m.media_ref").alias("media_ref"), F.col("m.kind").alias("kind")
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        # executor-local decoder init (model-cache idiom)
-        dec = decoder
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, kind in zip(pdf["doc_id"], pdf["media_ref"], pdf["kind"]):
-                feats = dec(ref, None, kind)
-                n_frames = (
-                    int(feats["duration_s"] // frame_sample_rate_s) + 1
-                    if kind == "video" and feats["duration_s"] > 0 else 0
-                )
-                rows.append({
-                    "doc_id": doc_id, "media_ref": ref, "kind": kind,
-                    "width": feats["width"], "height": feats["height"],
-                    "variance": feats["variance"],
-                    "duration_s": feats["duration_s"],
-                    "n_frames_sampled": n_frames,
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_FEATURES_SCHEMA.fields])
-
-    return media.mapInPandas(run, schema=MEDIA_FEATURES_SCHEMA)
-
-
-def image_quality_gate(features: DataFrame, min_side: int = 512,
-                       min_variance: float = 100.0) -> DataFrame:
-    """The reference's clean_image gate (process/utils.py:60-92): keep
-    images ≥ min_side × min_side with grayscale variance ≥ min_variance.
-    Native comparisons — no Python.  A NULL variance (real header-only
-    features — pixel statistics need absent imaging libs) passes the
-    variance clause: unknown is not evidence of low quality, and the size
-    gate still applies."""
-    is_image = F.col("kind") == "image"
-    passes = (
-        (F.col("width") >= min_side)
-        & (F.col("height") >= min_side)
-        & (F.col("variance").isNull() | (F.col("variance") >= min_variance))
-    )
-    return features.withColumn("keep", ~is_image | passes)
-
-
-IMAGE_FEATURES_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("format", T.StringType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("variance", T.DoubleType()),  # needs pixels: always NULL here
-    T.StructField("error", T.StringType()),
-])
-
-
-def extract_image_features(df: DataFrame) -> DataFrame:
-    """(doc_id, media_ref, payload binary) → REAL header-derived image
-    features in ONE Arrow stage (decode_image_meta: PNG/JPEG/GIF, no
-    pixel decode); per-file failures isolate into ``error``.  Output is
-    image_quality_gate-compatible (variance NULL → size-only gating)."""
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, payload in zip(pdf["doc_id"], pdf["media_ref"],
-                                            pdf["payload"]):
-                try:
-                    m = decode_image_meta(bytes(payload))
-                    rows.append({"doc_id": doc_id, "media_ref": ref,
-                                 "kind": "image", "format": m["format"],
-                                 "width": m["width"], "height": m["height"],
-                                 "variance": None, "error": None})
-                except Exception as e:
-                    rows.append({"doc_id": doc_id, "media_ref": ref,
-                                 "kind": "image", "format": None,
-                                 "width": None, "height": None,
-                                 "variance": None,
-                                 "error": f"{type(e).__name__}: {e}"})
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              IMAGE_FEATURES_SCHEMA.fields])
-
-    return df.select("doc_id", "media_ref", "payload").mapInPandas(
-        run, schema=IMAGE_FEATURES_SCHEMA)

@@ -1,21 +1,17 @@
-"""Pagination parsing + paragraph-position assignment (SURVEY.md §2.5).
+"""Pagination parsing (SURVEY.md §2.5).
 
-Reference semantics re-expressed:
-  * ``_parse_pagination`` (/root/reference/src/mmore/process/processors/
-    pdf_processor.py:211-256): marker page separators
-    ``\\n\\n{page}----\\n\\n`` split the text into pages; paragraphs are
-    the non-blank ``\\n\\n`` segments; output is
-    ``paragraph_starts = [(char_offset, page_id, para_idx), …]`` with a
-    sentinel ``(len(clean_text), -1, -1)`` appended and the separators
-    stripped from the text;
-  * ``_assign_paragraph_positions`` (chunker/multimodal.py:247-273): a
-    chunk [start, end) collects every ``[page, para]`` whose paragraph
-    interval it overlaps.
+Reference semantics re-expressed: ``_parse_pagination``
+(/root/reference/src/mmore/process/processors/pdf_processor.py:211-256):
+marker page separators ``\\n\\n{page}----\\n\\n`` split the text into
+pages; paragraphs are the non-blank ``\\n\\n`` segments; output is
+``paragraph_starts = [(char_offset, page_id, para_idx), …]`` with a
+sentinel ``(len(clean_text), -1, -1)`` appended and the separators
+stripped from the text.
 
-Spark shape: pagination parse runs inside the per-format Arrow parse
-stage (it is pure string arithmetic); paragraph assignment is a native
-array expression over the per-doc ``paragraph_starts`` column — no extra
-Python hop for the assignment.
+Spark shape: the parse runs inside the per-format Arrow parse stage (it
+is pure string arithmetic).  The reference's chunk-to-paragraph
+assignment (``_assign_paragraph_positions``) has no counterpart: no
+entry point chunks paginated text with positions.
 """
 
 from __future__ import annotations
@@ -53,25 +49,3 @@ def parse_pagination(text: str) -> tuple[list[tuple[int, int, int]], str]:
         pos += len(content)
     starts.append((pos, -1, -1))
     return starts, "".join(c for _pid, c in pages)
-
-
-def assign_paragraph_positions(
-    chunks: list[tuple[int, int]],
-    paragraph_starts: list[tuple[int, int, int]],
-) -> list[list[list[int]]]:
-    """Per chunk [start, end): the [page, para] pairs whose paragraph
-    interval overlaps it (multimodal.py:262-271 semantics: paragraph i
-    spans [starts[i], starts[i+1]); chunk collects it iff
-    chunk.start < next_start and chunk.end > para_start)."""
-    out: list[list[list[int]]] = []
-    if not paragraph_starts:
-        return [[] for _ in chunks]
-    for start, end in chunks:
-        acc: list[list[int]] = []
-        for i in range(len(paragraph_starts) - 1):
-            p_start, page, para = paragraph_starts[i]
-            next_start = paragraph_starts[i + 1][0]
-            if start < next_start and end > p_start:
-                acc.append([page, para])
-        out.append(acc)
-    return out

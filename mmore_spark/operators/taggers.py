@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..corpus.generator import ATTACHMENT_TAG
 from ..functions.hof import fresh
 
 
@@ -35,13 +34,6 @@ def file_namer(file_path: str = "file_path") -> Column:
     return F.when(
         F.col(file_path).isNull() | (F.length(F.col(file_path)) == 0), F.lit("unknown")
     ).otherwise(base).alias("file_name")
-
-
-def text_hash(text: str = "text") -> Column:
-    """md5 of text with attachment tags stripped (tagger/hash.py:6-15:
-    the registered content hash strips the placeholder first)."""
-    stripped = F.regexp_replace(F.col(text), ATTACHMENT_TAG.replace("<", "\\<"), "")
-    return F.md5(stripped).alias("text_md5")
 
 
 def metafuse(template: str, text: str = "text", prepend: bool = True,
@@ -81,67 +73,6 @@ def lang_heuristic(text: str = "text") -> Column:
     stop = F.size(F.filter(words, fresh(lambda lgw: lgw.isin("the", "a"))))
     return F.when(stop / F.size(words) >= 0.03, F.lit("en")).otherwise(
         F.lit("unknown")).alias("lang_guess")
-
-
-def lang_detector(text: str = "text") -> Column:
-    """lang_detector tagger (tagger/lang_detector.py:7-18): EXACT library
-    parity when ``langdetect`` is importable (Arrow-batched, seeded for
-    determinism), else the native heuristic — same column contract, so
-    pipelines are source-compatible either way."""
-    try:
-        import langdetect  # noqa: F401
-    except ImportError:
-        return lang_heuristic(text)
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _detect(texts):
-        from langdetect import DetectorFactory, detect
-
-        DetectorFactory.seed = 0  # langdetect is stochastic by default
-        out = []
-        for t in texts:
-            try:
-                out.append(detect(t or ""))
-            except Exception:
-                out.append("unknown")
-        return pd.Series(out)
-
-    _detect.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(_detect, "string")(F.col(text)).alias("lang_guess")
-
-
-def clean_text_exact(text: str = "text") -> Column:
-    """clean_text with EXACT ``cleantext`` parity when the library is
-    importable (reference arg set, process/utils.py:28-57), else the
-    native approximation above — same column contract."""
-    try:
-        from cleantext import clean  # noqa: F401
-    except ImportError:
-        return clean_text(text)
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _clean(texts):
-        from cleantext import clean
-
-        return pd.Series([
-            clean(
-                text=t or "", fix_unicode=True, to_ascii=False, lower=False,
-                no_line_breaks=False, no_urls=False, no_emails=True,
-                no_phone_numbers=False, no_numbers=False, no_digits=False,
-                no_currency_symbols=False, no_punct=False,
-                replace_with_punct="", replace_with_url="This is a URL",
-                replace_with_email="email@email.com",
-                replace_with_phone_number="", replace_with_number="123",
-                replace_with_digit="0", replace_with_currency_symbol="$",
-                lang="en",
-            )
-            for t in texts
-        ])
-
-    _clean.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(_clean, "string")(F.col(text)).alias("text_clean")
 
 
 def apply_taggers(df: DataFrame, *taggers: Column) -> DataFrame:

@@ -20,8 +20,8 @@ SKIPS completed stages (exact resume after failure, north_rule).
 Layout: every stage table is written unpartitioned, one file per write
 task.  No reader prunes on a partition column, and a hash-bucket column
 would multiply the files by the bucket count.  Production partitioning
-belongs in the Iceberg DDL's hidden transforms (``bucket(32, subj)``,
-``io/iceberg.create_table_ddl``), which need no data column.
+belongs in a table format's hidden transforms (Iceberg's
+``bucket(32, subj)``), which need no data column; none is wired here.
 """
 
 from __future__ import annotations

@@ -54,10 +54,6 @@ def parse_md(path: str, payload: bytes) -> tuple[str, list]:
     return _MD_IMG.sub(ATTACHMENT_TAG, text), refs
 
 
-_HTML_IMG = re.compile(r"<img[^>]*src=[\"']([^\"']*)[\"'][^>]*>", re.I)
-_HTML_TAG = re.compile(r"<[^>]+>")
-
-
 _HTML_ATT_SENTINEL = "\x00ATT\x00"
 
 

@@ -2,7 +2,9 @@
 scripts/run_pipeline.py --input <documents table> --warehouse <dir>
 
 Runs the full resumable KG pipeline (render → extract → link →
-canonicalize → materialize) on a (doc_id, spans) table.  Re-running with
+canonicalize → materialize) on a (doc_id, spans) table, or on the
+output of ``python -m mmore_spark process``, whose parsed files become
+documents through mmore_spark.sources.registry.to_documents.  Re-running with
 the same warehouse resumes from the last completed stage (completion
 markers carrying per-file lineage, mmore_spark.plans.pipeline).
 
@@ -21,7 +23,8 @@ import json
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", help="parquet path of documents(doc_id, spans)")
+    ap.add_argument("--input", help="parquet path of documents(doc_id, spans) "
+                    "or of the process verb's output")
     ap.add_argument("--warehouse", required=True, help="output warehouse directory")
     ap.add_argument("--generate", type=int, default=0,
                     help="instead of --input, generate N synthetic docs (seed 42)")
@@ -39,6 +42,10 @@ def main() -> None:
         docs = generate_documents(spark, args.generate, seed=42)
     else:
         docs = spark.read.parquet(args.input)
+        if "spans" not in docs.columns:  # the `process` verb's parsed files
+            from mmore_spark.sources.registry import to_documents
+
+            docs = to_documents(docs)
 
     pipe = KGPipeline(spark, args.warehouse)
     out = pipe.run(docs)

@@ -19,7 +19,9 @@ def _key_m(rows):
 
 def test_chunked_equals_doc_level(spark, small_docs_df):
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
-    m_direct, t_direct = extract.extract_mentions_triples(rendered)
+    combined = extract.extract_combined(rendered)
+    m_direct = extract.explode(combined, "entities")
+    t_direct = extract.explode(combined, "triples")
     m_chunked, t_chunked = extract.extract_mentions_triples_chunked(
         small_docs_df, chunk_size=64)
 

@@ -90,7 +90,9 @@ def test_spark_extraction_matches_golden(spark, small_docs, small_docs_df):
     from mmore_spark.functions.spans import render_text
 
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
-    mentions_df, triples_df = extract.extract_mentions_triples(rendered)
+    combined = extract.extract_combined(rendered)
+    mentions_df = extract.explode(combined, "entities")
+    triples_df = extract.explode(combined, "triples")
 
     pred_t = [r.asDict() for r in triples_df.collect()]
     golden_t = oracle.golden_triples(small_docs)

@@ -1,8 +1,7 @@
-"""Filter family + multimodal plumbing tests."""
+"""Filter family + media decoder tests."""
 
 import os
 
-from pyspark.sql import functions as F
 
 from mmore_spark.operators import filters as FL
 from mmore_spark.operators import multimodal as MM
@@ -112,36 +111,6 @@ def test_unigram_logprob_shuffle_fallback(spark, monkeypatch):
     assert got[1]["n_words"] == 3
     expect2 = (math.log10(4 / 5) + math.log10(1 / 5)) / 2
     assert abs(got[2]["avg_logprob"] - expect2) < 1e-9
-
-
-def test_media_features_and_gate(spark, small_docs_df):
-    feats = MM.extract_media_features(small_docs_df)
-    rows = feats.collect()
-    assert len(rows) > 0
-    # every media span surfaced exactly once
-    n_media = small_docs_df.select(
-        F.sum(F.size(F.filter("spans", lambda s9: s9["kind"] != F.lit("text"))))
-    ).first()[0]
-    assert len(rows) == n_media
-    # deterministic features (fake decoder keyed on media_ref)
-    again = {(r["media_ref"], r["width"], r["variance"]) for r in
-             MM.extract_media_features(small_docs_df).collect()}
-    assert {(r["media_ref"], r["width"], r["variance"]) for r in rows} == again
-
-    gated = MM.image_quality_gate(feats)
-    gr = gated.filter(F.col("kind") == "image").collect()
-    for r in gr:
-        expected = r["width"] >= 512 and r["height"] >= 512 and r["variance"] >= 100
-        assert r["keep"] == expected
-    # non-images always pass the image gate
-    assert gated.filter((F.col("kind") != "image") & ~F.col("keep")).count() == 0
-
-
-def test_real_decoder_is_stubbed():
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        MM.real_decoder("x.png", None, "image")
 
 
 def _make_wav(freq=440.0, seconds=0.5, rate=8000, amp=0.5, channels=1,
@@ -368,24 +337,3 @@ def test_decode_image_meta_headers():
 
     with pytest.raises(NotImplementedError):
         MM.decode_image_meta(b"BM bitmap not supported")
-
-
-def test_extract_image_features_and_size_gate(spark):
-    """REAL header-only image features drive the 512x512 size gate end to
-    end: big PNG passes, small JPEG rejected, junk isolates per file;
-    NULL variance (pixels undecodable without imaging libs) passes the
-    variance clause rather than silently dropping every image."""
-    rows = [
-        ("d1", "big.png", bytearray(_make_png(513, 600))),
-        ("d2", "small.jpg", bytearray(_make_jpeg(100, 80))),
-        ("d3", "junk.img", bytearray(b"not an image")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, media_ref string, payload binary")
-    feats = MM.extract_image_features(df)
-    got = {r["media_ref"]: r for r in feats.collect()}
-    assert got["big.png"]["width"] == 513 and got["big.png"]["error"] is None
-    assert got["small.jpg"]["format"] == "jpeg"
-    assert got["junk.img"]["error"] is not None
-    gated = MM.image_quality_gate(feats.filter(F.col("error").isNull()))
-    keep = {r["media_ref"]: r["keep"] for r in gated.collect()}
-    assert keep == {"big.png": True, "small.jpg": False}

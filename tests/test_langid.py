@@ -90,37 +90,3 @@ def test_langid_no_profile_hits_and_short_docs_survive(spark):
     assert rows[0]["lang_pred"] == "cc"
     assert rows[1]["lang_pred"] in set(_VOCABS) and rows[1]["lang_score"] < 0
     assert rows[2]["lang_pred"] is None and rows[2]["lang_score"] is None
-
-
-def test_load_langdetect_profile_artifacts(spark, tmp_path):
-    """Round 5: real langdetect profile JSONs (the library's own
-    artifact format — {"name", "freq", "n_words"}) load straight into
-    classify_lang, no library needed."""
-    import json
-    from collections import Counter
-
-    for lang, words in _VOCABS.items():
-        text = " ".join(words * 30).lower()
-        freq = Counter(text[i:i + 3] for i in range(len(text) - 2))
-        # langdetect profiles also carry 1- and 2-grams; the loader must
-        # ignore them
-        freq.update(Counter(text[i:i + 1] for i in range(0, len(text), 7)))
-        prof = {"name": lang, "freq": dict(freq),
-                "n_words": [100, 200, sum(c for k, c in freq.items()
-                                          if len(k) == 3)]}
-        (tmp_path / lang).write_text(json.dumps(prof))
-
-    from mmore_spark.operators.langid import (
-        classify_lang, load_langdetect_profiles)
-
-    profiles = load_langdetect_profiles(spark, str(tmp_path))
-    assert {r["lang"] for r in profiles.select("lang").distinct().collect()} \
-        == set(_VOCABS)
-    assert profiles.filter("length(tri) <> 3").count() == 0
-
-    test_rows = [(i, t, lg) for i, (t, lg) in enumerate(_corpus(9, 12))]
-    test = spark.createDataFrame(test_rows,
-                                 "doc_id long, text string, lang string")
-    pred = classify_lang(test, profiles).join(test, "doc_id").collect()
-    acc = sum(r["lang_pred"] == r["lang"] for r in pred) / len(pred)
-    assert acc >= 0.95, acc

@@ -193,7 +193,7 @@ def test_canonical_clusters_match_golden(spark, small_docs, small_docs_df):
     from mmore_spark.operators import extract
 
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
-    mentions, _ = extract.extract_mentions_triples(rendered)
+    mentions = extract.explode(extract.extract_combined(rendered), "entities")
     cmap = linking.canonicalize(agg.merge_entities_global(mentions))
     got_clusters = {}
     for r in cmap.collect():
@@ -222,7 +222,7 @@ def test_spark_path_canonicalize_leaves_no_persisted_frames(
     if strategy == "twophase":
         monkeypatch.setattr(linking, "DRIVER_CC_MAX_EDGES", 0)
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
-    mentions, _ = extract.extract_mentions_triples(rendered)
+    mentions = extract.explode(extract.extract_combined(rendered), "entities")
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persistent())
     metrics: dict = {}

@@ -1,8 +1,7 @@
 """Pagination parity tests — the reference's exact unit fixtures
 (tests/test_paragraph_extraction.py:25-50)."""
 
-from mmore_spark.operators.chunker import sentence_chunks
-from mmore_spark.operators.pagination import assign_paragraph_positions, parse_pagination
+from mmore_spark.operators.pagination import parse_pagination
 
 
 def test_no_separators_passthrough():
@@ -25,16 +24,3 @@ def test_empty_trailing_no_phantom_page():
     pages = {p for _off, p, _i in starts[:-1]}
     assert pages == {0}
     assert clean == "Hello."
-
-
-def test_assignment_overlap_semantics():
-    text = "Para A.\n\nPara B.\n\n{0}----\n\nPara C."
-    starts, clean = parse_pagination(text)
-    chunks = sentence_chunks(clean, chunk_size=3)
-    spans = [(c.start, c.end) for c in chunks]
-    assigned = assign_paragraph_positions(spans, starts)
-    # every paragraph is assigned to at least one chunk, pages preserved
-    flat = [tuple(p) for ps in assigned for p in ps]
-    assert (0, 0) in flat and (0, 1) in flat and (1, 0) in flat
-    # empty paragraph_starts → empty assignments
-    assert assign_paragraph_positions(spans, []) == [[] for _ in spans]

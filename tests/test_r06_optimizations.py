@@ -77,7 +77,7 @@ def test_canonicalize_driver_equals_spark_path(spark, small_docs_df, monkeypatch
     from mmore_spark.operators import agg, linking
 
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
-    mentions, _ = extract.extract_mentions_triples(rendered, "text")
+    mentions = extract.explode(extract.extract_combined(rendered), "entities")
     rollup = agg.merge_entities_global(mentions).cache()
     driver_metrics, spark_metrics = {}, {}
     driver = linking.canonicalize(rollup, metrics=driver_metrics).toPandas()
@@ -105,7 +105,7 @@ def test_canonicalize_driver_pair_cap_falls_back_to_spark_path(spark, small_docs
     from mmore_spark.operators import agg, linking
 
     rendered = small_docs_df.select("doc_id", render_text("spans").alias("text"))
-    mentions, _ = extract.extract_mentions_triples(rendered, "text")
+    mentions = extract.explode(extract.extract_combined(rendered), "entities")
     mentions = mentions.cache()
     counts = mentions.groupBy("entity_name").count().collect()
     stats = {r["entity_name"]: (r["count"], "") for r in counts}
@@ -129,30 +129,6 @@ def test_canonicalize_driver_pair_cap_falls_back_to_spark_path(spark, small_docs
     pd.testing.assert_frame_equal(
         fallback.sort_values(key).reset_index(drop=True),
         normal.sort_values(key).reset_index(drop=True))
-
-
-def test_iceberg_fallback_ignores_remote_warehouse(spark):
-    from mmore_spark.io import iceberg as I
-
-    # no warehouse conf -> per-application tmp dir
-    p = I._fallback_path(spark, "kg.t1")
-    assert spark.sparkContext.applicationId in p and p.endswith("kg.t1")
-    # remote warehouse must NOT be treated as a local path
-    key = f"spark.sql.catalog.{I.DEFAULT_CATALOG}.warehouse"
-    spark.conf.set(key, "s3://bucket/warehouse")
-    try:
-        p2 = I._fallback_path(spark, "kg.t2")
-        assert not p2.startswith("s3:")
-        assert spark.sparkContext.applicationId in p2
-        # local file: URI is adopted, scheme stripped
-        spark.conf.set(key, "file:///tmp/wh_x")
-        p3 = I._fallback_path(spark, "kg.t3")
-        assert p3 == "/tmp/wh_x/_parquet_fallback/kg.t3"
-        spark.conf.set(key, "/tmp/wh_y")
-        assert I._fallback_path(spark, "kg.t4") == \
-            "/tmp/wh_y/_parquet_fallback/kg.t4"
-    finally:
-        spark.conf.unset(key)
 
 
 def test_minhash_digest_slice_equals_hex_h60():

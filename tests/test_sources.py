@@ -1,37 +1,10 @@
-"""Source tests: mmore-JSONL round trip and per-format registry routing."""
+"""Source tests: per-format registry routing."""
 
-import json
 import os
 
 from pyspark.sql import functions as F
 
-from mmore_spark.sources import jsonl, registry
-
-
-def test_mmore_jsonl_roundtrip(spark, tmp_path):
-    samples = [
-        {"id": "s1", "text": "hello <attachment> world",
-         "modalities": [{"type": "image", "value": "m/a.png"}],
-         "metadata": {"file_path": "/x/a.pdf", "processed_at": "2024-01-01T00:00:00",
-                      "processor_type": "PDFProcessor"}},
-        {"id": "s2", "text": "plain only", "modalities": [],
-         "metadata": {"file_path": "/x/b.txt", "processed_at": "2024-01-02T00:00:00",
-                      "processor_type": "TextProcessor"}},
-    ]
-    src = tmp_path / "in.jsonl"
-    src.write_text("\n".join(json.dumps(s) for s in samples))
-    docs = jsonl.read_mmore_jsonl(spark, str(src))
-    rows = {r["doc_id"]: r for r in docs.collect()}
-    assert rows["s1"]["spans"][1]["kind"] == "image"
-    assert rows["s1"]["spans"][0]["text"] == "hello "
-    assert rows["s2"]["spans"][0]["text"] == "plain only"
-
-    out = str(tmp_path / "out")
-    jsonl.write_mmore_jsonl(docs, out)
-    back = {r["id"]: r for r in jsonl.read_mmore_jsonl.__wrapped__(spark, out).collect()} \
-        if hasattr(jsonl.read_mmore_jsonl, "__wrapped__") else \
-        {r["doc_id"]: r for r in jsonl.read_mmore_jsonl(spark, out).collect()}
-    assert back["s1"]["spans"] == rows["s1"]["spans"]
+from mmore_spark.sources import registry
 
 
 def _make_eml() -> bytes:

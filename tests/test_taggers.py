@@ -13,33 +13,14 @@ def test_taggers_one_projection(spark):
         "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
     out = TG.apply_taggers(
-        df, TG.words_counter(), TG.modalities_counter(), TG.file_namer(), TG.text_hash()
+        df, TG.words_counter(), TG.modalities_counter(), TG.file_namer()
     ).collect()
     r0 = next(r for r in out if r["file_path"] == "a/b/doc.pdf")
     assert r0["word_count"] == 4
     assert r0["modalities_count"] == 1
     assert r0["file_name"] == "doc.pdf"
-    import hashlib
-
-    assert r0["text_md5"] == hashlib.md5(b"hello world  bye").hexdigest()
     r1 = next(r for r in out if r["file_path"] == "")
     assert r1["file_name"] == "unknown"
-
-
-def test_lang_and_clean_seams_fall_back(spark):
-    """Exact-parity seams (langdetect / cleantext) degrade to the native
-    twins when the libraries are absent — same column contract either way
-    (this container has neither lib, so the fallback path is what runs)."""
-    df = spark.createDataFrame(
-        [("the cat sat on a mat with the dog and a bird",),
-         ("lorem ipsum dolor sit amet consectetur adipiscing elit",)],
-        "text string",
-    )
-    out = {r["text"][:9]: r for r in
-           df.select("text", TG.lang_detector(), TG.clean_text_exact()).collect()}
-    assert out["the cat s"]["lang_guess"] == "en"
-    assert out["lorem ips"]["lang_guess"] == "unknown"
-    assert out["lorem ips"]["text_clean"].startswith("lorem")
 
 
 def test_metafuse_and_clean(spark):
@@ -56,3 +37,9 @@ def test_metafuse_and_clean(spark):
     assert "email@email.com" in cleaned and "a@b.com" not in cleaned
     assert "https://x.y/z" in cleaned
     assert "  " not in cleaned.replace("\n", " ")
+    langs = spark.createDataFrame(
+        [("the cat sat on a mat with the dog and a bird",),
+         ("lorem ipsum dolor sit amet consectetur adipiscing elit",)],
+        "text string",
+    ).select(TG.lang_heuristic()).collect()
+    assert [r["lang_guess"] for r in langs] == ["en", "unknown"]
