@@ -25,8 +25,7 @@ import time
 def _pipeline_docs_per_sec(spark, sf_dir: str,
                            corpus_path: str | None = None) -> tuple[float, int]:
     from mmore_spark.corpus.derive import derived_documents
-    from mmore_spark.operators.agg import merge_triples_global
-    from mmore_spark.plans.pipeline import build_graph
+    from mmore_spark.plans.pipeline import graph
 
     if corpus_path:
         docs = spark.read.parquet(corpus_path)
@@ -34,10 +33,9 @@ def _pipeline_docs_per_sec(spark, sf_dir: str,
         docs = derived_documents(spark, sf_dir)
     n_docs = docs.count()  # warms the scan; excluded from the timed section
     t0 = time.time()
-    _, canonical_triples, entities, _ = build_graph(docs)
-    merged = merge_triples_global(canonical_triples)
-    n_triples = merged.count()
-    n_entities = entities.count()
+    g = graph(docs)
+    n_triples = g["triples_global"].count()
+    n_entities = g["entities"].count()
     wall = time.time() - t0
     assert n_triples > 0 and n_entities > 0
     return n_docs / wall, n_docs

@@ -982,13 +982,10 @@ def _kg_pipeline_triples_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/extract.py), LSH+ER+CC canonicalization (operators/
     linking.py), broadcast rewrite, one-groupBy global merge (operators/
     agg.py)."""
-    from .operators.agg import merge_triples_global
-    from .plans.pipeline import build_graph
+    from .plans.pipeline import graph
 
     docs = derive.derived_documents(spark, sf_dir)
-    _, canonical_triples, _, _ = build_graph(docs)
-    merged = merge_triples_global(canonical_triples)
-    return merged.select(
+    return graph(docs)["triples_global"].select(
         "subj", "obj", F.concat_ws(",", "pred").alias("preds"), "weight", "n_docs"
     )
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T

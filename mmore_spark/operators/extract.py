@@ -33,6 +33,7 @@ Parser semantics ported exactly, including the quirks:
 
 from __future__ import annotations
 
+import functools
 import html
 import re
 from typing import Callable, Iterator
@@ -73,7 +74,7 @@ def parse_records(raw: str) -> tuple[list[dict], list[dict]]:
             desc = clean_str(attrs[3])
             if name in nodes:
                 node = nodes[name]
-                node["descriptions"] = node["descriptions"] | {desc}
+                node["descriptions"].add(desc)
                 if etype != "":
                     node["entity_type"] = etype
             else:
@@ -90,7 +91,7 @@ def parse_records(raw: str) -> tuple[list[dict], list[dict]]:
             if key in edges:
                 e = edges[key]
                 e["weight"] += weight
-                e["preds"] = e["preds"] | {desc}
+                e["preds"].add(desc)
             else:
                 edges[key] = {"weight": weight, "preds": {desc}}
     entities = [
@@ -109,18 +110,13 @@ def parse_records(raw: str) -> tuple[list[dict], list[dict]]:
 # Deterministic rule extractor (the pluggable "LLM")
 # --------------------------------------------------------------------------
 
-_EXTRACTOR_CACHE: list | None = None
-
-
+@functools.cache
 def _compiled_templates():
     """Compile ONE combined regex for all relation templates (alternation
     of per-template branches, each with alias-alternation capture groups)
     so extraction is a single scan per document instead of 12.  Compiled
     once per executor (the reference's model-caching pattern,
     pdf_processor.py:37-68)."""
-    global _EXTRACTOR_CACHE
-    if _EXTRACTOR_CACHE is not None:
-        return _EXTRACTOR_CACHE
     alias_type: dict[str, str] = {}
     for etype, clusters in vocab.ALIAS_CLUSTERS.items():
         for cluster in clusters:
@@ -141,8 +137,7 @@ def _compiled_templates():
         group_info[gi] = (pred, weight)
         gi += 2
     combined = re.compile("|".join(f"(?:{b})" for b in branches))
-    _EXTRACTOR_CACHE = (combined, group_info, alias_type)
-    return _EXTRACTOR_CACHE
+    return combined, group_info, alias_type
 
 
 def rule_extract_re(text: str) -> str:
@@ -168,72 +163,34 @@ def rule_extract_re(text: str) -> str:
     return RECORD_DELIM.join(records) + (RECORD_DELIM + COMPLETION_TAG if records else "")
 
 
-_FAST_CACHE: tuple | None = None
-
-
-def _fast_tables():
-    """Literal-scan tables for the exact finditer emulation below.
-
-    The combined pattern is an ordered alternation of branches, each of
-    shape ``escape(head) (ALT) escape(mid) (ALT) escape(tail)`` with ALT =
-    all aliases sorted longest-first.  Two structural facts make a literal
-    emulation exact: (1) at a FIXED position, at most one alias of a given
-    length can match (slice equality), so trying length groups in
-    descending order reproduces the alternation's longest-first ordered
-    choice; (2) every branch requires its ``mid`` as a mandatory literal,
-    so candidate match starts are derived from ``str.find(mid)`` hits."""
-    global _FAST_CACHE
-    if _FAST_CACHE is not None:
-        return _FAST_CACHE
-    _combined, group_info, alias_type = _compiled_templates()
-    # aliases grouped by length; lengths descending == alternation order
-    # (ties within a length cannot both match at one position)
+@functools.cache
+def _scan_tables():
+    """Each template as (head, mid, tail, pred, weight), the aliases as
+    (length, set) pairs longest first, and each alias's entity type."""
+    alias_type = {alias: etype for etype, clusters in vocab.ALIAS_CLUSTERS.items()
+                  for cluster in clusters for alias in cluster}
     by_len: dict[int, set[str]] = {}
-    for a in alias_type:
-        by_len.setdefault(len(a), set()).add(a)
-    lens_desc = sorted(by_len, reverse=True)
-    from ..corpus import vocab as _v
-
-    branches = []
-    for gi_idx, (tmpl, _st, _ot, _pred, _weight) in zip(
-            sorted(group_info), _v.RELATION_TEMPLATES):
+    for alias in alias_type:
+        by_len.setdefault(len(alias), set()).add(alias)
+    templates = []
+    for tmpl, _st, _ot, pred, weight in vocab.RELATION_TEMPLATES:
         head, rest = tmpl.split("{s}")
         mid, tail = rest.split("{o}")
-        branches.append((head, mid, tail, group_info[gi_idx]))
-    _FAST_CACHE = (branches, by_len, lens_desc, alias_type)
-    return _FAST_CACHE
+        templates.append((head, mid, tail, pred, weight))
+    return templates, sorted(by_len.items(), reverse=True), alias_type
 
 
-def _branch_next(text: str, pos: int, head: str, mid: str, tail: str,
-                 by_len: dict, lens_desc: list):
-    """Leftmost match of one branch at or after ``pos`` — the regex
-    ``search`` twin: returns (start, end, subj, obj) or None."""
-    hl, ml = len(head), len(mid)
-    # candidate starts: subj alias must end exactly where a mid occurrence
-    # begins; gather (start) for every (mid hit, alias length) pair
-    starts = []
-    i = text.find(mid, pos + hl + 1)
-    while i != -1:
-        for L in lens_desc:
-            p = i - L - hl
-            if p >= pos and text[p + hl:i] in by_len[L] and text[p:p + hl] == head:
-                starts.append(p)
-        i = text.find(mid, i + 1)
-    for p in sorted(set(starts)):
-        # emulate the branch at position p with regex backtracking order:
-        # subj aliases longest-first, then obj aliases longest-first
-        sbase = p + hl
-        for Ls in lens_desc:
-            if text[sbase:sbase + Ls] not in by_len[Ls]:
-                continue
-            q = sbase + Ls
-            if not text.startswith(mid, q):
-                continue
-            r = q + ml
-            for Lo in lens_desc:
-                obj = text[r:r + Lo]
-                if obj in by_len[Lo] and text.startswith(tail, r + Lo):
-                    return (p, r + Lo + len(tail), text[sbase:q], obj)
+def _match_at(text: str, s: int, mid: str, tail: str, by_len: list):
+    """(end, subj, obj) of one template's match with its subject at ``s``,
+    or None.  Subject, then object, aliases longest first: the regex's
+    backtracking order, as one position matches one alias per length."""
+    for length, names in by_len:
+        q = s + length
+        if text[s:q] in names and text.startswith(mid, q):
+            r = q + len(mid)
+            for olength, onames in by_len:
+                if text[r:r + olength] in onames and text.startswith(tail, r + olength):
+                    return r + olength + len(tail), text[s:q], text[r:r + olength]
     return None
 
 
@@ -241,32 +198,34 @@ def rule_extract(text: str) -> str:
     """Mention detection + record emission in the reference's delimited
     format (the deterministic stand-in for the LLM call).
 
-    Byte-identical to ``rule_extract_re`` (pytest parity suite) but ~100×
-    faster: the combined alternation regex backtracks through ~300 alias
-    alternatives at every text position (~4.5 ms/doc measured); this scans
-    for each template's literal mid with C-speed ``str.find`` and only
-    then emulates the regex's ordered-choice semantics around the hit."""
-    branches, by_len, lens_desc, alias_type = _fast_tables()
+    Byte-identical to ``rule_extract_re`` (pytest parity suite), in one
+    scan.  A template's subject ends where its ``mid`` literal begins, so
+    ``str.find`` over each ``mid`` yields every candidate (start, template).
+    The walk takes them in sorted order and skips those inside the last
+    match.  A match at a fixed start depends only on the text, so the
+    first candidate that resolves is the regex's leftmost match, ties
+    going to the earlier alternative, and ``finditer`` resumes at its end
+    as the walk does."""
+    templates, by_len, alias_type = _scan_tables()
+    starts = []
+    for j, (head, mid, _tail, _pred, _weight) in enumerate(templates):
+        i = text.find(mid)
+        while i != -1:
+            for length, names in by_len:
+                p = i - length - len(head)
+                if p >= 0 and text[i - length:i] in names and text.startswith(head, p):
+                    starts.append((p, j))
+            i = text.find(mid, i + 1)
     records: list[str] = []
-    n = len(branches)
-    UNSET = ()
-    nexts: list = [UNSET] * n
-    pos = 0
-    while True:
-        best = None
-        best_j = -1
-        for j in range(n):
-            m = nexts[j]
-            if m is UNSET or (m is not None and m[0] < pos):
-                head, mid, tail, _pw = branches[j]
-                m = _branch_next(text, pos, head, mid, tail, by_len, lens_desc)
-                nexts[j] = m
-            if m is not None and (best is None or m[0] < best[0]):
-                best, best_j = m, j
-        if best is None:
-            break
-        _p, end, subj, obj = best
-        pred, weight = branches[best_j][3]
+    end = 0
+    for p, j in sorted(starts):
+        if p < end:
+            continue
+        head, mid, tail, pred, weight = templates[j]
+        match = _match_at(text, p + len(head), mid, tail, by_len)
+        if match is None:
+            continue
+        end, subj, obj = match
         for name in (subj, obj):
             etype = alias_type[name]
             records.append(
@@ -277,7 +236,6 @@ def rule_extract(text: str) -> str:
             f'("relationship"{TUPLE_DELIM}{subj}{TUPLE_DELIM}{obj}'
             f"{TUPLE_DELIM}{pred}{TUPLE_DELIM}{weight})"
         )
-        pos = end
     return RECORD_DELIM.join(records) + (RECORD_DELIM + COMPLETION_TAG if records else "")
 
 

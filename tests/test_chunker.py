@@ -1,8 +1,6 @@
 """Chunker tests mirroring the reference's unit shapes
 (tests/test_postprocessors.py:44-64, 363-676) plus our invariants."""
 
-from pyspark.sql import functions as F
-
 from mmore_spark.operators import chunker as C
 
 

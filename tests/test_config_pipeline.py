@@ -4,8 +4,6 @@ the pp_modules chains over real data."""
 
 import os
 
-from pyspark.sql import functions as F
-
 from mmore_spark.plans import config as CFG
 
 

@@ -1,8 +1,6 @@
 """operators/dedup: banded MinHash candidate generation with the
 duplicate-family bucket cap (VERDICT r03 #3)."""
 
-from pyspark.sql import functions as F
-
 from mmore_spark.operators.dedup import candidate_edges, minhash_band_signatures
 
 

@@ -4,8 +4,10 @@ Every optimization this round must leave query results identical; these
 tests pin the two changes that replaced an implementation rather than a
 plan shape:
 
-  * ``rule_extract`` (literal-scan finditer emulation) must be
-    byte-identical to the combined-regex baseline ``rule_extract_re``;
+  * ``rule_extract`` (one scan for every template's candidate starts,
+    then matches taken left to right) must be byte-identical to the
+    combined-regex baseline ``rule_extract_re``, on generated, random and
+    hand-built texts, and when two templates can match at one start;
   * ``linking.canonicalize`` driver path (count-gated LSH+ER+CC+election
     in driver Python) must equal the Spark path row-for-row.
 """
@@ -42,8 +44,31 @@ def test_rule_extract_matches_re_baseline_on_planted_corpus():
 def test_rule_extract_matches_re_baseline_adversarial():
     """Overlapping aliases, adjacent sentences, truncated aliases, multiple
     relation sentences per doc, mids without aliases — the cases where the
-    finditer emulation (ordered alternation, non-overlapping scan) could
+    single scan (ordered alternation, non-overlapping matches) could
     diverge if it were wrong."""
+    hand_built = [
+        # the first candidate fails; the next starts inside its text
+        "A met B met C to discuss the merger.",
+        "Alice Keller met Bruno Moreau met Carla Santos to discuss the merger.",
+        # "N. Eriksen" starts at the N that ends the first match, so its
+        # candidate falls inside that match
+        "Alice Keller is the chair of ACME CORPORATION. Eriksen met "
+        "Bruno Moreau to discuss the merger.",
+        # "Zurich" is a prefix of "Zurich City", as subject and as object
+        "Zurich City was held in Zurich City.",
+        "Zurich City visited Zurich during the tour.",
+        "Alpine Summit 2020 was held in Zurich City. Zurich visited Bern.",
+        # sentences joined with no separator
+        "Alice Keller spoke at Alpine Summit 2020.Bruno Moreau visited Zurich "
+        "during the tour.Acme Corp. acquired Globex Corp. last quarter.",
+        "Acme Corp. acquired Globex Corp. last quarter.Globex Corp. acquired "
+        "Acme Corp. last quarter.",
+        # a later template's candidate comes first and fails; an earlier
+        # template then matches at a later start
+        "Alpine Expo 2021 took place on March 1, 2020 was held in Bern.",
+    ]
+    for text in hand_built:
+        assert extract.rule_extract(text) == extract.rule_extract_re(text), text
     rng = random.Random(13)
     aliases, mids = _aliases(), _mids()
     for _ in range(1500):
@@ -63,6 +88,35 @@ def test_rule_extract_matches_re_baseline_adversarial():
                 parts.append(rng.choice(vocab.FILLER_SENTENCES))
         text = rng.choice(["", " ", "x"]).join(parts)
         assert extract.rule_extract(text) == extract.rule_extract_re(text), text
+
+
+def test_rule_extract_tie_goes_to_earlier_template(monkeypatch):
+    """No two of the corpus templates can match at one start, so this
+    swaps in two that share a ``mid`` and both match at 0: the regex's
+    alternation takes the earlier template, and so must the scan.  The
+    empty tail lets "Zurich" and "Zurich City" both end a match, where
+    the longer object must win."""
+    templates = [
+        ("{s} met {o}", "PERSON", "PERSON", "met", 2.0),
+        ("{s} met {o} to discuss the merger.", "PERSON", "PERSON", "met to merge", 4.0),
+    ]
+    text = "Alice Keller met Bruno Moreau to discuss the merger."
+    try:
+        for order in (templates, templates[::-1]):
+            monkeypatch.setattr(vocab, "RELATION_TEMPLATES", order)
+            extract._scan_tables.cache_clear()
+            extract._compiled_templates.cache_clear()
+            out = extract.rule_extract(text)
+            assert out == extract.rule_extract_re(text)
+            _tmpl, _st, _ot, pred, weight = order[0]
+            assert out.endswith(f"{pred}{extract.TUPLE_DELIM}{weight})##<|COMPLETE|>")
+            out = extract.rule_extract("Alice Keller met Zurich City")
+            assert out == extract.rule_extract_re("Alice Keller met Zurich City")
+            assert "Zurich City<|>met" in out
+    finally:
+        monkeypatch.undo()
+        extract._scan_tables.cache_clear()
+        extract._compiled_templates.cache_clear()
 
 
 def test_rule_extract_empty_and_no_match():

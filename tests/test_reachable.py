@@ -34,6 +34,8 @@ ALLOWED = {
         "test oracle: the Python twin of the derived-corpus planting",
     "mmore_spark/operators/extract.py:rule_extract_re":
         "test oracle: the regex spelling of the rule extractor",
+    "mmore_spark/operators/extract.py:_compiled_templates":
+        "test oracle: the combined regex that rule_extract_re runs",
     "mmore_spark/io/tables.py:upsert_table":
         "the fold's writer named by ROADMAP items 7 and 13",
 }
@@ -161,3 +163,38 @@ def test_every_definition_is_reached_by_an_entry_point():
         f"or add it to ALLOWED with its reason: {dead}")
     stale = sorted(set(ALLOWED) - set(found))
     assert not stale, f"reached now, or gone; drop from ALLOWED: {stale}"
+
+
+def unused_imports() -> list[str]:
+    """``path:line:name`` of each module-level import its module never
+    names, over ``mmore_spark/`` and ``tests/``.  ``__init__.py`` files
+    (which re-export), ``__future__`` imports and lines marked
+    ``# noqa`` are left out."""
+    out = []
+    for d in (PKG, "tests"):
+        for path in sorted((ROOT / d).rglob("*.py")):
+            if path.name == "__init__.py":
+                continue
+            source = path.read_text()
+            lines = source.splitlines()
+            tree = ast.parse(source)
+            used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            for stmt in tree.body:
+                if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                    continue
+                if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+                    continue
+                if any("# noqa" in line
+                       for line in lines[stmt.lineno - 1:stmt.end_lineno]):
+                    continue
+                for a in stmt.names:
+                    name = a.asname or a.name.split(".")[0]
+                    if name not in used:
+                        out.append(f"{path.relative_to(ROOT).as_posix()}:"
+                                   f"{stmt.lineno}:{name}")
+    return out
+
+
+def test_no_unused_imports():
+    found = unused_imports()
+    assert not found, f"imported but never used; remove the import: {found}"

@@ -2,8 +2,6 @@
 
 import os
 
-from pyspark.sql import functions as F
-
 from mmore_spark.sources import registry
 
 

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from mmore_spark.corpus.generator import generate_local, render_text_py
+from mmore_spark.corpus.generator import render_text_py
 from mmore_spark.functions import spans as S
 
 
